@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftFunctions, SparkSession}
 
 /** Optimization-round measurement harness (guide §1.4): times queries with
   * the NOOP SINK (computes every column, discards output) and prints
@@ -56,7 +56,7 @@ object BenchExtra {
         val dt = (System.nanoTime() - t0) / 1e9
         spark.sparkContext.setJobDescription(null)
         if (printStages) {
-          Thread.sleep(500) // listener bus is async
+          GraftFunctions.drainSharedListeners(spark.sparkContext) // listener bus is async
           val rows = stages.entrySet().toArray
             .map(_.asInstanceOf[java.util.Map.Entry[Int, (String, Long, Long, Long, Long, Long, Long)]])
             .sortBy(_.getKey)

@@ -1,7 +1,12 @@
 package graft.engine
 
-import java.io.ByteArrayInputStream
-import javax.imageio.ImageIO
+import java.awt.image.BufferedImage
+import java.io.{ByteArrayInputStream, IOException}
+import javax.imageio.ImageReader
+import javax.imageio.spi.{IIORegistry, ImageReaderSpi}
+import javax.imageio.stream.{ImageInputStream, MemoryCacheImageInputStream}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -200,32 +205,27 @@ object ValidationEngine {
   /** Decode `bytes`, measure PSNR vs the reference pixels recoverable from
     * the generated image_id. Runs only when pixel checks are enabled.
     */
-  def decodeUdf(contentPool: Int) = udf { (bytes: Array[Byte], imageId: String, fmt: String) =>
+  def decodeUdf(contentPool: Int) = udf { (bytes: Array[Byte], imageId: String, _: String) =>
+    decode(bytes, imageId, contentPool)
+  }
+
+  /** The kernel behind [[decodeUdf]]: `ImageIO.read` semantics (same
+    * readers, same sniffing order, same failures) without its per-call
+    * reader construction, and PSNR over one scanline at a time instead of
+    * per-pixel `getRGB`/`pixelAt` dispatch.
+    */
+  def decode(bytes: Array[Byte], imageId: String, contentPool: Int): DecodeOut =
     if (bytes == null) DecodeOut("bytes is null", -1, -1, Double.NaN)
     else
       try {
-        val img = ImageIO.read(new ByteArrayInputStream(bytes))
+        val img = ImageReaders.read(bytes)
         if (img == null) DecodeOut("undecodable bytes", -1, -1, Double.NaN)
         else {
           val w = img.getWidth; val h = img.getHeight
           val psnr = SyntheticImages.indexOf(imageId) match {
             case Some(i) =>
               val ci = if (contentPool > 0) i % contentPool else i
-              var sse = 0.0
-              var y = 0
-              while (y < h) {
-                var x = 0
-                while (x < w) {
-                  val got = img.getRGB(x, y); val ref = SyntheticImages.pixelAt(ci, w, h, x, y)
-                  var k = 0
-                  while (k < 3) {
-                    val d = ((got >> (k * 8)) & 0xff) - ((ref >> (k * 8)) & 0xff)
-                    sse += d.toDouble * d; k += 1
-                  }
-                  x += 1
-                }
-                y += 1
-              }
+              val sse = sumSquaredError(img, new SyntheticImages.Reference(ci, w, h))
               if (sse == 0.0) Double.PositiveInfinity
               else 10.0 * math.log10(255.0 * 255.0 * (w.toLong * h * 3) / sse)
             case None => Double.PositiveInfinity // unknown id: pattern check flags it, not PSNR
@@ -235,6 +235,80 @@ object ValidationEngine {
       } catch {
         case e: Exception => DecodeOut(s"decode failed: ${e.getClass.getSimpleName}", -1, -1, Double.NaN)
       }
+
+  /** Sum of squared channel differences between `img` and `ref`,
+    * accumulated pixel by pixel, row-major, in B, G, R order. Works one
+    * scanline at a time, so extra memory is O(width) whatever the image
+    * size. TYPE_3BYTE_BGR rasters (what the PNG and JPEG readers return for
+    * RGB data) are read as raw bytes, which is what their sRGB colour
+    * model's getRGB returns; any other type goes through a bulk getRGB.
+    */
+  private def sumSquaredError(img: BufferedImage, ref: SyntheticImages.Reference): Double = {
+    val w = img.getWidth; val h = img.getHeight
+    val raw = img.getType == BufferedImage.TYPE_3BYTE_BGR
+    val raster = img.getRaster
+    val rgb = if (raw) new Array[Byte](3 * w) else null
+    val argb = if (raw) null else new Array[Int](w)
+    val want = new Array[Int](w)
+    var sse = 0.0
+    var y = 0
+    while (y < h) {
+      if (raw) raster.getDataElements(0, y, w, 1, rgb) else img.getRGB(0, y, w, 1, argb, 0, w)
+      ref.row(y, want)
+      var x = 0
+      while (x < w) {
+        // raw rasters hold R, G, B per pixel; getRGB packs 0xAARRGGBB
+        val got = if (raw) ((rgb(3 * x) & 0xff) << 16) | ((rgb(3 * x + 1) & 0xff) << 8) | (rgb(3 * x + 2) & 0xff) else argb(x)
+        var k = 0
+        while (k < 3) {
+          val d = ((got >> (k * 8)) & 0xff) - ((want(x) >> (k * 8)) & 0xff)
+          sse += d.toDouble * d; k += 1
+        }
+        x += 1
+      }
+      y += 1
+    }
+    sse
+  }
+
+  /** `ImageIO.read(InputStream)` minus its per-call reader construction.
+    * Formats are sniffed by the `ImageReaderSpi`s in the registry's own
+    * order — the order `ImageIO.read` tries them in, first match wins —
+    * over the stream class `ImageIO` uses when its disk cache is off; each
+    * thread keeps one reader per SPI and resets it after every image.
+    */
+  private object ImageReaders {
+    private val pool = ThreadLocal.withInitial[(Array[ImageReaderSpi], Array[ImageReader])] { () =>
+      val spis = IIORegistry.getDefaultInstance.getServiceProviders(classOf[ImageReaderSpi], true).asScala.toArray
+      (spis, new Array[ImageReader](spis.length))
+    }
+
+    def read(bytes: Array[Byte]): BufferedImage = {
+      val (spis, readers) = pool.get()
+      val stream = new MemoryCacheImageInputStream(new ByteArrayInputStream(bytes))
+      try {
+        var k = 0
+        while (k < spis.length && !canDecode(spis(k), stream)) k += 1
+        if (k == spis.length) null
+        else {
+          if (readers(k) == null) readers(k) = spis(k).createReaderInstance()
+          val reader = readers(k)
+          try {
+            reader.setInput(stream, true, true)
+            reader.read(0, reader.getDefaultReadParam)
+          } finally reader.reset()
+        }
+      } finally stream.close()
+    }
+
+    /** ImageIO's own probe: an SPI that throws IOException cannot decode. */
+    private def canDecode(spi: ImageReaderSpi, stream: ImageInputStream): Boolean =
+      try {
+        stream.mark()
+        val ok = spi.canDecodeInput(stream)
+        stream.reset()
+        ok
+      } catch { case _: IOException => false }
   }
 
   /** The reference's HTTP response matrix

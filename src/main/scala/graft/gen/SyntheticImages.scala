@@ -78,6 +78,43 @@ object SyntheticImages {
     (r << 16) | (g << 8) | b
   }
 
+  /** [[pixelAt]] for image ci at size w×h, one row at a time: the same
+    * arithmetic with the per-image constants and the per-column terms
+    * computed once, and the per-row terms once per row. Bit-identical to
+    * pixelAt; holds O(w) state.
+    */
+  final class Reference(ci: Long, w: Int, h: Int) {
+    private val p = mixAt(ci, 2)
+    private val pg = ((p >>> 8) & 0x3f).toInt; private val pb = ((p >>> 16) & 0x3f).toInt
+    private val fy = 1 + ((p >>> 26) & 3).toInt
+    private val phase = ((p >>> 28) & 0xff).toInt / 255.0 * 2 * math.Pi
+    private val mh = math.max(h, 1); private val gy = math.max(h - 1, 1); private val bxy = math.max(w + h - 2, 1)
+    private val waveX = {
+      val fx = 1 + ((p >>> 24) & 3).toInt; val mw = math.max(w, 1)
+      Array.tabulate(w)(x => fx.toDouble * x / mw)
+    }
+    private val redX = {
+      val pr = (p & 0x3f).toInt; val rx = math.max(w - 1, 1)
+      Array.tabulate(w)(x => pr + x * 100 / rx)
+    }
+
+    /** Writes row y's w pixels to `out(0 until w)`. */
+    def row(y: Int, out: Array[Int]): Unit = {
+      val waveY = fy.toDouble * y / mh
+      val green = pg + y * 100 / gy
+      var x = 0
+      while (x < w) {
+        val wave = 24.0 * math.sin(2 * math.Pi * (waveX(x) + waveY) + phase)
+        val base = (64 + wave).toInt
+        val r = redX(x) + base
+        val g = green + base
+        val b = pb + base + (x + y) * 100 / bxy
+        out(x) = (r << 16) | (g << 8) | b
+        x += 1
+      }
+    }
+  }
+
   def renderImage(ci: Long, w: Int, h: Int): BufferedImage = {
     val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
     var y = 0

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,7 +16,7 @@ import org.apache.spark.sql.functions._
   *  - SimHash: 64-bit signature, 4×16-bit band buckets, Hamming verify;
   *  - embedding near-dup: random-hyperplane LSH buckets, cosine verify.
   */
-object Dedup {
+object Dedup extends Logging {
 
   /** Max members per LSH bucket before the bucket is dropped from candidate
     * generation. A degenerate band key (e.g. every sub-k-char doc shingles to
@@ -251,8 +252,8 @@ object Dedup {
             // Surfaced deliberately (round-6 advisory): the raise outlives
             // this probe — long-lived sessions that pinned a lower value
             // should reset the key after the probe executes.
-            System.err.println(
-              s"[graft] raised session conf $confKey $current -> ${ks.length} " +
+            logWarning(
+              s"raised session conf $confKey $current -> ${ks.length} " +
                 "for band-key In pushdown; persists until reset")
           }
           corpusKeyRows.filter(col("band_key").isin(ks.toSeq: _*))

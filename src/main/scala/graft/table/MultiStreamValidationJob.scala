@@ -30,6 +30,10 @@ import graft.model.Status
   *     (/root/reference/lib/eventgate.js:243-270).
   *  4. One manifest commit (delta file lists, duration metrics).
   *
+  * The batch's input is planned as ONE relation when its partitions are
+  * bare file-source reads, else as a union ([[BatchInput]], the same
+  * helper [[ValidationJob]] uses).
+  *
   * Resume semantics are identical to [[ValidationJob]]: a killed run skips
   * every partition already in the chain's committed set.
   */
@@ -61,7 +65,7 @@ final class MultiStreamValidationJob(
 
       val snapshotId = current.map(_.snapshotId).getOrElse("snap-00000000")
       val opts = EngineOptions(snapshotId = snapshotId, idField = idField, partitionIdCol = col("_pid"))
-      val tagged = batch.map(p => inputFor(p).withColumn("_pid", lit(p))).reduce(_.unionByName(_))
+      val tagged = BatchInput.of(spark, batch, inputFor)
       val res = new MultiStreamEngine(registry, opts, streamCol).process(tagged)
 
       val tag = batch.mkString("_")

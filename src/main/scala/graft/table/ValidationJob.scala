@@ -3,7 +3,7 @@ package graft.table
 import java.util.Base64
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftFunctions, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -24,6 +24,15 @@ import graft.sketch.Sketches
   *    table costs ⌈P/k⌉ commits and the driver never serializes per-partition
   *    round-trips (round-1 advisory: the per-partition loop was O(P) jobs +
   *    O(P²) manifest bytes);
+  *  - ONE scan per batch for file-backed inputs: when every `inputFor(p)` of
+  *    a batch is a bare file-source read of the same format and schema, the
+  *    batch plans one relation over all of its files, with each batch
+  *    partition as one of its partition directories ([[BatchInput]]), so
+  *    plan size and driver time stay flat in k and small partitions share
+  *    read tasks. Any
+  *    other input (a filter or projection on top, partition columns,
+  *    differing schemas, a file shared between partitions) falls back to a
+  *    union of per-partition frames — same rows, same outputs;
   *  - per batch: validate → write valid → re-ingest violations through the
   *    error-schema gate and write survivors → ONE stats aggregation
   *    computing per-partition rollups AND column-stat sketches together
@@ -34,6 +43,8 @@ import graft.sketch.Sketches
   *    SparkListener) are committed atomically with the manifest — the
   *    engine analog of the reference's per-route duration histograms
   *    (/root/reference/lib/util.js:101-139).
+  *    Both are exact: the listener's queue is drained before task time is
+  *    read.
   *
   * Violation re-ingest: the reference maps failures to error EVENTS and
   * pushes them back through the same gate, validating them against the
@@ -74,13 +85,8 @@ final class ValidationJob(
     "freq_phash" -> Sketches.freqLongMerge
   )
 
-  /** Wall + executor-task milliseconds per named phase, via job groups.
-    *
-    * task_ms_* is APPROXIMATE: listener events ride the async bus, so totals
-    * read right after an action can miss still-queued onTaskEnd events (for
-    * the final batch the undercount is permanent in the HEAD manifest).
-    * wall_ms_* is exact — use it for anything that matters; task_ms_* exists
-    * to split executor time from scheduler gaps, a diagnostic.
+  /** Executor-task milliseconds per named phase, via job groups. Read only
+    * after draining its listener queue, so totals include every finished task.
     */
   private final class PhaseListener extends SparkListener {
     private val stagePhase = scala.collection.concurrent.TrieMap.empty[Int, String]
@@ -134,7 +140,7 @@ final class ValidationJob(
         // derived by re-reading only the written FAILING slice (the ~1%
         // minority) — the input is never scanned a second time. At 10^12
         // rows this is the difference between one and three full passes.
-        val tagged = batch.map(p => inputFor(p).withColumn("_pid", lit(p))).reduce(_.unionByName(_))
+        val tagged = BatchInput.of(spark, batch, inputFor)
         val res = new ValidationEngine(cs, opts).process(tagged)
 
         val tag = batch.mkString("_")
@@ -253,6 +259,8 @@ final class ValidationJob(
           })
         }.toMap
 
+        // A stalled shared queue costs the exactness of task_ms_*, never the commit.
+        GraftFunctions.drainSharedListeners(spark.sparkContext)
         val durations =
           wallMs.map { case (k, v) => s"wall_ms_$k" -> (prevMetrics.getOrElse(s"wall_ms_$k", 0L) + v) } ++
             listener.taskMs.map { case (k, v) => // listener is cumulative across THIS run's batches

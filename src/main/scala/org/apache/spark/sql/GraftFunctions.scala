@@ -1,8 +1,13 @@
 package org.apache.spark.sql
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Expression ⇄ Column bridge for graft's custom Catalyst expressions.
+/** Expression ⇄ Column bridge for graft's custom Catalyst expressions, plus
+  * a drain for listeners on the listener bus's shared queue.
   *
   * Spark 4 removed the public `new Column(expr)` constructor; the supported
   * conversion lives in `org.apache.spark.sql.classic.ExpressionUtils`, which
@@ -11,15 +16,46 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * expressions (the alternative, SparkSessionExtensions.injectFunction,
   * requires controlling session construction, which a library cannot assume).
   *
-  * VERSION PIN: `classic.ExpressionUtils` is Spark 4.1.x-internal (matching
-  * build.sbt's provided 4.1.2 jars). On a Spark upgrade, re-check
-  * `org.apache.spark.sql.classic.ExpressionUtils.{column, expression}`
-  * first; if moved/removed, fall back to registering each expression via
+  * VERSION PIN: `classic.ExpressionUtils` and `SparkContext.listenerBus` are
+  * Spark 4.1.x-internal (matching build.sbt's provided 4.1.2 jars). On a
+  * Spark upgrade, re-check `org.apache.spark.sql.classic.ExpressionUtils.
+  * {column, expression}` and `LiveListenerBus.post` first; if the
+  * former moved, fall back to registering each expression via
   * `SparkSessionExtensions.injectFunction` (public, stable) and routing
   * these two calls through `Column(functionName, args)` — the shim is the
-  * only file in the repo that touches a non-public Spark API.
+  * only file in the library that touches a `private[sql]`/`private[spark]`
+  * Spark API.
   */
 object GraftFunctions {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** Blocks until every event posted so far has reached the listeners on
+    * the bus's shared queue — the queue `SparkContext.addSparkListener`
+    * puts every user listener on. An action posts all of its task-end
+    * events before it returns, so such a listener's totals read after this
+    * call count every task of the actions that already finished; a fixed
+    * sleep cannot promise that on a loaded host.
+    *
+    * A marker event is posted behind them and awaited on that queue alone
+    * (each queue delivers in posting order), so the wait never depends on
+    * other queues such as the event log. Returns false if the marker has
+    * not arrived within `timeoutMs`.
+    */
+  def drainSharedListeners(sc: SparkContext, timeoutMs: Long = 5000L): Boolean = {
+    val marker = new DrainMarker
+    val probe = new SparkListener {
+      override def onOtherEvent(event: SparkListenerEvent): Unit = if (event eq marker) marker.arrived.countDown()
+    }
+    sc.addSparkListener(probe)
+    try {
+      sc.listenerBus.post(marker)
+      marker.arrived.await(timeoutMs, TimeUnit.MILLISECONDS)
+    } finally sc.removeSparkListener(probe)
+  }
+
+  private final class DrainMarker extends SparkListenerEvent {
+    val arrived = new CountDownLatch(1)
+    override protected[spark] def logEvent: Boolean = false
+  }
 }

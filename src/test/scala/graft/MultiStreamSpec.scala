@@ -382,7 +382,7 @@ class MultiStreamSpec extends SparkSpec {
       try new MultiStreamValidationJob(spark, log, registry, idField = "doc_id", commitBatch = 4)
         .run(_ => batch, Seq(0, 1, 2, 3))
       finally {
-        Thread.sleep(500) // listener bus drain
+        org.apache.spark.sql.GraftFunctions.drainSharedListeners(spark.sparkContext)
         spark.sparkContext.removeSparkListener(l)
       }
     assert(m.metrics("n_success") > 0 && m.metrics("n_invalid") > 0 && m.metrics("n_error") > 0)

@@ -297,4 +297,24 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"),
       s"single-row V frame should broadcast:\n${p.take(1500)}")
   }
+
+  test("a batch of 8 file-backed partitions plans ONE file scan and no Union") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_batchplan").toString
+    val dirs = (0 until 8).map { p =>
+      val dir = s"$root/p=$p"
+      spark.range(p * 40L, (p + 1) * 40L, 1, 1).as[Long]
+        .map(i => graft.gen.SyntheticImages.rowOf(i, drift = false, contentPool = 0))
+        .toDF().write.parquet(dir)
+      dir
+    }
+    val tagged = graft.table.BatchInput.of(spark, 0 until 8, p => spark.read.parquet(dirs(p)))
+    val annotated = new graft.engine.ValidationEngine(graft.engine.ImageConstraints.v1,
+      graft.engine.EngineOptions(partitionIdCol = col("_pid"))).process(tagged).annotated
+    val p = plan(annotated)
+    val scans = p.linesIterator.count(l => l.contains("FileScan") || l.contains("Scan parquet"))
+    assert(scans == 1, s"expected one file scan, got $scans:\n${p.take(3000)}")
+    assert(!annotated.queryExecution.optimizedPlan.toString.contains("Union"), s"batch input re-unions:\n${p.take(3000)}")
+    assert(annotated.select("partition_id").distinct().count() == 8)
+  }
 }

@@ -512,4 +512,31 @@ class SnapshotSpec extends SparkSpec {
       .run(p => { calls :+= p; sparseInput(p) }, Seq(0, 1, 2, 3))
     assert(calls.isEmpty && m2.snapshotId == m.snapshotId)
   }
+
+  test("task_ms_* in the manifest equal an independently drained listener's totals") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    val stageGroup = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val taskMs = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => js.stageIds.foreach(stageGroup.put(_, g)))
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        Option(stageGroup.get(te.stageId)).foreach { g =>
+          val ms = Option(te.taskMetrics).map(_.executorRunTime).getOrElse(0L)
+          taskMs.merge(g, java.lang.Long.valueOf(ms), (a, b) => java.lang.Long.valueOf(a + b))
+        }
+    }
+    spark.sparkContext.addSparkListener(l)
+    val m =
+      try {
+        val run = new ValidationJob(spark, newLog(), ImageConstraints.v1, commitBatch = 2).run(inputFor, Seq(0, 1, 2, 3))
+        assert(org.apache.spark.sql.GraftFunctions.drainSharedListeners(spark.sparkContext))
+        run
+      } finally spark.sparkContext.removeSparkListener(l)
+    assert(m.metrics("task_ms_write_annotated") > 0L)
+    for (phase <- Seq("write_annotated", "write_violations", "write_rollups"))
+      assert(m.metrics.get(s"task_ms_$phase") == Option(taskMs.get(phase)).map(_.longValue),
+        s"$phase: manifest ${m.metrics.get(s"task_ms_$phase")} vs listener ${taskMs.get(phase)}")
+  }
 }
