@@ -418,8 +418,7 @@ object Queries {
     * an exact oracle for a genuinely iterative distributed algorithm.
     */
   def q36DedupComponents(s: SparkSession, dir: String): DataFrame =
-    // phashPairs returns distinct (id_a < id_b) pairs — skip the edge dedup
-    Dedup.components(qPhashNearDup(s, dir), pairsDistinct = true)
+    Dedup.components(qPhashNearDup(s, dir))
       .select(col("id"), col("component"))
 
   /** Pairs → groups → the DROP list (keep min id per group) — the decision
@@ -428,7 +427,7 @@ object Queries {
     * group's min.
     */
   def q46PruneList(s: SparkSession, dir: String): DataFrame =
-    Dedup.pruneList(qPhashNearDup(s, dir), pairsDistinct = true)
+    Dedup.pruneList(qPhashNearDup(s, dir))
       .orderBy("drop_id")
 
   /** Quality-policy keeper selection: keep the highest-scored member per
@@ -439,7 +438,7 @@ object Queries {
   def q49PruneByScore(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
     val scores = docs.select(col("doc_id"), (col("doc_id") * 37 % 11).as("score"))
-    Dedup.pruneListByScore(qPhashNearDup(s, dir), scores, "doc_id", "score", pairsDistinct = true)
+    Dedup.pruneListByScore(qPhashNearDup(s, dir), scores, "doc_id", "score")
       .orderBy("drop_id")
   }
 

@@ -37,24 +37,17 @@ object MinHashUtil {
   private final val P5 = 0x27d4eb2f165667c5L
 
   /** Per-lane seed bases: hashInt(j, Seed) + P5 + 8 — the seed-only prefix
-    * of XXH64.hashLong. Cached per numHashes (a handful of distinct values
-    * per JVM); plain volatile-free race is benign (idempotent build).
+    * of XXH64.hashLong. Built once per [[MinHashBandKeys]] instance and
+    * handed to [[bandKeys]], so no state is shared between callers.
     */
-  private var laneBaseCache: (Int, Array[Long]) = (0, Array.emptyLongArray)
-  private def laneBases(numHashes: Int): Array[Long] = {
-    val c = laneBaseCache
-    if (c._1 == numHashes) c._2
-    else {
-      val a = Array.tabulate(numHashes)(j => XXH64.hashInt(j, Seed) + P5 + 8L)
-      laneBaseCache = (numHashes, a)
-      a
-    }
-  }
+  def laneBases(numHashes: Int): Array[Long] =
+    Array.tabulate(numHashes)(j => XXH64.hashInt(j, Seed) + P5 + 8L)
 
   /** LSH band keys straight from the shingle set: for each band b, fold the
     * band's `rowsPerBand` minhash lanes into one 64-bit key.
-    * Empty input → all-identical sentinel keys (empty docs bucket together;
-    * the bucket cap bounds that degenerate bucket, Dedup.capBuckets).
+    * `bases` = [[laneBases]](numHashes). Empty input → all-identical
+    * sentinel keys (empty docs bucket together; the bucket cap bounds that
+    * degenerate bucket, Dedup.bucketPairs).
     *
     * Loop shape (round-7): shingle-OUTER with the shingle-only half of
     * XXH64.hashLong — `rotl(s·P2, 31)·P1` — hoisted and computed once per
@@ -64,10 +57,10 @@ object MinHashUtil {
     * [[bandKeysReference]]): hashLong(l, seed) decomposes as
     * fmix(rotl((seed + P5 + 8) ^ k1, 27)·P1 + P4) with k1 = rotl(l·P2,31)·P1.
     */
-  def bandKeys(sh: ArrayData, numHashes: Int, numBands: Int): ArrayData = {
+  def bandKeys(sh: ArrayData, bases: Array[Long], numBands: Int): ArrayData = {
+    val numHashes = bases.length
     val rowsPerBand = numHashes / numBands
     val n = sh.numElements()
-    val bases = laneBases(numHashes)
     val lanes = new Array[Long](numHashes)
     java.util.Arrays.fill(lanes, Long.MaxValue)
     var i = 0
@@ -164,10 +157,13 @@ final case class MinHashBandKeys(child: Expression, numHashes: Int, numBands: In
   require(numHashes % numBands == 0, "numHashes must divide into bands")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "minhash_band_keys"
+  @transient private lazy val bases: Array[Long] = MinHashUtil.laneBases(numHashes)
   override protected def nullSafeEval(input: Any): Any =
-    MinHashUtil.bandKeys(input.asInstanceOf[ArrayData], numHashes, numBands)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MinHashUtil.bandKeys($c, $numHashes, $numBands)")
+    MinHashUtil.bandKeys(input.asInstanceOf[ArrayData], bases, numBands)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("laneBases", bases, "long[]")
+    defineCodeGen(ctx, ev, c => s"graft.functions.MinHashUtil.bandKeys($c, $ref, $numBands)")
+  }
   override protected def withNewChildInternal(newChild: Expression): MinHashBandKeys =
     copy(child = newChild)
 }

@@ -8,7 +8,9 @@ import org.apache.spark.sql.functions._
   * event→schema existence lookup, where a missing referenced schema raises
   * EventSchemaLoadError, /root/reference/lib/EventValidator.js:231-236).
   *
-  * Both directions run as anti-joins on image_id. Strategy notes for scale:
+  * [[check]] counts both directions in one aggregate pass over the union
+  * of both sides' ids; [[orphanImages]]/[[danglingCaptions]] return the
+  * rows themselves as anti-joins on image_id. Strategy notes for scale:
   *  - `broadcast()` is applied by the caller when one side is dimension-like
   *    (Catalyst also auto-broadcasts below the threshold).
   *  - image_id is near-unique so the shuffle is skew-free; skewed keys
@@ -30,9 +32,23 @@ object Referential {
   def danglingCaptions(images: DataFrame, captions: DataFrame): DataFrame =
     captions.filter(col("image_id").isNotNull).join(images.select("image_id").distinct(), Seq("image_id"), "left_anti")
 
+  /** Both counts from one pass: the non-null image_ids of both sides,
+    * tagged by side, grouped by id (a partially aggregated shuffle of ids
+    * only). Orphans = Σ image rows of ids with no caption row; dangling =
+    * Σ caption rows of ids with no image — the row counts of
+    * [[orphanImages]] and [[danglingCaptions]].
+    */
   def check(images: DataFrame, captions: DataFrame): RefReport = {
-    val o = orphanImages(images, captions).count()
-    val d = danglingCaptions(images, captions).count()
+    def side(df: DataFrame, img: Long) =
+      df.filter(col("image_id").isNotNull).select(col("image_id"), lit(img).as("_img"), lit(1L - img).as("_cap"))
+    val r = side(images, 1L).unionByName(side(captions, 0L))
+      .groupBy("image_id")
+      .agg(sum("_img").as("ni"), sum("_cap").as("nc"))
+      .agg(
+        coalesce(sum(when(col("nc") === 0, col("ni"))), lit(0L)),
+        coalesce(sum(when(col("ni") === 0, col("nc"))), lit(0L)))
+      .head()
+    val (o, d) = (r.getLong(0), r.getLong(1))
     RefReport(o, d, o == 0 && d == 0)
   }
 

@@ -10,9 +10,10 @@ import org.apache.spark.sql.functions._
   *
   *  - exact: shuffle a 128-bit content hash, never the text (a 64-bit key
   *    would collide ~10^4 times at 10^12 rows);
-  *  - MinHash+LSH: shingle → signature → band keys, candidates meet in a
-  *    band-key equi-join (shuffle carries ids + band hash only), exact
-  *    Jaccard verifies candidates — no quadratic pass anywhere;
+  *  - MinHash+LSH: shingle → signature → band keys, candidates pair inside
+  *    each capped band bucket (one partial aggregate per bucket key, no
+  *    self-join), exact Jaccard verifies candidates — no quadratic pass
+  *    over the corpus anywhere;
   *  - SimHash: 64-bit signature, 4×16-bit band buckets, Hamming verify;
   *  - embedding near-dup: random-hyperplane LSH buckets, cosine verify.
   */
@@ -21,16 +22,19 @@ object Dedup extends Logging {
   /** Max members per LSH bucket before the bucket is dropped from candidate
     * generation. A degenerate band key (e.g. every sub-k-char doc shingles to
     * the empty set → identical signature) would otherwise make one bucket's
-    * self-join quadratic — the standard corpus-scale guard is to cap and log.
+    * pair emission quadratic — the standard corpus-scale guard is to cap and log.
     * Dropping a bucket trades recall on that pathological key for bounded
     * work; pairs inside healthy buckets are unaffected.
     */
   val DefaultMaxBucket = 500
 
-  /** Keep only rows in buckets of size ≤ maxBucket. The window count
-    * partitions by the bucket key — the SAME partitioning the downstream
-    * band self-join shuffles on, so Catalyst reuses the exchange rather than
-    * adding one. Rows dropped are observable as `lsh_dropped_rows` via
+  /** Keep only rows in buckets of size ≤ maxBucket — the cap of the
+    * cross-side kernels (`*PairsAgainst*`, each side capped on its own) and
+    * of [[substringSpanPairs]]. A Window count over the bucket key: it
+    * shuffles and sorts EVERY row of a bucket, hot ones included, before
+    * dropping it. Self-pair kernels use [[bucketPairs]] instead, whose
+    * partial aggregate ships at most maxBucket members per bucket per map
+    * task. Rows dropped are observable as `lsh_dropped_rows` via
     * Dataset.observe (no extra job; surfaces through QueryExecutionListener
     * at cluster scale).
     */
@@ -45,20 +49,58 @@ object Dedup extends Logging {
       .drop("_bn")
   }
 
+  /** Every unordered member pair of every LSH bucket of size ≤ maxBucket,
+    * in one aggregate and no self-join — the candidate step of the
+    * self-pair kernels ([[signaturePairs]], [[minhashPairs]], the
+    * embedding kernels).
+    *
+    * Steps: `groupBy(bucket).agg(bucket_members)`
+    * ([[graft.functions.BucketMembersAgg]]: a map task ships at most
+    * maxBucket members per bucket, and a hot bucket over the cap costs one
+    * count record per map task); the drops are observed (name
+    * `lsh_buckets`) as `lsh_dropped_rows` = Σ n over buckets with
+    * n > maxBucket (the same figure [[capBuckets]] reports); null bucket
+    * keys are counted there but never pair; each kept bucket emits its
+    * pairs with `posexplode` plus `slice` (member i with every later
+    * member).
+    *
+    * `memberCols.head` is the member id. Pairs with a null or equal id are
+    * dropped and each pair is oriented so `a.id < b.id`. Returns struct
+    * columns `a` and `b` of `memberCols`; a pair sharing several buckets
+    * comes back once per bucket, so callers run `distinct`.
+    */
+  private def bucketPairs(keys: DataFrame, bucketCols: Seq[String], memberCols: Seq[String], maxBucket: Int): DataFrame = {
+    val b = col("_b")
+    val m = col("_m")
+    val (ida, idb) = (col("a").getField(memberCols.head), col("b").getField(memberCols.head))
+    keys
+      .groupBy(bucketCols.map(col): _*)
+      .agg(graft.functions.BucketMembersAgg.members(struct(memberCols.map(col): _*), maxBucket).as("_b"))
+      .observe("lsh_buckets", sum(when(b.getField("n") > maxBucket, b.getField("n")).otherwise(0L)).as("lsh_dropped_rows"))
+      .filter(bucketCols.map(col(_).isNotNull).reduce(_ && _) && size(b.getField("members")) >= 2)
+      .select(b.getField("members").as("_m"))
+      .select(m, posexplode(m).as(Seq("_i", "a")))
+      .select(col("a"), explode(slice(m, col("_i") + 2, size(m) - col("_i") - 1)).as("b"))
+      .filter(ida.isNotNull && idb.isNotNull && ida =!= idb)
+      .select(when(ida < idb, col("a")).otherwise(col("b")).as("a"), when(ida < idb, col("b")).otherwise(col("a")).as("b"))
+  }
+
   /** Materialize an LSH signature table to storage and read it back — the
-    * cluster-scale "write the signature table once" shape. The write both
-    * (a) truncates lineage so the analyzer/codegen never re-process the
-    * numHashes-lane signature expression tree at each of its 4 downstream
-    * references (measured ~20s of fixed plan cost at 64 lanes when inlined)
-    * and (b) survives executor loss, unlike localCheckpoint's
-    * executor-pinned blocks (round-1 advisory).
+    * cluster-scale "write the signature table once" shape, used by the
+    * cross-side text kernel ([[minhashPairsAgainst]]) and each round of
+    * [[adaptiveBuckets]]. The write both (a) truncates lineage so the
+    * analyzer/codegen never re-process the upstream expression tree at
+    * each downstream reference and (b) survives executor loss, unlike
+    * localCheckpoint's executor-pinned blocks (round-1 advisory). Each call
+    * costs a parquet write, a read-back and a schema-inference job.
     *
     * Spill location (round-2 advisory: a driver-local tmp path is
     * unreachable from executors on a real cluster): `spark.graft.spill.dir`
     * if set, else `<spark.sql.warehouse.dir>/graft-spill` — both resolved
     * through the Hadoop filesystem of the path, so any shared FS works.
-    * Cleanup: Hadoop `deleteOnExit`, which unlike java.io.File removes the
-    * directory RECURSIVELY when the FileSystem closes at JVM exit.
+    * Cleanup is left to Hadoop `deleteOnExit`, which acts only when the
+    * FileSystem closes at JVM exit: every call leaves one directory behind
+    * for at least the life of the JVM.
     */
   private def materializeSigs(df: DataFrame, tag: String): DataFrame = {
     val spark = df.sparkSession
@@ -107,21 +149,17 @@ object Dedup extends Logging {
       threshold: Double = 0.7,
       maxBucket: Int = DefaultMaxBucket
   ): DataFrame = {
-    require(numHashes % numBands == 0, "numHashes must divide into bands")
     // Shingles sorted once per doc so the verify can merge-count
     // intersections; band keys via the single codegen'd MinHashBandKeys
     // expression (minhash is order-invariant) — constant plan cost instead
     // of a numHashes-subtree Column plan (seconds of janino per query).
-    val sigs = materializeSigs(
-      df.select(col(idCol).as("id"), graft.functions.TextHash.hashedShinglesSorted(col(textCol), shingleK).as("sh"))
-        .withColumn("bands", graft.functions.MinHash.bandKeys(col("sh"), numHashes, numBands)),
-      "minhash")
-    val keys = capBuckets(
-      sigs.select(col("id"), posexplode(col("bands")).as(Seq("band_idx", "band_key"))),
-      Seq("band_idx", "band_key"), maxBucket)
-    val cand = keys
-      .as("a")
-      .join(keys.as("b"), col("a.band_idx") === col("b.band_idx") && col("a.band_key") === col("b.band_key") && col("a.id") < col("b.id"))
+    // Members are ids only: a doc sits in numBands buckets, so members
+    // carrying shingles would ship every shingle set numBands times
+    // (measured 16x the shuffle bytes, no faster); distinct candidates
+    // fetch their shingles by id instead.
+    val sigs = minhashSignatures(df, idCol, textCol, shingleK, numHashes, numBands)
+    val cand = bucketPairs(sigs.select(col("id"), posexplode(col("bands")).as(Seq("band_idx", "band_key"))),
+        Seq("band_idx", "band_key"), Seq("id"), maxBucket)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
     val shOnly = sigs.select(col("id"), col("sh"))
@@ -400,24 +438,18 @@ object Dedup extends Logging {
     * verified by exact Hamming distance ≤ maxHamming. The shared kernel of
     * [[simhashPairs]] (text) and [[phashPairs]] (images).
     */
-  def signaturePairs(sigs0: DataFrame, maxHamming: Int, maxBucket: Int): DataFrame = {
+  def signaturePairs(sigs: DataFrame, maxHamming: Int, maxBucket: Int): DataFrame = {
     require(maxHamming <= 3, "4x16-bit banding only guarantees recall for hamming <= 3")
-    val sigs = sigs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val keys = capBuckets(
-      sigs.select(
-        col("id"),
-        col("sig"),
-        posexplode(array((0 until 4).map(b => shiftright(col("sig"), b * 16).bitwiseAND(lit(0xffffL))): _*))
-          .as(Seq("band_idx", "band_key"))
-      ),
-      Seq("band_idx", "band_key"), maxBucket)
-    keys
-      .as("a")
-      .join(keys.as("b"), col("a.band_idx") === col("b.band_idx") && col("a.band_key") === col("b.band_key") && col("a.id") < col("b.id"))
+    val keys = sigs.select(
+      col("id"),
+      col("sig"),
+      posexplode(array((0 until 4).map(b => shiftright(col("sig"), b * 16).bitwiseAND(lit(0xffffL))): _*))
+        .as(Seq("band_idx", "band_key")))
+    bucketPairs(keys, Seq("band_idx", "band_key"), Seq("id", "sig"), maxBucket)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"), col("a.sig").as("sig_a"), col("b.sig").as("sig_b"))
-      .distinct()
       .withColumn("hamming", TextOps.hamming64(col("sig_a"), col("sig_b")))
       .filter(col("hamming") <= maxHamming)
+      .distinct()
       .select("id_a", "id_b", "hamming")
   }
 
@@ -456,17 +488,11 @@ object Dedup extends Logging {
     * not a corpus-scale recompute. Returns (id, component) for every id
     * appearing in `pairs`, component = min id of its component.
     */
-  /** @param pairsDistinct callers producing pairs that are already distinct
-    *   with idA < idB (every kernel in this file — their pair lists pass
-    *   through `.distinct()` or a groupBy before returning) can skip the
-    *   edge-dedup shuffle: forward and reversed edges are then disjoint by
-    *   construction, so the union is distinct for free.
-    */
-  def components(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b", maxIter: Int = 20,
-      pairsDistinct: Boolean = false): DataFrame = {
+  def components(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b", maxIter: Int = 20): DataFrame = {
     val fwd = pairs.select(col(idA).as("src"), col(idB).as("dst"))
-    val edges0 = fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
-    val edges = (if (pairsDistinct) edges0 else edges0.distinct()).localCheckpoint()
+    // No edge dedup: every step is a min over neighbors, so a duplicated or
+    // reversed pair gives the same labels and is never worth a shuffle.
+    val edges = fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst"))).localCheckpoint()
     // Round 1 fused with label initialization: label(v) starts as v, so the
     // first propagation is simply min(v, min over neighbor IDS) — one
     // map-side-combining aggregate over the edge list, no init frame, no
@@ -518,9 +544,8 @@ object Dedup extends Logging {
     * [[components]]; anti-joining drop_id against the corpus is the
     * caller's one-line finish.
     */
-  def pruneList(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b", maxIter: Int = 20,
-      pairsDistinct: Boolean = false): DataFrame =
-    components(pairs, idA, idB, maxIter, pairsDistinct)
+  def pruneList(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b", maxIter: Int = 20): DataFrame =
+    components(pairs, idA, idB, maxIter)
       .filter(col("id") =!= col("component"))
       .select(col("id").as("drop_id"), col("component").as("keep_id"))
 
@@ -547,10 +572,9 @@ object Dedup extends Logging {
       scoreCol: String,
       idA: String = "id_a",
       idB: String = "id_b",
-      maxIter: Int = 20,
-      pairsDistinct: Boolean = false
+      maxIter: Int = 20
   ): DataFrame = {
-    val comp = components(pairs, idA, idB, maxIter, pairsDistinct)
+    val comp = components(pairs, idA, idB, maxIter)
       .join(scores.select(col(idCol).as("id"), col(scoreCol).as("_score")), Seq("id"), "left")
     val w = Window.partitionBy(col("component"))
       .orderBy(col("_score").desc_nulls_last, col("id"))
@@ -560,28 +584,21 @@ object Dedup extends Logging {
       .select(col("id").as("drop_id"), col("_keep").as("keep_id"))
   }
 
-  /** Embedding near-duplicate pairs: random-hyperplane LSH bucket join +
-    * exact cosine verification ≥ threshold.
+  /** The shared tail of every embedding-pair kernel: pair within capped
+    * buckets, verify exact cosine ≥ threshold. Input: (id, v, bucket).
+    * Returns distinct (id_a, id_b, cosine) with id_a < id_b.
     */
-  /** The shared tail of every embedding-pair kernel: cap hot buckets, join
-    * within buckets, verify exact cosine. Input: (id, v, bucket).
-    */
-  private def cosineVerifiedPairs(withBucket: DataFrame, threshold: Double, maxBucket: Int): DataFrame = {
-    val sigs = capBuckets(
-      withBucket.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      Seq("bucket"), maxBucket)
-    sigs
-      .as("a")
-      .join(sigs.as("b"), col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
+  private def cosineVerifiedPairs(withBucket: DataFrame, threshold: Double, maxBucket: Int): DataFrame =
+    bucketPairs(withBucket, Seq("bucket"), Seq("id", "v"), maxBucket)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"), Similarity.cosine(col("a.v"), col("b.v")).as("cosine"))
       .filter(col("cosine") >= threshold)
-  }
+      .distinct()
 
+  /** Embedding near-duplicate pairs: random-hyperplane LSH buckets, exact
+    * cosine verification ≥ threshold.
+    */
   def embeddingPairs(df: DataFrame, idCol: String, vecCol: String, dim: Int, threshold: Double = 0.95, nbits: Int = 12, maxBucket: Int = DefaultMaxBucket): DataFrame =
-    cosineVerifiedPairs(
-      df.select(col(idCol).as("id"), col(vecCol).as("v"))
-        .withColumn("bucket", Similarity.rpSignature(col("v"), dim, nbits)),
-      threshold, maxBucket)
+    cosineVerifiedPairs(embeddingSignatures(df, idCol, vecCol, dim, nbits), threshold, maxBucket)
 
   /** INCREMENTAL near-dup detection: pairs (corpus_id, incoming_id) where a
     * row of the arriving batch near-duplicates an already-ingested corpus

@@ -155,9 +155,8 @@ object Similarity {
       // Persisted across the fit: k-means|| init + up to 8 Lloyd rounds +
       // the assignment transform are each a full pass over `feat`; without
       // the cache every pass re-reads the source and re-runs
-      // array_to_vector (measured: the fit dominates q26/q41). Same
-      // internal-persist lifecycle as Dedup.signaturePairs — `assigned` is
-      // lazy, so the cache stays until the session drops it.
+      // array_to_vector (measured: the fit dominates q26/q41). `assigned`
+      // is lazy, so the cache stays until the SparkSession drops it.
       val feat = data.select(col(idCol).as("data_id"), col(vecCol).as("_dv"))
         .withColumn("features", array_to_vector(col("_dv")))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

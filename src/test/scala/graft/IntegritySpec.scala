@@ -24,6 +24,20 @@ class IntegritySpec extends SparkSpec {
     assert(rep.orphanImages == expectedOrphans, s"got ${rep.orphanImages} want $expectedOrphans")
   }
 
+  test("one-pass check equals the orphan/dangling row counts, incl. null and duplicated ids") {
+    import spark.implicits._
+    val i2 = Seq(Some("a"), Some("a"), Some("b"), None, None, Some("c"), Some("d"), Some("d")).toDF("image_id")
+    val c2 = Seq(Some("a"), Some("c"), Some("c"), None, Some("x"), Some("x"), Some("y")).toDF("image_id")
+    val none = Seq.empty[Option[String]].toDF("image_id")
+    for ((i, c) <- Seq((i2, c2), (i2, none), (none, c2), (none, none), (imgs, caps))) {
+      val rep = Referential.check(i, c)
+      val (o, d) = (Referential.orphanImages(i, c).count(), Referential.danglingCaptions(i, c).count())
+      assert(rep == Referential.RefReport(o, d, o == 0 && d == 0), s"check $rep, anti-joins $o/$d")
+    }
+    // b, d, d have no caption; x, x, y name no image
+    assert(Referential.check(i2, c2) == Referential.RefReport(3, 3, pass = false))
+  }
+
   test("referential violations carry the violation-row schema") {
     val v = Referential.violations(imgs, caps, "snapX")
     assert(v.columns.toSeq == Seq("snapshot_id", "partition_id", "image_id", "constraint_id", "field", "detail", "status"))

@@ -42,7 +42,7 @@ class OpsSpec extends SparkSpec {
         })
     for (arr <- cases; (nh, nb) <- Seq((64, 16), (64, 32), (32, 16), (8, 8))) {
       val in = new GenericArrayData(arr.asInstanceOf[Array[Any]])
-      val fast = graft.functions.MinHashUtil.bandKeys(in, nh, nb).toLongArray()
+      val fast = graft.functions.MinHashUtil.bandKeys(in, graft.functions.MinHashUtil.laneBases(nh), nb).toLongArray()
       val ref = graft.functions.MinHashUtil.bandKeysReference(in, nh, nb).toLongArray()
       assert(fast.sameElements(ref), s"nh=$nh nb=$nb n=${arr.length}")
     }
@@ -493,6 +493,10 @@ class OpsSpec extends SparkSpec {
     val wantMin = want.groupBy(_._2).flatMap { case (_, m) => val lbl = m.keys.min; m.keys.map(_ -> lbl) }
     assert(got == wantMin, s"component mismatch: ${got.toSeq.sorted.take(20)} vs ${wantMin.toSeq.sorted.take(20)}")
     assert(got(9L) == 0L) // the chain collapsed to its min across 9 hops
+
+    // duplicated and reversed pairs (components has no edge dedup): same labels
+    val noisy = chain ++ randomPairs ++ chain.map(_.swap) ++ randomPairs.take(60) ++ randomPairs.take(40).map(_.swap)
+    assert(Dedup.components(rnd.shuffle(noisy).toDF("id_a", "id_b")).as[(Long, Long)].collect().toMap == got)
 
     // non-convergence must FAIL LOUDLY, not return split components
     val e = intercept[IllegalArgumentException](Dedup.components(chain.toDF("id_a", "id_b"), maxIter = 3))

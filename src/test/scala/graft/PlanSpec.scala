@@ -298,6 +298,25 @@ class PlanSpec extends SparkSpec {
       s"single-row V frame should broadcast:\n${p.take(1500)}")
   }
 
+  test("self-pair LSH kernels: one (band_idx, band_key) aggregate, no Window, no self-join") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, Window => WindowNode}
+    val imgs = (0L until 50L).map(i => (i, i * 0x9e3779b97f4a7c15L)).toDF("image_id", "phash")
+    val docs = (0L until 50L).map(i => (i, s"document number $i of the plan corpus")).toDF("doc_id", "text")
+    for ((name, df) <- Seq(
+        "phashPairs" -> graft.ops.Dedup.phashPairs(imgs, "image_id", "phash"),
+        "minhashPairs" -> graft.ops.Dedup.minhashPairs(docs, "doc_id", "text"))) {
+      val p = df.queryExecution.optimizedPlan
+      assert(p.collect { case w: WindowNode => w }.isEmpty, s"$name plans a Window:\n$p")
+      val bandJoins = p.collect { case j: Join if j.condition.exists(_.references.exists(_.name == "band_key")) => j }
+      assert(bandJoins.isEmpty, s"$name plans a join on the band key:\n$p")
+      val bandAggs = p.collect {
+        case a: Aggregate if a.groupingExpressions.flatMap(_.references.map(_.name)).toSet == Set("band_idx", "band_key") => a
+      }
+      assert(bandAggs.size == 1, s"$name: ${bandAggs.size} aggregates on (band_idx, band_key):\n$p")
+    }
+  }
+
   test("a batch of 8 file-backed partitions plans ONE file scan and no Union") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft_batchplan").toString
