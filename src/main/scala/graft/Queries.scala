@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.constraint.{ConstraintSet, Maximum, MinLength, NonNull}
-import graft.engine.{ConstraintRegistry, EngineOptions, ImageConstraints, MultiStreamEngine, PixelChecks, ValidationEngine}
+import graft.engine.{ConstraintRegistry, EngineOptions, ImageConstraints, PixelChecks, ValidationEngine}
 import graft.gen.SyntheticImages
 import graft.integrity.{Referential, SkewJoin}
 import graft.ops.{Dedup, Multimodal, Similarity, TextOps}
@@ -254,7 +254,7 @@ object Queries {
       routes = Map("click" -> "click.v1", "purchase" -> "click.v1", "view" -> "view.v1")
     )
     val ev = t(s, dir, "events").withColumn("stream", col("event_type"))
-    new MultiStreamEngine(reg, EngineOptions(snapshotId = "q31", idField = "event_id"))
+    new ValidationEngine(reg, EngineOptions(snapshotId = "q31", idField = "event_id"), Some("stream"), Nil)
       .process(ev)
       .rollups
       .groupBy("stream")

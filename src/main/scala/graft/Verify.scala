@@ -25,6 +25,11 @@ import scala.concurrent.duration.Duration
   * packaged jar — no sbt startup, ~18-25 s total at sf0.01.
   */
 object Verify {
+  // The checkout Verify runs from: `sbt run` forks with the project base as
+  // its working directory, so the self-report and the grader resolve
+  // against the same tree as the compiled classes.
+  private def checkout: String = System.getProperty("user.dir")
+
   // JSON string escape: backslash, quote, and ALL control chars (<0x20)
   // — a tab or CR in builder-authored SQL would otherwise make the
   // driver's json.load fail and silently zero the round's correctness.
@@ -73,7 +78,7 @@ object Verify {
     def writeSelf(): String = done.synchronized {
       val body = report()
       Files.writeString(Paths.get(s"$outDir/VERIFY_SELF.json"), body)
-      try Files.writeString(Paths.get("/root/repo/VERIFY_SELF.json"), body)
+      try Files.writeString(Paths.get(checkout, "VERIFY_SELF.json"), body)
       catch { case _: Throwable => () }
       body
     }
@@ -125,9 +130,9 @@ object Verify {
     * as the FINAL stdout line. Failures here must never fail Verify itself.
     */
   private def selfGrade(outDir: String, sfDir: String): Unit = try {
-    val script = new java.io.File("/root/repo/tools/correctness_check.py")
+    val script = Paths.get(checkout, "tools", "correctness_check.py").toFile
     if (!script.isFile) { System.err.println("[verify] no correctness_check.py; skipping self-grade"); return }
-    val reportPath = "/root/repo/CORRECTNESS_SELF.json"
+    val reportPath = Paths.get(checkout, "CORRECTNESS_SELF.json").toString
     val pb = new ProcessBuilder("python3", script.getAbsolutePath, outDir, sfDir, reportPath)
     pb.redirectErrorStream(true)
     // Child output goes to a FILE, not a pipe we read inline: readAllBytes()

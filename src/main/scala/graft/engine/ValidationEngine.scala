@@ -60,49 +60,127 @@ final case class ValidationResult(
 )
 
 /** The validate-then-produce gate (/root/reference/lib/eventgate.js:80-102)
-  * as one declarative Catalyst pipeline:
+  * over a [[ConstraintRegistry]], as one declarative Catalyst pipeline:
   *
-  *   default-fill → one-pass allErrors constraint eval → status triage →
-  *   {valid, violations, rollups} frames.
+  *   route → default-fill → one-pass allErrors constraint eval → status
+  *   triage → {valid, violations, rollups} frames.
   *
   * Everything is a single projection over the scan plus one aggregation for
   * the rollups: at 10^12 rows the constraint evaluation itself is
-  * shuffle-free (narrow), and the only shuffle is the tiny
-  * (partition_id, status) rollup.
+  * shuffle-free (narrow), and the only shuffle is the tiny rollup.
+  *
+  * Routing: with a `streamCol`, each row of a HETEROGENEOUS batch declares
+  * its own constraint set (the reference's core semantics — every event
+  * carries `$schema`, resolved and validated per event,
+  * eventgate/lib/factories/default-eventgate.js:132-152 +
+  * lib/EventValidator.js:221-258), evaluated in ONE pass. The registry is
+  * job config, so the lookup is a codegen'd route expression and dispatch
+  * is a CASE per compiled set — shuffle-free and row-preserving, with
+  * Catalyst CSE deduping predicates shared between sets. A row whose
+  * stream resolves to no set gets status `error` — the EventSchemaLoadError
+  * path, which the reference classifies as error, not invalid
+  * (eventgate/lib/EventValidator.js:231-236, x-ample
+  * eventgate/test/spec.test.yaml:159-174).
+  *
+  * Without a `streamCol` the registry holds one set and every row is
+  * routed to it: the plan carries no route column and no dispatch, only
+  * that set's expressions. Its outputs keep the single-stream shapes:
+  * violation rows name the id `image_id` and carry no stream or set
+  * version, rollups are per partition.
   */
-final class ValidationEngine(cs: ConstraintSet, opts: EngineOptions = EngineOptions()) extends Serializable {
+final class ValidationEngine(
+    val registry: ConstraintRegistry,
+    val opts: EngineOptions,
+    /** the routing column; None routes every row to the registry's one set. */
+    val streamCol: Option[String],
+    /** The reference's `schema_uri_field` is a string OR an ARRAY of field
+      * names — the first field present on the event wins
+      * (eventgate/lib/factories/default-eventgate.js:105-108, tested
+      * at test/features/lib/factories/default-eventgate.js:18-51). Fields
+      * absent from the frame are skipped; among present ones, per-row
+      * "exists" = non-null, so the chain is one `coalesce`. All candidates
+      * null ⇒ null URI ⇒ unroutable ⇒ the schema-load-error status. */
+    val schemaUriCols: Seq[String]
+) extends Serializable {
 
   import ValidationEngine._
 
-  def process(input: DataFrame): ValidationResult = {
-    val inputCols = input.columns.toSeq
+  require(streamCol.isDefined || registry.sets.size == 1, "without a stream column the registry holds exactly one set")
+  require(streamCol.isDefined || schemaUriCols.isEmpty, "schema-URI fields route into a stream column")
 
-    val withPart = input.withColumn("partition_id", opts.partitionIdCol.cast("int"))
+  /** The single-stream gate: one constraint set, no routing. */
+  def this(cs: ConstraintSet, opts: EngineOptions = EngineOptions()) =
+    this(ConstraintRegistry.of(cs), opts, None, Nil)
 
-    // Optional decode stage: ONE UDF call per row, in the scan stage only;
-    // its outputs feed both the engine_error column and two extra checks.
-    val (decoded, fullCs) = opts.pixelChecks match {
-      case None =>
-        (withPart.withColumn("engine_error", lit(null).cast("string")), cs)
-      case Some(pc) =>
-        val dec = decodeUdf(pc.contentPool)
-        val d = withPart
-          .withColumn("_decode", dec(col("bytes"), col(opts.idField), col("fmt")))
-          .withColumn("engine_error", col("_decode.err"))
-        val dimsCheck = Predicate(
+  def process(rawInput: DataFrame): ValidationResult = {
+    // Optional decoded-pixel checks join every set's checks; their decode
+    // runs ONCE per row, in the scan stage only.
+    val pixelPredicates = opts.pixelChecks.toSeq.flatMap { pc =>
+      Seq(
+        Predicate(
           "w",
           "dims_match(w,h)",
           col("_decode.err").isNotNull || (col("w") === col("_decode.w") && col("h") === col("_decode.h")),
           "should match decoded dimensions"
-        )
-        val psnrCheck = Predicate(
+        ),
+        Predicate(
           "bytes",
           "pixel_invariant(bytes)",
           col("_decode.err").isNotNull || !col("fmt").isin(pc.lossyFmts.toSeq: _*) ||
             col("_decode.psnr") >= pc.psnrMin,
           s"decoded-pixel PSNR should be >= ${pc.psnrMin} dB"
         )
-        (d, cs.copy(checks = cs.checks ++ Seq(dimsCheck, psnrCheck)))
+      )
+    }
+    val sets = registry.sets.map(cs => cs.copy(checks = cs.checks ++ pixelPredicates))
+    sets.foreach { cs =>
+      val problems = cs.lint
+      require(problems.isEmpty, s"insecure constraint set ${cs.version}: ${problems.mkString("; ")}")
+    }
+
+    // Effective stream: the configured stream field when present, else the
+    // sanitized schema URI (makeExtractStream,
+    // eventgate/lib/factories/default-eventgate.js:132-152). The
+    // resolved value OVERWRITES the stream column so routing, rollups, and
+    // per-stream output all see the event's true destination.
+    val input = streamCol.filter(_ => schemaUriCols.nonEmpty).fold(rawInput) { s =>
+      val present = schemaUriCols.filter(rawInput.columns.contains)
+      val uri = if (present.isEmpty) lit(null).cast("string") else coalesce(present.map(col): _*)
+      rawInput.withColumn(s, ConstraintRegistry.extractStream(
+        if (rawInput.columns.contains(s)) Some(col(s)) else None, uri))
+    }
+    val inputCols = input.columns.toSeq
+
+    // Resolve stream → set version (the validator-cache lookup): one O(1)
+    // codegen'd hash probe + ordered regex/base-URI fallback, null = schema
+    // load failure.
+    val withPart = input.withColumn("partition_id", opts.partitionIdCol.cast("int"))
+    val routed = streamCol.fold(withPart)(s =>
+      withPart.withColumn("_set_id", graft.functions.StreamRoute.route(col(s), registry.resolver)))
+    val decoded = opts.pixelChecks.fold(routed)(pc =>
+      routed.withColumn("_decode", decodeUdf(pc.contentPool)(col("bytes"), col(opts.idField), col("fmt"))))
+    val loadError = streamCol.map(s =>
+      when(col("_set_id").isNull, concat(
+        lit("EventSchemaLoadError: no constraint set registered for stream '"), coalesce(col(s), lit("null")), lit("'"))))
+    val decodeError = opts.pixelChecks.map(_ => col("_decode.err"))
+    val withError = decoded.withColumn("engine_error",
+      (loadError ++ decodeError).reduceOption(coalesce(_, _)).getOrElse(lit(null).cast("string")))
+
+    // Per-set dispatch: a CASE over `among` on the routed set version,
+    // `otherwise` for rows routed to none of them. Without a stream column
+    // the one set's expressions apply as they are: no CASE is built whose
+    // raw-value branch could change a filled column's nullability.
+    def perSet(among: Seq[ConstraintSet], f: ConstraintSet => Column, otherwise: Column): Column =
+      if (streamCol.isEmpty) f(sets.head)
+      else among.foldRight(otherwise)((cs, acc) => when(col("_set_id") === cs.version, f(cs)).otherwise(acc))
+
+    // Default fills dispatch per set (AJV useDefaults mutates the event,
+    // eventgate/lib/EventValidator.js:29-33) — per field, a CASE over
+    // the sets that fill it; rows of other sets keep the raw value.
+    val fillFields = sets.flatMap(_.fills.map(_.field)).distinct
+    val filled = fillFields.foldLeft(withError) { (df, f) =>
+      val fill = (cs: ConstraintSet) => cs.fills.find(_.field == f)
+      df.withColumn(f, perSet(sets.filter(fill(_).isDefined), cs => fill(cs).get(col(f)), col(f)))
     }
 
     // Triage: error > invalid > success (/root/reference/lib/eventgate.js:175-207:
@@ -115,92 +193,101 @@ final class ValidationEngine(cs: ConstraintSet, opts: EngineOptions = EngineOpti
     // allErrors semantics are untouched — every failing row still reports
     // EVERY violated constraint (Compiler.violationsArray has no
     // short-circuit), it just does so only for rows that need details.
-    val problems = fullCs.lint
-    require(problems.isEmpty, s"insecure constraint set: ${problems.mkString("; ")}")
-    val filled = Compiler.applyFills(decoded, fullCs)
+    // Unrouted rows pass by default: the error status wins the triage.
     val annotated = filled
       .withColumn(
         "status",
         when(col("engine_error").isNotNull, Status.Error)
-          .when(!Compiler.allPass(fullCs), Status.Invalid)
+          .when(!perSet(sets, Compiler.allPass, lit(true)), Status.Invalid)
           .otherwise(Status.Success)
       )
-      .withColumn("violations", when(col("status") === Status.Invalid, Compiler.violationsArray(fullCs))
-        .otherwise(array().cast("array<struct<constraint_id:string,field:string,detail:string>>")))
+      .withColumn("violations", when(col("status") === Status.Invalid, perSet(sets, Compiler.violationsArray, EmptyViolations))
+        .otherwise(EmptyViolations))
 
+    // Valid rows keep the stream column — the router key for per-stream
+    // output (the reference produces each event to ITS stream's topic,
+    // eventgate/lib/factories/default-eventgate.js:242-278).
     val valid = annotated.filter(col("status") === Status.Success).select(inputCols.map(col): _*)
 
-    val violations = ValidationEngine.violationRows(annotated, opts.snapshotId, opts.idField)
-
-    // Per-partition rollup: one hash-agg (partial+final), all statuses
-    // always present as columns — the batch analog of forcing all three
-    // groups in the reference (/root/reference/lib/eventgate.js:230-232).
-    val rollups = annotated
-      .groupBy(col("partition_id"))
-      .agg(
-        count(when(col("status") === Status.Success, 1)).as("n_success"),
-        count(when(col("status") === Status.Invalid, 1)).as("n_invalid"),
-        count(when(col("status") === Status.Error, 1)).as("n_error")
-      )
-      .select(lit(opts.snapshotId).as("snapshot_id"), col("partition_id"), col("n_success"), col("n_invalid"), col("n_error"))
-
-    ValidationResult(annotated, valid, violations, rollups)
+    ValidationResult(
+      annotated,
+      valid,
+      violationRows(annotated, opts.snapshotId, opts.idField, streamCol),
+      rollupRows(annotated, opts.snapshotId, streamCol)
+    )
   }
 }
 
 object ValidationEngine {
 
+  private val EmptyViolations: Column =
+    array().cast("array<struct<constraint_id:string,field:string,detail:string>>")
+
   /** ViolationRow projection from any annotated frame (must carry
-    * partition_id, violations, engine_error, status + the id field) — used
-    * by `process` and by ValidationJob when it re-derives violations from
-    * the written failing slice instead of re-scanning the input.
-    * Constraint violations keep full detail; engine errors are scrubbed to
-    * message-only (/root/reference/lib/eventgate.js:42-60).
+    * partition_id, violations, engine_error, status + the id field, and
+    * `_set_id` + the stream column when routed) — used by `process` and by
+    * ValidationJob when it derives violations from the written failing
+    * slice instead of re-scanning the input. Constraint violations keep
+    * full detail; engine errors are scrubbed to message-only
+    * (eventgate/lib/eventgate.js:42-60). Routed rows also name their
+    * stream and the version of the set that judged them, and their id
+    * column is `row_id`.
     */
-  def violationRows(annotated: DataFrame, snapshotId: String, idField: String): DataFrame = {
+  def violationRows(annotated: DataFrame, snapshotId: String, idField: String, streamCol: Option[String]): DataFrame = {
+    // an engine error is a decode failure of `bytes`, or an unroutable stream
+    val (route, errorField) = streamCol match {
+      case None    => (Seq.empty[(String, Column)], lit("bytes"))
+      case Some(s) =>
+        (Seq("stream" -> col(s), "constraint_version" -> col("_set_id")),
+          when(col("_set_id").isNull, lit(s)).otherwise(lit("bytes")))
+    }
+    val idName = violationIdField(streamCol)
     // ONE scan of `annotated` for both failure classes: a union of separate
     // invalid/error branches would re-derive the annotated subtree twice
     // (for an in-plan engine call that is two full constraint-eval — and,
     // with pixel checks, decode — passes over the input). Error rows become
     // a synthetic one-element violations array; the explode then emits
-    // exactly the rows the old two-branch union produced.
+    // exactly the rows a two-branch union would.
     annotated
       .filter(col("status") === Status.Invalid || col("status") === Status.Error)
-      .select(
-        lit(snapshotId).as("snapshot_id"),
-        col("partition_id"),
-        col(idField).as("image_id"),
-        explode(
-          when(col("status") === Status.Invalid, col("violations"))
-            .otherwise(array(struct(
-              lit("engine_error").as("constraint_id"),
-              lit("bytes").as("field"),
-              col("engine_error").as("detail"))))
-        ).as("v"),
-        col("status")
-      )
-      .select(
-        col("snapshot_id"),
-        col("partition_id"),
-        col("image_id"),
-        col("v.constraint_id"),
-        col("v.field"),
-        col("v.detail"),
-        col("status")
-      )
+      .select(Seq(lit(snapshotId).as("snapshot_id"), col("partition_id")) ++
+        route.map { case (n, c) => c.as(n) } ++ Seq(
+          col(idField).as(idName),
+          explode(
+            when(col("status") === Status.Invalid, col("violations"))
+              .otherwise(array(struct(
+                lit("engine_error").as("constraint_id"),
+                errorField.as("field"),
+                col("engine_error").as("detail"))))
+          ).as("v"),
+          col("status")
+        ): _*)
+      .select((Seq("snapshot_id", "partition_id") ++ route.map(_._1) ++
+        Seq(idName, "v.constraint_id", "v.field", "v.detail", "status")).map(col): _*)
   }
 
-  /** Parquet-facing schema of [[violationRows]] (for empty-batch writes). */
-  val violationRowSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("snapshot_id", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("partition_id", org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("image_id", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("constraint_id", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("field", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("detail", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("status", org.apache.spark.sql.types.StringType)
-    ))
+  /** The id column of [[violationRows]]. */
+  def violationIdField(streamCol: Option[String]): String = if (streamCol.isEmpty) "image_id" else "row_id"
+
+  /** RollupRow projection: status counts per partition (per stream and
+    * partition when routed), all three statuses always present as columns
+    * — the batch analog of forcing all three groups in the reference
+    * (eventgate/lib/eventgate.js:230-232). One hash-agg
+    * (partial+final) over any frame carrying partition_id and status (and
+    * the stream column when routed).
+    */
+  def rollupRows(annotated: DataFrame, snapshotId: String, streamCol: Option[String]): DataFrame =
+    annotated
+      .groupBy(streamCol.map(s => col(s).as("stream")).toSeq :+ col("partition_id"): _*)
+      .agg(
+        count(when(col("status") === Status.Success, 1)).as("n_success"),
+        count(when(col("status") === Status.Invalid, 1)).as("n_invalid"),
+        count(when(col("status") === Status.Error, 1)).as("n_error")
+      )
+      .select(
+        Seq(lit(snapshotId).as("snapshot_id")) ++ streamCol.map(_ => col("stream")) ++
+          Seq(col("partition_id"), col("n_success"), col("n_invalid"), col("n_error")): _*
+      )
 
   /** Decode `bytes`, measure PSNR vs the reference pixels recoverable from
     * the generated image_id. Runs only when pixel checks are enabled.

@@ -54,7 +54,7 @@ object MinHashUtil {
     * shingle instead of once per (lane, shingle); the lane loop then does
     * xor + rotl + mul + add + fmix per pair. Bit-identical to calling
     * XXH64.hashLong(s, hashInt(j, Seed)) per pair (property-tested against
-    * [[bandKeysReference]]): hashLong(l, seed) decomposes as
+    * the pre-round-7 lane loop kept in `src/test`): hashLong(l, seed) decomposes as
     * fmix(rotl((seed + P5 + 8) ^ k1, 27)·P1 + P4) with k1 = rotl(l·P2,31)·P1.
     */
   def bandKeys(sh: ArrayData, bases: Array[Long], numBands: Int): ArrayData = {
@@ -82,43 +82,6 @@ object MinHashUtil {
         }
       }
       i += 1
-    }
-    val keys = new Array[Long](numBands)
-    var b = 0
-    while (b < numBands) {
-      var h = XXH64.hashInt(b, Seed)
-      var r = 0
-      while (r < rowsPerBand) {
-        h = XXH64.hashLong(lanes(b * rowsPerBand + r), h)
-        r += 1
-      }
-      keys(b) = h
-      b += 1
-    }
-    new GenericArrayData(keys)
-  }
-
-  /** The pre-round-7 lane loop (XXH64.hashLong per (lane, shingle)) — kept
-    * as the parity reference for [[bandKeys]]'s hoisted decomposition.
-    */
-  private[graft] def bandKeysReference(sh: ArrayData, numHashes: Int, numBands: Int): ArrayData = {
-    val rowsPerBand = numHashes / numBands
-    val n = sh.numElements()
-    val lanes = new Array[Long](numHashes)
-    var j = 0
-    while (j < numHashes) {
-      val laneSeed = XXH64.hashInt(j, Seed)
-      var min = Long.MaxValue
-      var i = 0
-      while (i < n) {
-        if (!sh.isNullAt(i)) {
-          val h = XXH64.hashLong(sh.getLong(i), laneSeed)
-          if (h < min) min = h
-        }
-        i += 1
-      }
-      lanes(j) = min
-      j += 1
     }
     val keys = new Array[Long](numBands)
     var b = 0

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Exact top-k per group for FEW, HUGE groups.
@@ -14,7 +13,8 @@ import org.apache.spark.sql.functions._
   * rows per group (shuffle volume bounded by survivors, not input) and no
   * full-table sort ever runs; ranks fall out of the final merged heap.
   * Result is bit-identical to the single-window plan (q07's oracle covers
-  * it; OpsSpec compares all three implementations).
+  * it; OpsSpec compares it with a plain window and with the salted
+  * two-phase tournament it replaced, kept in `src/test`).
   *
   * `order` must be a unique total order within each group (the usual
   * tie-break-on-id contract); directions use SQL default null ordering
@@ -44,46 +44,5 @@ object TopK {
       .select(posexplode(col("_topk")).as(Seq("_pos", "_row")))
       .select(df.columns.toIndexedSeq.map(c => col(s"_row._p.`$c`").as(c)) :+
         (col("_pos") + 1).cast("int").as(rankCol): _*)
-  }
-
-  /** The pre-round-7 two-phase salted tournament, kept as a window-only
-    * differential reference for [[topKPerGroup]]. Phase 1 takes the top k
-    * within each of `fanout` deterministic salt cells per group (any global
-    * top-k row is top-k in its cell, so survivors are a superset); phase 2
-    * ranks the ≤ fanout·k survivors per group exactly.
-    *
-    * Honest complexity (round-6 verdict correction): phase 1's parallelism
-    * is `fanout`-wide per group, and each (group, salt) cell still sorts
-    * ~group_size/fanout rows on one task — NOT O(k·fanout) per partition.
-    * Callers with extreme group sizes must raise `fanout` accordingly; the
-    * aggregate path above has no such knob to tune, which is why it is the
-    * default.
-    */
-  def topKPerGroupSalted(
-      df: DataFrame,
-      groupCols: Seq[String],
-      order: Seq[(Column, Boolean)],
-      k: Int,
-      rankCol: String = "rank",
-      fanout: Int = 64
-  ): DataFrame = {
-    require(groupCols.nonEmpty, "groupCols must be non-empty")
-    require(order.nonEmpty, "order must be non-empty")
-    require(k > 0 && fanout > 0, s"k and fanout must be positive: $k/$fanout")
-    val salt = "_topk_salt"
-    require(!df.columns.contains(salt) && !df.columns.contains(rankCol),
-      s"TopK reserves columns $salt/$rankCol")
-    val ord = order.map { case (c, asc) => if (asc) c.asc else c.desc }
-    val cell = pmod(xxhash64(order.map(_._1): _*), lit(fanout))
-    val survivors = df
-      .withColumn(salt, cell)
-      .withColumn(rankCol, row_number().over(
-        Window.partitionBy((groupCols :+ salt).map(col): _*).orderBy(ord: _*)))
-      .filter(col(rankCol) <= k)
-      .drop(salt, rankCol)
-    survivors
-      .withColumn(rankCol, row_number().over(
-        Window.partitionBy(groupCols.map(col): _*).orderBy(ord: _*)))
-      .filter(col(rankCol) <= k)
   }
 }

@@ -1,25 +1,17 @@
 package graft.sketch
 
-import org.apache.datasketches.common.ArrayOfStringsSerDe
-import org.apache.datasketches.frequencies.{ItemsSketch, LongsSketch}
-import org.apache.datasketches.hll.{HllSketch, TgtHllType, Union}
-import org.apache.datasketches.tdigest.TDigestDouble
-
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** One-pass sketch profile of an image+caption snapshot — the column
   * statistics block of the north_star: HLL++ on image_id/phash, t-digest on
   * w/h (and optionally byte size), frequent-items on fmt and phash.
   *
-  * Two computation paths, same result type:
-  *  - [[profile]]: one hash-free `agg` of udaf sketch aggregators — Spark
-  *    runs partial aggregation per partition and merges partials on the
-  *    final reduce (the idiomatic path; zero extra shuffle of data rows).
-  *  - [[profileTree]]: explicit `RDD.treeAggregate(depth=2)` — the
-  *    executor-tree merge spelled out, for the 1000-executor scale argument
-  *    where a flat partial-merge on one reducer would bottleneck on
-  *    thousands of sketch payloads.
+  * [[profile]] is one hash-free `agg` of udaf sketch aggregators — Spark
+  * runs partial aggregation per partition and merges partials on the final
+  * reduce (zero extra shuffle of data rows). An explicit
+  * `RDD.treeAggregate` of the same sketches, kept in `src/test`, is its
+  * differential reference.
   */
 object ColumnProfiler {
 
@@ -60,71 +52,6 @@ object ColumnProfiler {
       tdByteSize = if (includeByteSize) Some(r.getAs[Array[Byte]]("td_bs")) else None,
       freqFmt = r.getAs[Array[Byte]]("fq_fmt"),
       freqPhash = r.getAs[Array[Byte]]("fq_ph")
-    )
-  }
-
-  /** Mutable per-task buffer holding all sketches; serializable via the
-    * Sketches.* wrapper buffers (compact sketch binary formats).
-    */
-  final class ProfileBuf(lgK: Int, tdK: Short, freqMap: Int) extends Serializable {
-    var n: Long = 0L
-    val hllId = new Sketches.HllBuf(new HllSketch(lgK, TgtHllType.HLL_8))
-    val hllPh = new Sketches.HllBuf(new HllSketch(lgK, TgtHllType.HLL_8))
-    val tdW = new Sketches.TdBuf(new TDigestDouble(tdK))
-    val tdH = new Sketches.TdBuf(new TDigestDouble(tdK))
-    val fqFmt = new Sketches.FreqStringBuf(new ItemsSketch[String](freqMap))
-    val fqPh = new Sketches.FreqLongBuf(new LongsSketch(freqMap))
-
-    def add(imageId: String, phash: java.lang.Long, w: java.lang.Integer, h: java.lang.Integer, fmt: String): this.type = {
-      n += 1
-      if (imageId != null) hllId.sk.update(imageId)
-      if (phash != null) { hllPh.sk.update(phash.longValue); fqPh.sk.update(phash.longValue) }
-      if (w != null) tdW.sk.update(w.doubleValue)
-      if (h != null) tdH.sk.update(h.doubleValue)
-      if (fmt != null) fqFmt.sk.update(fmt)
-      this
-    }
-
-    def mergeIn(o: ProfileBuf): this.type = {
-      n += o.n
-      val u1 = new Union(hllId.sk.getLgConfigK); u1.update(hllId.sk); u1.update(o.hllId.sk)
-      hllId.sk = u1.getResult(TgtHllType.HLL_8)
-      val u2 = new Union(hllPh.sk.getLgConfigK); u2.update(hllPh.sk); u2.update(o.hllPh.sk)
-      hllPh.sk = u2.getResult(TgtHllType.HLL_8)
-      tdW.sk.merge(o.tdW.sk); tdH.sk.merge(o.tdH.sk)
-      fqFmt.sk.merge(o.fqFmt.sk); fqPh.sk.merge(o.fqPh.sk)
-      this
-    }
-  }
-
-  /** Explicit executor-tree merge: seqOp per row, combOp up a depth-2 tree.
-    * Reads ONLY the five narrow columns (projection before .rdd keeps
-    * column pruning: bytes/caption never leave the scan).
-    */
-  def profileTree(df: DataFrame, depth: Int = 2, lgK: Int = 12): SketchProfile = {
-    val rows = df.select("image_id", "phash", "w", "h", "fmt").rdd
-    val buf = rows.treeAggregate(new ProfileBuf(lgK, 200.toShort, 512))(
-      seqOp = (b: ProfileBuf, r: Row) =>
-        b.add(
-          r.getAs[String]("image_id"),
-          if (r.isNullAt(1)) null else java.lang.Long.valueOf(r.getLong(1)),
-          if (r.isNullAt(2)) null else java.lang.Integer.valueOf(r.getInt(2)),
-          if (r.isNullAt(3)) null else java.lang.Integer.valueOf(r.getInt(3)),
-          r.getAs[String]("fmt")
-        ),
-      combOp = (a: ProfileBuf, b: ProfileBuf) => a.mergeIn(b),
-      depth = depth
-    )
-    buf.tdW.sk.compress(); buf.tdH.sk.compress()
-    SketchProfile(
-      nRows = buf.n,
-      hllImageId = buf.hllId.sk.toCompactByteArray,
-      hllPhash = buf.hllPh.sk.toCompactByteArray,
-      tdW = buf.tdW.sk.toByteArray,
-      tdH = buf.tdH.sk.toByteArray,
-      tdByteSize = None,
-      freqFmt = buf.fqFmt.sk.toByteArray(new ArrayOfStringsSerDe),
-      freqPhash = buf.fqPh.sk.toByteArray
     )
   }
 

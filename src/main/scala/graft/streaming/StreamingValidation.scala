@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.StructType
 
 import graft.constraint.ConstraintSet
 import graft.engine.{EngineOptions, ValidationEngine}
-import graft.table.{Manifest, SnapshotLog}
+import graft.table.{Manifest, SnapshotLog, ValidationJob}
 
 /** Streaming face of the gate. The reference is an unbounded intake loop in
   * which each HTTP batch is processed independently
@@ -42,17 +42,29 @@ object StreamingValidation {
       .start()
   }
 
-  /** Snapshot-committed micro-batch gate: all three outputs of a batch
-    * become visible atomically through ONE SnapshotLog manifest — a crash
+  /** Snapshot-committed micro-batch gate: all outputs of a batch become
+    * visible atomically through ONE SnapshotLog manifest — a crash
     * mid-batch leaves no partially visible output, the same all-or-nothing
     * the batch path provides (round-1 advisory: three independent appends
-    * could surface a half-written batch). Idempotent on micro-batch replay:
-    * a batch id already in the chain is skipped, so foreachBatch's
-    * at-least-once re-delivery after restart stays exactly-once-visible.
+    * could surface a half-written batch). The batch goes through the batch
+    * job's own per-batch routine ([[ValidationJob]]`.commit`): the
+    * annotated write routed by status (and stream, for a routed engine),
+    * violations from the written failing slice through the error-schema
+    * gate, rollups aggregated over the written table, and per-phase wall
+    * and task time; the chain's sketches carry over unchanged. A routed
+    * engine makes this the closest analog of the reference service
+    * itself: an unbounded intake of heterogeneous events, each validated
+    * against its own declared constraint set and produced to its stream's
+    * destination (eventgate/lib/factories/default-eventgate.js:
+    * 132-152 routing + :242-278 per-topic produce).
+    *
+    * Idempotent on micro-batch replay: a batch id already in the chain is
+    * skipped, so foreachBatch's at-least-once re-delivery after restart
+    * stays exactly-once-visible.
     */
   def processAndCommit(
       log: SnapshotLog,
-      cs: ConstraintSet,
+      engine: ValidationEngine,
       batch: DataFrame,
       batchId: Long,
       checkpointId: String = "default"
@@ -64,154 +76,12 @@ object StreamingValidation {
     if (head.exists(m => log.committedStreamBatches(m, checkpointId).contains(batchId))) return None
     if (batch.isEmpty) return None // empty body -> 400 analog: nothing to produce
 
-    val spark = batch.sparkSession
-    val snapshotId = s"batch-$batchId"
-    val res = new ValidationEngine(cs, EngineOptions(snapshotId = snapshotId)).process(batch)
-    val tag = s"stream-$checkpointId-$batchId"
-    val annotatedPath = log.dataDir(tag, "annotated")
-    val vioPath = log.dataDir(tag, "violations")
-    val rollPath = log.dataDir(tag, "rollups")
-
-    // ONE pass over the micro-batch (the batch job's produce shape): the
-    // annotated frame is written routed by statusd (status stays a data
-    // column) with batch totals observed during the same job; rollups and
-    // violations derive from the written table, not a pipeline re-run.
-    val annFrame = res.annotated.drop("_decode")
-    val (nS, nI, nE) =
-      SnapshotLog.writeAnnotated(annFrame, annotatedPath, s"sv_$tag")
-
-    // nonempty: batch.isEmpty guarded above; known file schema: no footer sampling
-    val ann = log.readPaths(spark, Seq(annotatedPath), Some(annFrame.schema))
-    val rollups = ann
-      .groupBy(col("partition_id"))
-      .agg(
-        count(when(col("status") === graft.model.Status.Success, 1)).as("n_success"),
-        count(when(col("status") === graft.model.Status.Invalid, 1)).as("n_invalid"),
-        count(when(col("status") === graft.model.Status.Error, 1)).as("n_error")
-      )
-      .select(lit(snapshotId).as("snapshot_id"), col("partition_id"),
-        col("n_success"), col("n_invalid"), col("n_error"))
-    rollups.coalesce(1).write.mode("overwrite").parquet(rollPath)
-
-    val failingDirs = SnapshotLog.failingDirs(annotatedPath, nI, nE)
-    val vio =
-      if (failingDirs.isEmpty)
-        spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          ValidationEngine.violationRowSchema)
-      else
-        ValidationEngine.violationRows(log.readPaths(spark, failingDirs, Some(annFrame.schema)), snapshotId, "image_id")
-    vio.write.mode("overwrite").parquet(vioPath)
-
-    val validPaths =
-      if (nS > 0) Seq(SnapshotLog.validDir(annotatedPath)) else Seq.empty[String]
-    val prev = head.map(_.metrics).getOrElse(Map.empty)
-    Some(log.commit(Manifest(
-      snapshotId = "",
-      sequence = 0L,
-      parentId = head.map(_.snapshotId),
-      constraintVersion = cs.version,
-      partitionSpec = "stream-batch",
-      partitionsDelta = Seq.empty,
-      complete = false, // a stream is never complete
-      tables = Map(
-        "valid" -> validPaths,
-        "annotated" -> Seq(annotatedPath),
-        "violations" -> Seq(vioPath), // empty unpartitioned writes still leave a schema-bearing file
-        "rollups" -> Seq(rollPath)
-      ),
-      tableSchemas = SnapshotLog.tableSchemasFor(annFrame.schema, vio.schema, rollups.schema),
-      metrics = Map(
-        "n_success" -> (prev.getOrElse("n_success", 0L) + nS),
-        "n_invalid" -> (prev.getOrElse("n_invalid", 0L) + nI),
-        "n_error" -> (prev.getOrElse("n_error", 0L) + nE)
-      ),
-      sketches = head.map(_.sketches).getOrElse(Map.empty),
-      createdAtMs = System.currentTimeMillis(),
-      streamBatches = Map(checkpointId -> Seq(batchId))
-    )))
-  }
-
-  /** Snapshot-committed MULTI-STREAM micro-batch gate — the closest analog
-    * of the reference service itself: an unbounded intake of heterogeneous
-    * events, each validated against its own declared constraint set and
-    * produced to its stream's destination
-    * (/root/reference/lib/factories/default-eventgate.js:132-152 routing +
-    * :242-278 per-topic produce), with each micro-batch's fan-out made
-    * atomic through one manifest. Idempotent on replay like
-    * [[processAndCommit]].
-    */
-  def processAndCommitMultiStream(
-      log: graft.table.SnapshotLog,
-      registry: graft.engine.ConstraintRegistry,
-      batch: DataFrame,
-      batchId: Long,
-      streamCol: String = "stream",
-      idField: String = "image_id",
-      checkpointId: String = "default"
-  ): Option[Manifest] = {
-    val head = log.head
-    if (head.exists(m => log.committedStreamBatches(m, checkpointId).contains(batchId))) return None
-    if (batch.isEmpty) return None // empty body -> 400 analog: nothing to produce
-
-    val spark = batch.sparkSession
-    val snapshotId = s"batch-$batchId"
-    val res = new graft.engine.MultiStreamEngine(
-      registry,
-      EngineOptions(snapshotId = snapshotId, idField = idField),
-      streamCol
-    ).process(batch)
-    val tag = s"stream-$checkpointId-$batchId"
-    val annotatedPath = log.dataDir(tag, "annotated")
-    val vioPath = log.dataDir(tag, "violations")
-    val rollPath = log.dataDir(tag, "rollups")
-    // ONE pass: annotated written routed per (statusd, streamd) with batch
-    // totals observed during the write; rollups and violations derive from
-    // the written table (explicit failing-directory reads).
-    val (nS, nI, nE) =
-      SnapshotLog.writeAnnotated(res.annotated, annotatedPath, s"svm_$tag", Some(streamCol))
-    val ann = log.readPaths(spark, Seq(annotatedPath), Some(res.annotated.schema))
-    val rollups = ann
-      .groupBy(col(streamCol).as("stream"), col("partition_id"))
-      .agg(
-        count(when(col("status") === graft.model.Status.Success, 1)).as("n_success"),
-        count(when(col("status") === graft.model.Status.Invalid, 1)).as("n_invalid"),
-        count(when(col("status") === graft.model.Status.Error, 1)).as("n_error")
-      )
-      .select(lit(snapshotId).as("snapshot_id"), col("stream"), col("partition_id"),
-        col("n_success"), col("n_invalid"), col("n_error"))
-    rollups.coalesce(1).write.mode("overwrite").parquet(rollPath)
-    val failingDirs = SnapshotLog.failingDirs(annotatedPath, nI, nE)
-    val failing =
-      if (failingDirs.isEmpty) ann.limit(0)
-      else log.readPaths(spark, failingDirs, Some(res.annotated.schema))
-    val vio = graft.engine.MultiStreamEngine.violationRows(failing, snapshotId, idField, streamCol)
-    vio.write.mode("overwrite").parquet(vioPath)
-    val prev = head.map(_.metrics).getOrElse(Map.empty)
-    Some(log.commit(Manifest(
-      snapshotId = "",
-      sequence = 0L,
-      parentId = head.map(_.snapshotId),
-      constraintVersion = registry.sets.map(_.version).sorted.mkString(","),
-      partitionSpec = "stream-batch",
-      partitionsDelta = Seq.empty,
-      complete = false,
-      tables = Map(
-        "valid" -> (if (nS > 0) Seq(SnapshotLog.validDir(annotatedPath)) else Seq.empty),
-        "annotated" -> Seq(annotatedPath),
-        "violations" -> Seq(vioPath), // empty unpartitioned writes still leave a schema-bearing file
-        "rollups" -> Seq(rollPath)
-      ),
-      tableSchemas = SnapshotLog.tableSchemasFor(res.annotated.schema, vio.schema, rollups.schema),
-      metrics = Map(
-        "n_success" -> (prev.getOrElse("n_success", 0L) + nS),
-        "n_invalid" -> (prev.getOrElse("n_invalid", 0L) + nI),
-        "n_error" -> (prev.getOrElse("n_error", 0L) + nE)
-      ),
-      sketches = head.map(_.sketches).getOrElse(Map.empty),
-      createdAtMs = System.currentTimeMillis(),
-      streamBatches = Map(checkpointId -> Seq(batchId))
-    )))
+    val job = new ValidationJob(batch.sparkSession, log, engine, partitionSpec = "stream-batch",
+      profileColumns = false, suppressViolations = None, commitBatch = 1,
+      violationsSchema = Some(ValidationJob.violationsSchemaV1))
+    Some(job.commit(head, batch, s"stream-$checkpointId-$batchId", s"batch-$batchId",
+      partitions = None, complete = false, // a stream is never complete
+      streamBatches = Map(checkpointId -> Seq(batchId))))
   }
 
   /** Durable identity of a streaming checkpoint INSTANCE: a UUID minted on
@@ -235,35 +105,12 @@ object StreamingValidation {
     }
   }
 
-  /** File stream of heterogeneous events → multi-stream snapshotted gate. */
-  def startMultiStream(
-      spark: SparkSession,
-      sourceDir: String,
-      schema: StructType,
-      registry: graft.engine.ConstraintRegistry,
-      log: graft.table.SnapshotLog,
-      checkpointDir: String,
-      streamCol: String = "stream",
-      idField: String = "image_id"
-  ): StreamingQuery = {
-    val ckId = checkpointIdentity(spark, checkpointDir)
-    spark.readStream.schema(schema).parquet(sourceDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processAndCommitMultiStream(log, registry, batch, batchId, streamCol, idField, ckId)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
   /** File stream → snapshot-committed gate (the durable streaming face). */
   def startSnapshotted(
       spark: SparkSession,
       sourceDir: String,
       schema: StructType,
-      cs: ConstraintSet,
+      engine: ValidationEngine,
       log: SnapshotLog,
       checkpointDir: String
   ): StreamingQuery = {
@@ -271,7 +118,7 @@ object StreamingValidation {
     val stream = spark.readStream.schema(schema).parquet(sourceDir)
     stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processAndCommit(log, cs, batch, batchId, ckId)
+        processAndCommit(log, engine, batch, batchId, ckId)
         ()
       }
       .option("checkpointLocation", checkpointDir)

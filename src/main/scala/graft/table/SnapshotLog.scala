@@ -569,8 +569,6 @@ final class SnapshotLog(val root: String, conf: Configuration) extends Serializa
 }
 
 object SnapshotLog {
-  import org.apache.spark.sql.Observation
-  import org.apache.spark.sql.functions._
 
   private val manifestCache =
     scala.collection.concurrent.TrieMap.empty[(String, Long), Manifest]
@@ -582,55 +580,6 @@ object SnapshotLog {
   private val rootLocks = scala.collection.concurrent.TrieMap.empty[String, Object]
   private[table] def lockFor(root: String): Object =
     rootLocks.getOrElseUpdate(root, new Object)
-
-  /** The one manifest-schema map every validate-then-produce writer records:
-    * `valid` is a subtree view of `annotated` so they share the annotated
-    * FILE schema (the `*d` routing columns live only in directory names).
-    * One construction site — a writer that forgets a table would silently
-    * degrade its readers back to footer inference.
-    */
-  def tableSchemasFor(
-      annotated: org.apache.spark.sql.types.StructType,
-      violations: org.apache.spark.sql.types.StructType,
-      rollups: org.apache.spark.sql.types.StructType
-  ): Map[String, String] = Map(
-    "valid" -> annotated.json,
-    "annotated" -> annotated.json,
-    "violations" -> violations.json,
-    "rollups" -> rollups.json
-  )
-
-  /** The single-pass produce shape shared by the batch and streaming gates:
-    * write `annotated` routed by statusd (and streamd when `streamCol` is
-    * set) — the `*d` duplicates exist only as directory names, the real
-    * columns stay in the data files (see [[SnapshotLog.readPaths]]) — while
-    * an attached Observation counts the batch's status totals during the
-    * SAME job. Returns (nSuccess, nInvalid, nError).
-    */
-  def writeAnnotated(
-      annotated: DataFrame,
-      path: String,
-      obsName: String,
-      streamCol: Option[String] = None
-  ): (Long, Long, Long) = {
-    val obs = Observation(obsName)
-    val routed = streamCol.foldLeft(
-      annotated
-        .observe(
-          obs,
-          count(when(col("status") === graft.model.Status.Success, 1)).as("n_s"),
-          count(when(col("status") === graft.model.Status.Invalid, 1)).as("n_i"),
-          count(when(col("status") === graft.model.Status.Error, 1)).as("n_e")
-        )
-        .withColumn("statusd", col("status"))
-    )((df, sc) => df.withColumn("streamd", col(sc)))
-    routed.write
-      .mode("overwrite")
-      .partitionBy(Seq("statusd") ++ streamCol.map(_ => "streamd"): _*)
-      .parquet(path)
-    val t = obs.get
-    (t("n_s").asInstanceOf[Long], t("n_i").asInstanceOf[Long], t("n_e").asInstanceOf[Long])
-  }
 
   /** The statusd=success subtree of an annotated root (the valid table). */
   def validDir(annotatedPath: String): String =

@@ -12,10 +12,14 @@ import graft.engine.{EngineOptions, PixelChecks, ValidationEngine}
 import graft.model.Status
 import graft.sketch.Sketches
 
-/** The full validate-then-produce job over a snapshotted table, resumable
-  * from the last checkpointed partition set (north_rule).
+/** The validate-then-produce job over a snapshotted table: ONE gate for
+  * single-stream and multi-stream tables, batch runs and micro-batches.
+  * [[run]] is the resumable batch loop (north_rule);
+  * [[graft.streaming.StreamingValidation.processAndCommit]] sends one
+  * micro-batch through the same per-batch routine ([[commit]]) — one
+  * execution and commit model for batch and incremental runs.
   *
-  * Execution contract:
+  * Batch contract:
   *  - the caller provides `inputFor(partition)` — explicit partition-pruned
   *    input (with a manifest-backed source this is file-list construction,
   *    not a post-scan filter: SURVEY §4 "pruning is explicit");
@@ -29,22 +33,31 @@ import graft.sketch.Sketches
   *    batch plans one relation over all of its files, with each batch
   *    partition as one of its partition directories ([[BatchInput]]), so
   *    plan size and driver time stay flat in k and small partitions share
-  *    read tasks. Any
-  *    other input (a filter or projection on top, partition columns,
-  *    differing schemas, a file shared between partitions) falls back to a
-  *    union of per-partition frames — same rows, same outputs;
-  *  - per batch: validate → write valid → re-ingest violations through the
-  *    error-schema gate and write survivors → ONE stats aggregation
-  *    computing per-partition rollups AND column-stat sketches together
-  *    (no second read of the written output);
+  *    read tasks. Any other input (a filter or projection on top, partition
+  *    columns, differing schemas, a file shared between partitions) falls
+  *    back to a union of per-partition frames — same rows, same outputs;
   *  - a killed job re-run skips every partition in the chain's committed
-  *    set — only unfinished work reprocesses;
-  *  - per-phase duration metrics (wall + executor task time via a
-  *    SparkListener) are committed atomically with the manifest — the
-  *    engine analog of the reference's per-route duration histograms
-  *    (/root/reference/lib/util.js:101-139).
-  *    Both are exact: the listener's queue is drained before task time is
-  *    read.
+  *    set — only unfinished work reprocesses.
+  *
+  * Per batch ([[commit]]):
+  *  1. ONE full pass writes the annotated frame routed by status (and by
+  *     stream for a routed engine) — the valid table is its
+  *     statusd=success directory — while an attached Observation collects
+  *     status counts and column-stat sketches during the same job;
+  *  2. violations derive from the written FAILING slice (the ~1%
+  *     minority) in one scan, then pass suppression and the error-schema
+  *     gate;
+  *  3. rollups come from the Observation when the batch's partition ids are
+  *     known up front and rows are not routed; otherwise (per-stream counts
+  *     are value-dependent, micro-batches have no partition ids) they
+  *     aggregate over the written table's narrow columns;
+  *  4. one manifest commit with cumulative counts, merged sketches and
+  *     per-phase wall and executor-task milliseconds — the engine analog of
+  *     the reference's per-route duration histograms
+  *     (eventgate/lib/util.js:101-139). Both are exact: the
+  *     listener's queue is drained before task time is read.
+  * The input is never scanned a second time: at 10^12 rows this is the
+  * difference between one and three full passes.
   *
   * Violation re-ingest: the reference maps failures to error EVENTS and
   * pushes them back through the same gate, validating them against the
@@ -55,35 +68,281 @@ import graft.sketch.Sketches
   * and counted (`violations_rejected`) — durable where the reference is
   * fire-and-forget, suppression (`suppressViolations`) mirroring a null
   * `mapToErrorEvent` (/root/reference/lib/eventgate.js:260).
+  *
+  * Multi-stream output is the reference's "produce each event to its
+  * stream's topic" (eventgate/lib/factories/default-eventgate.js:
+  * 242-278) with the Guaranteed-producer contract: all streams' outputs for
+  * a batch become visible through ONE atomic manifest or not at all.
   */
 final class ValidationJob(
     spark: SparkSession,
     log: SnapshotLog,
-    cs: ConstraintSet,
-    pixelChecks: Option[PixelChecks] = None,
-    partitionSpec: String = "explicit",
-    profileColumns: Boolean = true,
+    /** the gate each batch runs; the job sets its snapshot id per batch,
+      * and its partition id column to the batch tag `_pid` in [[run]]. */
+    engine: ValidationEngine,
+    partitionSpec: String,
+    /** sketch the profiled image columns the annotated table carries. */
+    profileColumns: Boolean,
     /** keep-predicate over violation rows; None keeps all. */
-    suppressViolations: Option[Column] = None,
+    suppressViolations: Option[Column],
     /** partitions per Spark job + manifest commit. */
-    commitBatch: Int = 8,
+    commitBatch: Int,
     /** error-schema gate for re-ingested violation rows; None skips the gate. */
-    violationsSchema: Option[ConstraintSet] = Some(ValidationJob.violationsSchemaV1)
+    violationsSchema: Option[ConstraintSet]
 ) {
   require(commitBatch >= 1, "commitBatch must be >= 1")
+
+  /** The single-stream job: one constraint set, no routing. */
+  def this(
+      spark: SparkSession,
+      log: SnapshotLog,
+      cs: ConstraintSet,
+      pixelChecks: Option[PixelChecks] = None,
+      partitionSpec: String = "explicit",
+      profileColumns: Boolean = true,
+      suppressViolations: Option[Column] = None,
+      commitBatch: Int = 8,
+      violationsSchema: Option[ConstraintSet] = Some(ValidationJob.violationsSchemaV1)
+  ) = this(spark, log, new ValidationEngine(cs, EngineOptions(pixelChecks = pixelChecks)), partitionSpec,
+    profileColumns, suppressViolations, commitBatch, violationsSchema)
+
+  import ValidationJob._
+
+  def run(inputFor: Int => DataFrame, partitions: Seq[Int]): Manifest = {
+    var current = log.head
+    val done = current.map(log.committedPartitions).getOrElse(Set.empty[Int])
+    for (batch <- partitions.filterNot(done).grouped(commitBatch)) {
+      // One heterogeneous input per batch, each row tagged with its
+      // partition id in `_pid`.
+      val tagged = BatchInput.of(spark, batch, inputFor)
+      val committedSoFar = current.map(log.committedPartitions).getOrElse(Set.empty) ++ batch
+      current = Some(commit(
+        current, tagged, batch.mkString("_"), current.map(_.snapshotId).getOrElse("snap-00000000"),
+        partitions = Some(batch), complete = partitions.toSet.subsetOf(committedSoFar), streamBatches = Map.empty))
+    }
+    current.getOrElse(throw new IllegalStateException("nothing to commit: no partitions"))
+  }
+
+  /** Validate `input` and produce it as ONE commit on top of `parent`.
+    * `partitions` are the batch's partition ids when `input` carries them
+    * in `_pid` ([[BatchInput]]); None takes the engine's own partition id
+    * column (a micro-batch). `streamBatches` is the manifest's replay
+    * ledger entry.
+    */
+  private[graft] def commit(
+      parent: Option[Manifest],
+      input: DataFrame,
+      tag: String,
+      snapshotId: String,
+      partitions: Option[Seq[Int]],
+      complete: Boolean,
+      streamBatches: Map[String, Seq[Long]]
+  ): Manifest = {
+    val streamCol = engine.streamCol
+    val opts = engine.opts.copy(
+      snapshotId = snapshotId,
+      partitionIdCol = if (partitions.isDefined) col("_pid") else engine.opts.partitionIdCol)
+    val res = new ValidationEngine(engine.registry, opts, streamCol, engine.schemaUriCols).process(input)
+
+    val annotatedPath = log.dataDir(tag, "annotated")
+    val vioPath = log.dataDir(tag, "violations")
+    val rollPath = log.dataDir(tag, "rollups")
+
+    val listener = new PhaseListener
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val wallMs = scala.collection.mutable.Map.empty[String, Long]
+      def phase[T](name: String)(body: => T): T = {
+        spark.sparkContext.setJobGroup(name, s"graft $name", interruptOnCancel = false)
+        val t0 = System.nanoTime()
+        try body
+        finally {
+          wallMs(name) = (System.nanoTime() - t0) / 1000000L
+          spark.sparkContext.clearJobGroup()
+        }
+      }
+
+      // Rollup counts are observable per partition only when the partition
+      // ids are known up front and rows are not split further by stream.
+      val observedParts = partitions.filter(_ => streamCol.isEmpty)
+      val ok = col("status") === Status.Success
+      val countExprs = observedParts match {
+        case Some(ps) =>
+          ps.flatMap { p =>
+            Seq(
+              count(when(col("partition_id") === p && ok, 1)).as(s"s_$p"),
+              count(when(col("partition_id") === p && col("status") === Status.Invalid, 1)).as(s"i_$p"),
+              count(when(col("partition_id") === p && col("status") === Status.Error, 1)).as(s"e_$p")
+            )
+          }
+        case None =>
+          Seq(
+            count(when(ok, 1)).as("n_s"),
+            count(when(col("status") === Status.Invalid, 1)).as("n_i"),
+            count(when(col("status") === Status.Error, 1)).as("n_e")
+          )
+      }
+      val annFrame = res.annotated.drop("_pid").drop("_decode")
+      val sketches = if (profileColumns) Profiled.filter(p => annFrame.columns.contains(p.column)) else Nil
+      val statsObs = Observation(s"stats_$tag")
+      val statExprs = countExprs ++ sketches.map(p => p.aggregate(when(ok, p.value)).as(p.name))
+      // `statusd`/`streamd` duplicate `status`/the stream purely for
+      // directory routing: the real columns stay IN the data files so
+      // snapshot readers can use one multi-root recursive scan
+      // (SnapshotLog.readPaths) instead of Hive partition inference, which
+      // rejects multi-root reads.
+      phase("write_annotated") {
+        val observed = annFrame.observe(statsObs, statExprs.head, statExprs.tail: _*).withColumn("statusd", col("status"))
+        streamCol.fold(observed)(s => observed.withColumn("streamd", col(s)))
+          .write.mode("overwrite").partitionBy("statusd" +: streamCol.map(_ => "streamd").toSeq: _*).parquet(annotatedPath)
+      }
+      val stats = statsObs.get
+      def cnt(k: String): Long = stats(k).asInstanceOf[Long]
+      val perPart = observedParts.map(_.map(p => (p, cnt(s"s_$p"), cnt(s"i_$p"), cnt(s"e_$p"))))
+      val (nS, nI, nE) = perPart.fold((cnt("n_s"), cnt("n_i"), cnt("n_e")))(_.foldLeft((0L, 0L, 0L)) {
+        case ((a, b, c), (_, s, i, e)) => (a + s, b + i, c + e)
+      })
+
+      // Violations from the written failing slice (status is a data
+      // column, so no partition inference needed), then suppression and
+      // the re-ingest gate.
+      val failingDirs = SnapshotLog.failingDirs(annotatedPath, nI, nE)
+      val vioSource =
+        if (failingDirs.isEmpty) {
+          val schema = ValidationEngine.violationRows(annFrame, snapshotId, opts.idField, streamCol).schema
+          spark.createDataFrame(java.util.Collections.emptyList[Row](), StructType(schema.map(_.copy(nullable = true))))
+        } else
+          ValidationEngine.violationRows(
+            log.readPaths(spark, failingDirs, Some(annFrame.schema)), // known file schema: no footer sampling
+            snapshotId, opts.idField, streamCol)
+      val kept = suppressViolations.fold(vioSource)(vioSource.filter)
+      val rejectedObs = Observation(s"gate_$tag")
+      val gated = violationsSchema match {
+        case None => kept
+        case Some(schema) =>
+          // `status` is data here (the violated row's triage), so it is
+          // renamed out of the gate engine's own triage column's way.
+          val asEvents = kept.withColumnRenamed("status", "violation_status")
+          val gateRes = new ValidationEngine(
+            schema,
+            EngineOptions(snapshotId = snapshotId, idField = ValidationEngine.violationIdField(streamCol),
+              partitionIdCol = col("partition_id"))
+          ).process(asEvents)
+          gateRes.annotated
+            .observe(rejectedObs, count(when(col("status") =!= Status.Success, 1)).as("rejected"))
+            .filter(col("status") === Status.Success)
+            .select(kept.columns.toIndexedSeq.map(c => if (c == "status") col("violation_status").as("status") else col(c)): _*)
+      }
+      phase("write_violations") {
+        gated.write.mode("overwrite").parquet(vioPath)
+      }
+      val rejected: Long =
+        if (violationsSchema.isEmpty) 0L
+        else rejectedObs.get.get("rejected").map(_.asInstanceOf[Long]).getOrElse(0L)
+
+      // Observed rollups are rows built from the observed counts (a
+      // metadata-sized write, not another data scan; empty partitions keep
+      // their zero rows); the rest aggregate (stream, partition_id, status)
+      // of the written table.
+      val rollups = perPart match {
+        case Some(pp) =>
+          import scala.jdk.CollectionConverters._
+          spark.createDataFrame(pp.map { case (p, s, i, e) => Row(snapshotId, p, s, i, e) }.asJava, RollupSchema)
+        case None =>
+          val ann =
+            if (nS + nI + nE > 0) log.readPaths(spark, Seq(annotatedPath), Some(annFrame.schema))
+            else annFrame.limit(0)
+          ValidationEngine.rollupRows(ann, snapshotId, streamCol)
+      }
+      phase("write_rollups") {
+        rollups.coalesce(1).write.mode("overwrite").parquet(rollPath)
+      }
+
+      val prevSketches = parent.map(_.sketches).getOrElse(Map.empty)
+      val mergedSketches = prevSketches ++ sketches.map { p =>
+        val b = b64(stats(p.name).asInstanceOf[Array[Byte]])
+        p.name -> prevSketches.get(p.name).fold(b)(a => b64(p.merge(unb64(a), unb64(b))))
+      }
+
+      // A stalled shared queue costs the exactness of task_ms_*, never the commit.
+      GraftFunctions.drainSharedListeners(spark.sparkContext)
+      val prevMetrics = parent.map(_.metrics).getOrElse(Map.empty)
+      def plus(k: String, v: Long): (String, Long) = k -> (prevMetrics.getOrElse(k, 0L) + v)
+
+      log.commit(
+        Manifest(
+          snapshotId = "", // assigned by commit
+          sequence = 0L,
+          parentId = parent.map(_.snapshotId),
+          constraintVersion = engine.registry.sets.map(_.version).sorted.mkString(","),
+          partitionSpec = partitionSpec,
+          partitionsDelta = partitions.getOrElse(Seq.empty),
+          complete = complete,
+          // An all-empty batch writes NO annotated files (partitionBy of
+          // zero rows creates no directories), so registering its paths
+          // would poison later reads; the manifest still commits so the
+          // empty partitions count as done (resume skips them).
+          tables = Map(
+            "valid" -> (if (nS > 0) Seq(SnapshotLog.validDir(annotatedPath)) else Seq.empty),
+            "annotated" -> (if (nS + nI + nE > 0) Seq(annotatedPath) else Seq.empty),
+            "violations" -> Seq(vioPath), // empty unpartitioned writes still leave a schema-bearing file
+            "rollups" -> Seq(rollPath)
+          ),
+          // FILE schemas: readers plan from these, not parquet footers.
+          // `valid` is a subtree view of `annotated`, so they share one.
+          tableSchemas = Map(
+            "valid" -> annFrame.schema.json,
+            "annotated" -> annFrame.schema.json,
+            "violations" -> gated.schema.json,
+            "rollups" -> rollups.schema.json
+          ),
+          metrics = Map(
+            plus("n_success", nS),
+            plus("n_invalid", nI),
+            plus("n_error", nE),
+            plus("violations_rejected", rejected)
+          ) ++ wallMs.map { case (k, v) => plus(s"wall_ms_$k", v) } ++
+            listener.taskMs.map { case (k, v) => plus(s"task_ms_$k", v) },
+          sketches = mergedSketches,
+          createdAtMs = System.currentTimeMillis(),
+          streamBatches = streamBatches
+        )
+      )
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+}
+
+object ValidationJob {
 
   private def b64(b: Array[Byte]): String = Base64.getEncoder.encodeToString(b)
   private def unb64(s: String): Array[Byte] = Base64.getDecoder.decode(s)
 
-  private val sketchMergers: Map[String, (Array[Byte], Array[Byte]) => Array[Byte]] = Map(
-    "hll_image_id" -> Sketches.hllMerge,
-    "hll_phash" -> Sketches.hllMerge,
-    "td_w" -> Sketches.tdMerge,
-    "td_h" -> Sketches.tdMerge,
-    "td_byte_size" -> Sketches.tdMerge,
-    "freq_fmt" -> Sketches.freqStringMerge,
-    "freq_phash" -> Sketches.freqLongMerge
+  /** A column-stat sketch of the profiled image columns: aggregated over
+    * `value` of the valid rows when `column` is in the annotated schema,
+    * merged into the chain's sketch `name` on commit. */
+  private final case class Profile(
+      name: String,
+      column: String,
+      value: Column,
+      aggregate: Column => Column,
+      merge: (Array[Byte], Array[Byte]) => Array[Byte])
+
+  private val Profiled = Seq(
+    Profile("hll_image_id", "image_id", col("image_id"), Sketches.hllString(_), Sketches.hllMerge),
+    Profile("hll_phash", "phash", col("phash"), Sketches.hllLong(_), Sketches.hllMerge),
+    Profile("td_w", "w", col("w"), Sketches.tdigest(_), Sketches.tdMerge),
+    Profile("td_h", "h", col("h"), Sketches.tdigest(_), Sketches.tdMerge),
+    // north_star names byte-size quantiles; bytes is already in the
+    // written row, so length() here adds no scan width
+    Profile("td_byte_size", "bytes", length(col("bytes")), Sketches.tdigest(_), Sketches.tdMerge),
+    Profile("freq_fmt", "fmt", col("fmt"), Sketches.freqString(_), Sketches.freqStringMerge),
+    Profile("freq_phash", "phash", col("phash"), Sketches.freqLong(_), Sketches.freqLongMerge)
   )
+
+  private val RollupSchema = StructType(Seq(
+    StructField("snapshot_id", StringType), StructField("partition_id", IntegerType),
+    StructField("n_success", LongType), StructField("n_invalid", LongType), StructField("n_error", LongType)
+  ))
 
   /** Executor-task milliseconds per named phase, via job groups. Read only
     * after draining its listener queue, so totals include every finished task.
@@ -101,214 +360,6 @@ final class ValidationJob(
         taskMs.update(g, taskMs.getOrElse(g, 0L) + ms)
       }
   }
-
-  def run(inputFor: Int => DataFrame, partitions: Seq[Int]): Manifest = {
-    var current = log.head
-    val done = current.map(log.committedPartitions).getOrElse(Set.empty[Int])
-    val todo = partitions.filterNot(done)
-    val listener = new PhaseListener
-    // task_ms baseline from BEFORE this run: the listener accumulates across
-    // this run's batches, so resumed runs add onto the chain's prior totals.
-    val baseTaskMs = current.map(_.metrics).getOrElse(Map.empty)
-      .collect { case (k, v) if k.startsWith("task_ms_") => k -> v }
-    spark.sparkContext.addSparkListener(listener)
-
-    try {
-      for (batch <- todo.grouped(commitBatch)) {
-        val wallMs = scala.collection.mutable.Map.empty[String, Long]
-        def phase[T](name: String)(body: => T): T = {
-          spark.sparkContext.setJobGroup(name, s"graft $name", interruptOnCancel = false)
-          val t0 = System.nanoTime()
-          try body
-          finally {
-            wallMs(name) = wallMs.getOrElse(name, 0L) + (System.nanoTime() - t0) / 1000000L
-            spark.sparkContext.clearJobGroup()
-          }
-        }
-
-        val opts = EngineOptions(
-          snapshotId = current.map(_.snapshotId).getOrElse("snap-00000000"),
-          pixelChecks = pixelChecks,
-          partitionIdCol = col("_pid")
-        )
-        // One heterogeneous input per batch, each row tagged with its
-        // partition id — validated and PRODUCED in one data pass: the
-        // annotated frame is written once, partitioned by status (the valid
-        // table is its status=success directory), while an attached
-        // Observation collects per-partition rollup counts and the batch's
-        // column-stat sketches during the same job. Violations are then
-        // derived by re-reading only the written FAILING slice (the ~1%
-        // minority) — the input is never scanned a second time. At 10^12
-        // rows this is the difference between one and three full passes.
-        val tagged = BatchInput.of(spark, batch, inputFor)
-        val res = new ValidationEngine(cs, opts).process(tagged)
-
-        val tag = batch.mkString("_")
-        val annotatedPath = log.dataDir(tag, "annotated")
-        val vioPath = log.dataDir(tag, "violations")
-        val rollPath = log.dataDir(tag, "rollups")
-
-        val ok = col("status") === Status.Success
-        val countExprs = batch.flatMap { p =>
-          Seq(
-            count(when(col("partition_id") === p && ok, 1)).as(s"s_$p"),
-            count(when(col("partition_id") === p && col("status") === Status.Invalid, 1)).as(s"i_$p"),
-            count(when(col("partition_id") === p && col("status") === Status.Error, 1)).as(s"e_$p")
-          )
-        }
-        val sketchExprs =
-          if (profileColumns)
-            Seq(
-              Sketches.hllString(when(ok, col("image_id"))).as("hll_image_id"),
-              Sketches.hllLong(when(ok, col("phash"))).as("hll_phash"),
-              Sketches.tdigest(when(ok, col("w"))).as("td_w"),
-              Sketches.tdigest(when(ok, col("h"))).as("td_h"),
-              // north_star names byte-size quantiles; bytes is already in
-              // the written row, so length() here adds no scan width
-              Sketches.tdigest(when(ok, length(col("bytes")))).as("td_byte_size"),
-              Sketches.freqString(when(ok, col("fmt"))).as("freq_fmt"),
-              Sketches.freqLong(when(ok, col("phash"))).as("freq_phash")
-            )
-          else Seq.empty
-        val statsObs = Observation(s"stats_$tag")
-        val statExprs = countExprs ++ sketchExprs
-        // `statusd` duplicates `status` purely for directory routing: the
-        // real column stays IN the data files so snapshot readers can use
-        // one multi-root recursive scan (SnapshotLog.readPaths) instead of
-        // Hive partition inference, which rejects multi-root reads.
-        val annFrame = res.annotated.drop("_pid").drop("_decode")
-        phase("write_annotated") {
-          annFrame
-            .observe(statsObs, statExprs.head, statExprs.tail: _*)
-            .withColumn("statusd", col("status"))
-            .write.mode("overwrite").partitionBy("statusd").parquet(annotatedPath)
-        }
-        val stats = statsObs.get
-        def cnt(k: String): Long = stats(k).asInstanceOf[Long]
-        val perPart = batch.map(p => (p, cnt(s"s_$p"), cnt(s"i_$p"), cnt(s"e_$p")))
-        val (nS, nI, nE) = perPart.foldLeft((0L, 0L, 0L)) { case ((a, b, c), (_, s, i, e)) =>
-          (a + s, b + i, c + e)
-        }
-        val validPaths =
-          if (nS > 0) Seq(SnapshotLog.validDir(annotatedPath)) else Seq.empty[String]
-
-        // Violations from the written failing slice (status is a data
-        // column, so no partition inference needed), then suppression and
-        // the re-ingest gate.
-        val failingDirs = SnapshotLog.failingDirs(annotatedPath, nI, nE)
-        val vioSource =
-          if (failingDirs.isEmpty)
-            spark.createDataFrame(
-              java.util.Collections.emptyList[Row](), ValidationEngine.violationRowSchema)
-          else
-            ValidationEngine.violationRows(
-              log.readPaths(spark, failingDirs, Some(annFrame.schema)), // known file schema: no footer sampling
-              opts.snapshotId,
-              "image_id"
-            )
-        val kept = suppressViolations.fold(vioSource)(vioSource.filter)
-        val rejectedObs = Observation(s"gate_$tag")
-        val gated = violationsSchema match {
-          case None => kept
-          case Some(schema) =>
-            // `status` is data here (the violated row's triage), so it is
-            // renamed out of the gate engine's own triage column's way.
-            val asEvents = kept.withColumnRenamed("status", "violation_status")
-            val gateRes = new ValidationEngine(
-              schema,
-              EngineOptions(snapshotId = opts.snapshotId, idField = "image_id", partitionIdCol = col("partition_id"))
-            ).process(asEvents)
-            gateRes.annotated
-              .observe(rejectedObs, count(when(col("status") =!= Status.Success, 1)).as("rejected"))
-              .filter(col("status") === Status.Success)
-              .select(kept.columns.toIndexedSeq.map(c => if (c == "status") col("violation_status").as("status") else col(c)): _*)
-        }
-        phase("write_violations") {
-          gated.write.mode("overwrite").parquet(vioPath)
-        }
-        val rejected: Long =
-          if (violationsSchema.isEmpty) 0L
-          else rejectedObs.get.get("rejected").map(_.asInstanceOf[Long]).getOrElse(0L)
-
-        // Rollup rows are driver-built from the counts observed during the
-        // annotated write — a metadata-sized write, not another data scan.
-        val snapshotId = opts.snapshotId
-        val rollupRows = perPart.map { case (p, s, i, e) => Row(snapshotId, p, s, i, e) }
-        val rollupSchema = StructType(Seq(
-          StructField("snapshot_id", StringType), StructField("partition_id", IntegerType),
-          StructField("n_success", LongType), StructField("n_invalid", LongType), StructField("n_error", LongType)
-        ))
-        phase("write_rollups") {
-          import scala.jdk.CollectionConverters._
-          spark.createDataFrame(rollupRows.asJava, rollupSchema)
-            .coalesce(1).write.mode("overwrite").parquet(rollPath)
-        }
-
-        val newSketches: Map[String, String] =
-          if (!profileColumns) Map.empty
-          else sketchMergers.keys.map(k => k -> b64(stats(k).asInstanceOf[Array[Byte]])).toMap
-
-        val prevMetrics = current.map(_.metrics).getOrElse(Map.empty)
-        val prevSketches = current.map(_.sketches).getOrElse(Map.empty)
-        val mergedSketches = (prevSketches.keySet ++ newSketches.keySet).map { k =>
-          k -> ((prevSketches.get(k), newSketches.get(k)) match {
-            case (Some(a), Some(b)) => b64(sketchMergers(k)(unb64(a), unb64(b)))
-            case (Some(a), None)    => a
-            case (None, Some(b))    => b
-            case _                  => throw new IllegalStateException("unreachable")
-          })
-        }.toMap
-
-        // A stalled shared queue costs the exactness of task_ms_*, never the commit.
-        GraftFunctions.drainSharedListeners(spark.sparkContext)
-        val durations =
-          wallMs.map { case (k, v) => s"wall_ms_$k" -> (prevMetrics.getOrElse(s"wall_ms_$k", 0L) + v) } ++
-            listener.taskMs.map { case (k, v) => // listener is cumulative across THIS run's batches
-              s"task_ms_$k" -> (baseTaskMs.getOrElse(s"task_ms_$k", 0L) + v)
-            }
-
-        val committedSoFar = current.map(log.committedPartitions).getOrElse(Set.empty) ++ batch
-        current = Some(
-          log.commit(
-            Manifest(
-              snapshotId = "", // assigned by commit
-              sequence = 0L,
-              parentId = current.map(_.snapshotId),
-              constraintVersion = cs.version,
-              partitionSpec = partitionSpec,
-              partitionsDelta = batch,
-              complete = partitions.toSet.subsetOf(committedSoFar),
-              // An all-empty batch writes NO annotated files (partitionBy of
-              // zero rows creates no directories), so registering its paths
-              // would poison later reads; the manifest still commits so the
-              // empty partitions count as done (resume skips them). Rollup
-              // rows are driver-built and always exist.
-              tables = Map(
-                "valid" -> validPaths,
-                "annotated" -> (if (nS + nI + nE > 0) Seq(annotatedPath) else Seq.empty),
-                "violations" -> Seq(vioPath), // empty unpartitioned writes still leave a schema-bearing file
-                "rollups" -> Seq(rollPath)
-              ),
-              // FILE schemas: readers plan from these, not parquet footers.
-              tableSchemas = SnapshotLog.tableSchemasFor(annFrame.schema, gated.schema, rollupSchema),
-              metrics = Map(
-                "n_success" -> (prevMetrics.getOrElse("n_success", 0L) + nS),
-                "n_invalid" -> (prevMetrics.getOrElse("n_invalid", 0L) + nI),
-                "n_error" -> (prevMetrics.getOrElse("n_error", 0L) + nE),
-                "violations_rejected" -> (prevMetrics.getOrElse("violations_rejected", 0L) + rejected)
-              ) ++ durations,
-              sketches = mergedSketches,
-              createdAtMs = System.currentTimeMillis()
-            )
-          )
-        )
-      }
-      current.getOrElse(throw new IllegalStateException("nothing to commit: no partitions"))
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-}
-
-object ValidationJob {
 
   /** The error-event schema of the reference
     * (/root/reference/test/schemas/error/0.0.1: required fields + minLength

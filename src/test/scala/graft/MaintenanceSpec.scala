@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Row}
 
-import graft.engine.ImageConstraints
+import graft.engine.{ImageConstraints, ValidationEngine}
 import graft.gen.SyntheticImages
 import graft.table.{Maintenance, SnapshotLog, ValidationJob}
 
@@ -23,6 +23,8 @@ class MaintenanceSpec extends SparkSpec {
       .map(i => SyntheticImages.rowOf(i, drift = false, contentPool = 0))
       .toDF()
   }
+
+  private val v1Gate = new ValidationEngine(ImageConstraints.v1)
 
   private def newLog(): SnapshotLog =
     new SnapshotLog(Files.createTempDirectory("graft_maint").toString, spark.sparkContext.hadoopConfiguration)
@@ -163,8 +165,7 @@ class MaintenanceSpec extends SparkSpec {
   test("compact re-derives dual (statusd, streamd) routing for multi-stream tables") {
     import org.apache.spark.sql.functions._
     import graft.constraint.{ConstraintSet, DefaultFill, MaxLength, MinLength, NonNull}
-    import graft.engine.ConstraintRegistry
-    import graft.table.MultiStreamValidationJob
+    import graft.engine.{ConstraintRegistry, EngineOptions}
     import spark.implicits._
 
     val registry = ConstraintRegistry(
@@ -183,10 +184,11 @@ class MaintenanceSpec extends SparkSpec {
     ).toDF("doc_id", "text", "stream").withColumn("source", lit(null: String))
 
     val log = newLog()
-    val m = new MultiStreamValidationJob(spark, log, registry, idField = "doc_id", commitBatch = 1)
-      .run(inputFor, Seq(0, 1, 2))
+    val engine = new ValidationEngine(registry, EngineOptions(idField = "doc_id"), Some("stream"), Nil)
+    val m = new ValidationJob(spark, log, engine, "explicit", profileColumns = true, suppressViolations = None,
+      commitBatch = 1, violationsSchema = Some(ValidationJob.violationsSchemaV1)).run(inputFor, Seq(0, 1, 2))
     def perStream(mf: graft.table.Manifest) =
-      MultiStreamValidationJob.readValid(spark, log, mf)
+      log.readTableOrEmpty(spark, mf, "valid", schemaFrom = "annotated")
         .groupBy("stream").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val beforeValid = perStream(m)
     val beforeAnn = sortedRowsBy(log.readTable(spark, m, "annotated"), "doc_id")
@@ -215,20 +217,20 @@ class MaintenanceSpec extends SparkSpec {
     val ckptDir = Files.createTempDirectory("graft_maint_ckpt").toString
     val id = checkpointIdentity(spark, ckptDir)
 
-    assert(processAndCommit(log, ImageConstraints.v1, imgs, 0L, id).isDefined)
-    assert(processAndCommit(log, ImageConstraints.v1, imgs, 1L, id).isDefined)
+    assert(processAndCommit(log, v1Gate, imgs, 0L, id).isDefined)
+    assert(processAndCommit(log, v1Gate, imgs, 1L, id).isDefined)
     val perBatch = log.readTable(spark, log.head.get, "valid").count()
 
     Maintenance.compact(spark, log, "annotated")
     // replay ledger is chain-carried through the rewrite commit
-    assert(processAndCommit(log, ImageConstraints.v1, imgs, 1L, id).isEmpty)
-    assert(processAndCommit(log, ImageConstraints.v1, imgs, 2L, id).isDefined)
+    assert(processAndCommit(log, v1Gate, imgs, 1L, id).isEmpty)
+    assert(processAndCommit(log, v1Gate, imgs, 2L, id).isDefined)
 
     log.checkpoint(log.head.get)
     Maintenance.expire(log)
     // ...and squashed exactly-once into the checkpoint manifest
-    assert(processAndCommit(log, ImageConstraints.v1, imgs, 2L, id).isEmpty)
-    assert(processAndCommit(log, ImageConstraints.v1, imgs, 3L, id).isDefined)
+    assert(processAndCommit(log, v1Gate, imgs, 2L, id).isEmpty)
+    assert(processAndCommit(log, v1Gate, imgs, 3L, id).isDefined)
 
     val head = log.head.get
     assert(log.committedStreamBatches(head, id) == Set(0L, 1L, 2L, 3L))
@@ -297,7 +299,7 @@ class MaintenanceSpec extends SparkSpec {
     val log = newLog()
     val imgs = SyntheticImages.images(spark, 100, 1).toDF()
     val id = checkpointIdentity(spark, Files.createTempDirectory("graft_bound_ckpt").toString)
-    (0L until 10L).foreach(b => assert(processAndCommit(log, ImageConstraints.v1, imgs, b, id).isDefined))
+    (0L until 10L).foreach(b => assert(processAndCommit(log, v1Gate, imgs, b, id).isDefined))
     assert(log.head.get.sequence == 10L)
 
     val follower = new SnapshotFollower(log, "annotated",
@@ -316,7 +318,7 @@ class MaintenanceSpec extends SparkSpec {
     assert(follower.cursor == 10L)
 
     // a crash mid-catch-up replays only the CURRENT slice
-    (10L until 16L).foreach(b => assert(processAndCommit(log, ImageConstraints.v1, imgs, b, id).isDefined))
+    (10L until 16L).foreach(b => assert(processAndCommit(log, v1Gate, imgs, b, id).isDefined))
     intercept[RuntimeException](follower.poll(spark, maxCommits = 4) { (_, _, _) => throw new RuntimeException("crash") })
     assert(follower.cursor == 10L)
     assert(follower.poll(spark, maxCommits = 4)((_, f, t) => assert((f, t) == ((10L, 14L)))) == 4L)
@@ -345,12 +347,12 @@ class MaintenanceSpec extends SparkSpec {
     ))
     val id = checkpointIdentity(spark, Files.createTempDirectory("graft_legacy_ckpt").toString)
     // replaying the legacy batch id is a no-op under ANY identity...
-    assert(processAndCommit(log, ImageConstraints.v1, imgs, 5L, id).isEmpty)
+    assert(processAndCommit(log, v1Gate, imgs, 5L, id).isEmpty)
     // ...while new ids commit normally
-    assert(processAndCommit(log, ImageConstraints.v1, imgs, 6L, id).isDefined)
+    assert(processAndCommit(log, v1Gate, imgs, 6L, id).isDefined)
     // and the gate survives a checkpoint squash (carried under "default")
     log.checkpoint(log.head.get)
-    assert(processAndCommit(log, ImageConstraints.v1, imgs, 5L, id).isEmpty)
+    assert(processAndCommit(log, v1Gate, imgs, 5L, id).isEmpty)
     assert(log.committedStreamBatches(log.head.get, id).contains(5L))
   }
 

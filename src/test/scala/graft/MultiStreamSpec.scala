@@ -50,7 +50,14 @@ class MultiStreamSpec extends SparkSpec {
     ("f", "some text", null, "unregistered.stream")
   ).toDF("doc_id", "text", "source", "stream")
 
-  private val engine = new MultiStreamEngine(registry, EngineOptions(snapshotId = "ms", idField = "doc_id"))
+  private def routed(reg: ConstraintRegistry, snapshotId: String, idField: String = "doc_id", schemaUriCols: Seq[String] = Nil) =
+    new ValidationEngine(reg, EngineOptions(snapshotId = snapshotId, idField = idField), Some("stream"), schemaUriCols)
+
+  private val engine = routed(registry, "ms")
+
+  private def job(log: graft.table.SnapshotLog, commitBatch: Int = 8) =
+    new graft.table.ValidationJob(spark, log, engine, "explicit", profileColumns = true, suppressViolations = None,
+      commitBatch = commitBatch, violationsSchema = Some(graft.table.ValidationJob.violationsSchemaV1))
 
   test("two coexisting constraint-set versions judge one mixed batch independently") {
     val res = engine.process(batch)
@@ -114,22 +121,16 @@ class MultiStreamSpec extends SparkSpec {
     assert(filled("f") == null) // no set ⇒ no fill
   }
 
-  test("rollups per stream partition the batch; writeByStream routes output dirs") {
+  test("rollups per stream partition the batch") {
     val res = engine.process(batch)
     val total = res.rollups.agg(sum(col("n_success") + col("n_invalid") + col("n_error"))).collect()(0).getLong(0)
     assert(total == batch.count())
     val streams = res.rollups.select("stream").distinct().collect().map(_.getString(0)).toSet
     assert(streams == Set("strict", "strict-alias", "lax", "unregistered.stream"))
-
-    val out = Files.createTempDirectory("graft_ms").toString
-    engine.writeByStream(res.valid, out)
-    val dirs = new java.io.File(out).listFiles().filter(_.isDirectory).map(_.getName).toSet
-    assert(dirs.contains("streamd=lax") && dirs.contains("streamd=strict"))
-    assert(!dirs.contains("streamd=unregistered.stream")) // no valid rows there
   }
 
   test("multi-stream job: per-stream routed output under ONE atomic commit; resume") {
-    import graft.table.{MultiStreamValidationJob, SnapshotLog}
+    import graft.table.SnapshotLog
     val log = new SnapshotLog(
       Files.createTempDirectory("graft_msjob").toString,
       spark.sparkContext.hadoopConfiguration
@@ -142,13 +143,12 @@ class MultiStreamSpec extends SparkSpec {
         col("text"), col("source"), col("stream")
       )
     }
-    val job = new MultiStreamValidationJob(spark, log, registry, idField = "doc_id", commitBatch = 2)
-    val m = job.run(inputFor, Seq(0, 1, 2))
+    val m = job(log, commitBatch = 2).run(inputFor, Seq(0, 1, 2))
     assert(m.sequence == 2, s"ceil(3/2)=2 commits expected, got ${m.sequence}")
     assert(log.committedPartitions(m) == Set(0, 1, 2))
 
     // valid output is routed per stream (the per-topic produce, atomically)
-    val valid = MultiStreamValidationJob.readValid(spark, log, m)
+    val valid = log.readTableOrEmpty(spark, m, "valid", schemaFrom = "annotated")
     val streams = valid.select("stream").distinct().collect().map(_.getString(0)).toSet
     assert(streams == Set("strict", "lax"), s"got $streams") // only streams with passing rows
     // the physical layout routes per (status, stream) directory
@@ -172,8 +172,7 @@ class MultiStreamSpec extends SparkSpec {
 
     // resume: nothing reprocesses
     calls = Vector.empty
-    val m2 = new MultiStreamValidationJob(spark, log, registry, idField = "doc_id", commitBatch = 2)
-      .run(inputFor, Seq(0, 1, 2))
+    val m2 = job(log, commitBatch = 2).run(inputFor, Seq(0, 1, 2))
     assert(calls.isEmpty && m2.snapshotId == m.snapshotId)
   }
 
@@ -196,7 +195,7 @@ class MultiStreamSpec extends SparkSpec {
       ("b", "short", null, "mediawiki.revision_create"), // regex → lax: success
       ("c", "short", null, "eventlogging.click") // unroutable: error
     ).toDF("doc_id", "text", "source", "stream")
-    val res = new MultiStreamEngine(reg, EngineOptions(snapshotId = "rx", idField = "doc_id")).process(df)
+    val res = routed(reg, "rx").process(df)
     val status = res.annotated.select("doc_id", "status").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(status("a") == Status.Invalid)
@@ -264,9 +263,7 @@ class MultiStreamSpec extends SparkSpec {
       ("b", "some text", "src", null, "/cool/schema/uri"),
       ("c", "some text", "src", null, "/unknown!uri")
     ).toDF("doc_id", "text", "source", "stream", "schema_uri")
-    val res = new MultiStreamEngine(
-      reg, EngineOptions(snapshotId = "uri", idField = "doc_id"), schemaUriCol = Some("schema_uri")
-    ).process(df)
+    val res = routed(reg, "uri", schemaUriCols = Seq("schema_uri")).process(df)
     val byId = res.annotated.select("doc_id", "stream", "status").collect()
       .map(r => r.getString(0) -> ((r.getString(1), r.getString(2)))).toMap
     assert(byId("a") == ("explicit_stream", Status.Success))
@@ -288,9 +285,9 @@ class MultiStreamSpec extends SparkSpec {
       ("b", "some text", "src", null, "/fallback!uri"), // first null → second wins
       ("c", "some text", "src", null, null) // all null → unroutable → error
     ).toDF("doc_id", "text", "source", "meta_uri", "legacy_uri")
-    val res = new MultiStreamEngine(
+    val res = routed(
       reg,
-      EngineOptions(snapshotId = "uri_arr", idField = "doc_id"),
+      "uri_arr",
       // "ghost_uri" is not a column of this frame — the reference skips
       // non-existent configured fields; the engine must too.
       schemaUriCols = Seq("ghost_uri", "meta_uri", "legacy_uri")
@@ -327,8 +324,8 @@ class MultiStreamSpec extends SparkSpec {
     val reg = ConstraintRegistry(
       Seq(ConstraintSet("test/0.0.1", Seq.empty, Seq(JsonTypeIs("test", "string", "raw")))),
       routes = Map("test.event" -> "test/0.0.1"))
-    val res = new MultiStreamEngine(
-      reg, EngineOptions(snapshotId = "intake", idField = "id"),
+    val res = routed(
+      reg, "intake", idField = "id",
       schemaUriCols = Seq("$schema") // parse-failed rows: stream AND uri null → unroutable → error
     ).process(parsed)
     val rows = res.annotated
@@ -347,17 +344,16 @@ class MultiStreamSpec extends SparkSpec {
   }
 
   test("readValid on an all-failing chain is an empty frame, not an error") {
-    import graft.table.{MultiStreamValidationJob, SnapshotLog}
+    import graft.table.SnapshotLog
     val log = new SnapshotLog(
       Files.createTempDirectory("graft_msfail").toString,
       spark.sparkContext.hadoopConfiguration
     )
     val allBad = batch.filter(col("doc_id").isNull || col("doc_id") === "a") // invalid under strict only
       .withColumn("stream", lit("strict"))
-    val m = new MultiStreamValidationJob(spark, log, registry, idField = "doc_id")
-      .run(_ => allBad, Seq(0))
+    val m = job(log).run(_ => allBad, Seq(0))
     assert(m.metrics("n_success") == 0 && m.metrics("n_invalid") > 0)
-    val valid = MultiStreamValidationJob.readValid(spark, log, m)
+    val valid = log.readTableOrEmpty(spark, m, "valid", schemaFrom = "annotated")
     assert(valid.isEmpty && valid.columns.contains("stream")) // empty, schema intact
   }
 
@@ -367,7 +363,7 @@ class MultiStreamSpec extends SparkSpec {
     // batch totals come from an Observation attached to the annotated
     // write, so one batch costs: write_annotated + rollup-agg/write +
     // violations-gate/write (+ parquet-footer metadata jobs).
-    import graft.table.{MultiStreamValidationJob, SnapshotLog}
+    import graft.table.SnapshotLog
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val log = new SnapshotLog(
       Files.createTempDirectory("graft_msjobs").toString,
@@ -379,8 +375,7 @@ class MultiStreamSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(l)
     val m =
-      try new MultiStreamValidationJob(spark, log, registry, idField = "doc_id", commitBatch = 4)
-        .run(_ => batch, Seq(0, 1, 2, 3))
+      try job(log, commitBatch = 4).run(_ => batch, Seq(0, 1, 2, 3))
       finally {
         org.apache.spark.sql.GraftFunctions.drainSharedListeners(spark.sparkContext)
         spark.sparkContext.removeSparkListener(l)

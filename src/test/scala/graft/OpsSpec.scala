@@ -43,7 +43,7 @@ class OpsSpec extends SparkSpec {
     for (arr <- cases; (nh, nb) <- Seq((64, 16), (64, 32), (32, 16), (8, 8))) {
       val in = new GenericArrayData(arr.asInstanceOf[Array[Any]])
       val fast = graft.functions.MinHashUtil.bandKeys(in, graft.functions.MinHashUtil.laneBases(nh), nb).toLongArray()
-      val ref = graft.functions.MinHashUtil.bandKeysReference(in, nh, nb).toLongArray()
+      val ref = MinHashReference.bandKeysReference(in, nh, nb).toLongArray()
       assert(fast.sameElements(ref), s"nh=$nh nb=$nb n=${arr.length}")
     }
   }
@@ -908,7 +908,7 @@ class OpsSpec extends SparkSpec {
         .select("grp", "rank", "id").as[(String, Int, Long)].collect().toSet
       assert(agg == plain, s"k=$k agg:\n${agg diff plain}\n${plain diff agg}")
       for (fanout <- Seq(2, 64)) {
-        val salted = graft.ops.TopK.topKPerGroupSalted(df, Seq("grp"),
+        val salted = TopKReference.topKPerGroupSalted(df, Seq("grp"),
           Seq(col("v") -> false, col("id") -> true), k, fanout = fanout)
           .select("grp", "rank", "id").as[(String, Int, Long)].collect().toSet
         assert(salted == plain, s"k=$k fanout=$fanout:\n${salted diff plain}\n${plain diff salted}")

@@ -91,7 +91,7 @@ class PlanSpec extends SparkSpec {
     Seq(("x", "hello", "sa"), ("y", "hi", "sb.topic")).toDF("doc_id", "text", "stream")
       .write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir)
-    val res = new MultiStreamEngine(reg, EngineOptions(snapshotId = "p", idField = "doc_id")).process(df)
+    val res = new ValidationEngine(reg, EngineOptions(snapshotId = "p", idField = "doc_id"), Some("stream"), Nil).process(df)
     val p = plan(res.annotated.filter(col("status") =!= "zzz"))
     // route resolution is the codegen'd expression (inside a `*(n)`
     // whole-stage-codegen'd Project), not a when-chain of per-route string
@@ -284,6 +284,39 @@ class PlanSpec extends SparkSpec {
     val p = res.violations.queryExecution.optimizedPlan.toString
     assert(!p.contains("Union"), s"violations plan re-unions the annotated subtree:\n${p.take(1500)}")
     assert(p.contains("Generate"), s"expected the single explode pass:\n${p.take(800)}")
+  }
+
+  test("multi-stream violations are one pass: no Union, one scan of the input") {
+    import spark.implicits._
+    import graft.constraint._
+    import graft.engine._
+    val reg = ConstraintRegistry(
+      Seq(ConstraintSet("a/1", Seq.empty, Seq(NonNull("doc_id"))),
+        ConstraintSet("b/1", Seq.empty, Seq(NonNull("doc_id"), MinLength("text", 3)))),
+      routes = Map("sa" -> "a/1", "sb" -> "b/1"))
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_msvio").toString
+    Seq(("x", "hello", "sa"), ("y", "hi", "sb"), (null, "hey", "sc")).toDF("doc_id", "text", "stream")
+      .write.mode("overwrite").parquet(dir)
+    val res = new ValidationEngine(reg, EngineOptions(snapshotId = "p", idField = "doc_id"), Some("stream"), Nil)
+      .process(spark.read.parquet(dir))
+    val opt = res.violations.queryExecution.optimizedPlan.toString
+    assert(!opt.contains("Union"), s"multi-stream violations re-union the annotated subtree:\n${opt.take(1500)}")
+    val p = plan(res.violations)
+    val scans = p.linesIterator.count(l => l.contains("FileScan") || l.contains("Scan parquet"))
+    assert(scans == 1, s"expected one scan of the input, got $scans:\n${p.take(3000)}")
+    assert(res.violations.count() == 2) // y fails MinLength under b/1, sc is unrouted
+  }
+
+  test("single-set engine plans no route column and no per-set CASE") {
+    import graft.engine._
+    val imgs = graft.gen.SyntheticImages.images(spark, 100, 2).toDF()
+    val cs = ImageConstraints.v1
+    val annotated = new ValidationEngine(cs, EngineOptions(snapshotId = "planspec")).process(imgs).annotated
+    assert(!annotated.columns.contains("_set_id"))
+    val p = annotated.queryExecution.optimizedPlan.toString
+    assert(!p.contains("_set_id"), s"route column in the single-set plan:\n${p.take(1500)}")
+    // the set version would appear only in a CASE WHEN on the routed version
+    assert(!p.contains(cs.version), s"per-set dispatch survived optimization:\n${p.take(3000)}")
   }
 
   test("LM perplexity: count models partially aggregate; V rides a single-row broadcast") {

@@ -52,7 +52,7 @@ class SketchSpec extends SparkSpec {
 
   test("sql profile and treeAggregate profile agree") {
     val p1 = ColumnProfiler.profile(imgs)
-    val p2 = ColumnProfiler.profileTree(imgs, depth = 2)
+    val p2 = ProfilerReference.profileTree(imgs, depth = 2)
     assert(p1.nRows == p2.nRows)
     assert(math.abs(p1.distinctImageIds - p2.distinctImageIds) / p1.distinctImageIds < 0.01)
     Seq(0.25, 0.5, 0.75).foreach { q =>

@@ -515,28 +515,47 @@ class SnapshotSpec extends SparkSpec {
 
   test("task_ms_* in the manifest equal an independently drained listener's totals") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-    val stageGroup = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val taskMs = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(g => js.stageIds.foreach(stageGroup.put(_, g)))
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        Option(stageGroup.get(te.stageId)).foreach { g =>
-          val ms = Option(te.taskMetrics).map(_.executorRunTime).getOrElse(0L)
-          taskMs.merge(g, java.lang.Long.valueOf(ms), (a, b) => java.lang.Long.valueOf(a + b))
-        }
+    import graft.constraint.MinLength
+    import graft.engine.{ConstraintRegistry, EngineOptions, ValidationEngine}
+    import spark.implicits._
+    // the same job over the single-stream route and over a two-stream registry
+    val registry = ConstraintRegistry(
+      Seq(ConstraintSet("doc/2.0.0", Seq.empty, Seq(NonNull("doc_id"), MinLength("text", 10))),
+        ConstraintSet("doc/1.0.0", Seq.empty, Seq(NonNull("doc_id")))),
+      routes = Map("strict" -> "doc/2.0.0", "lax" -> "doc/1.0.0"))
+    def docs(p: Int): DataFrame =
+      Seq((s"p${p}_a", "short", "strict"), (s"p${p}_b", "a perfectly long text", "strict"),
+        (s"p${p}_c", "short", "lax"), (s"p${p}_d", "short", "nowhere")).toDF("doc_id", "text", "stream")
+    val routedJob = (log: SnapshotLog) => new ValidationJob(spark, log,
+      new ValidationEngine(registry, EngineOptions(idField = "doc_id"), Some("stream"), Nil), "explicit",
+      profileColumns = true, suppressViolations = None, commitBatch = 2,
+      violationsSchema = Some(ValidationJob.violationsSchemaV1)).run(docs, Seq(0, 1, 2, 3))
+    val singleJob = (log: SnapshotLog) =>
+      new ValidationJob(spark, log, ImageConstraints.v1, commitBatch = 2).run(inputFor, Seq(0, 1, 2, 3))
+    for ((route, runJob) <- Seq("single-stream" -> singleJob, "two-stream" -> routedJob)) {
+      val stageGroup = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+      val taskMs = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+      val l = new SparkListener {
+        override def onJobStart(js: SparkListenerJobStart): Unit =
+          Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+            .foreach(g => js.stageIds.foreach(stageGroup.put(_, g)))
+        override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+          Option(stageGroup.get(te.stageId)).foreach { g =>
+            val ms = Option(te.taskMetrics).map(_.executorRunTime).getOrElse(0L)
+            taskMs.merge(g, java.lang.Long.valueOf(ms), (a, b) => java.lang.Long.valueOf(a + b))
+          }
+      }
+      spark.sparkContext.addSparkListener(l)
+      val m =
+        try {
+          val run = runJob(newLog())
+          assert(org.apache.spark.sql.GraftFunctions.drainSharedListeners(spark.sparkContext))
+          run
+        } finally spark.sparkContext.removeSparkListener(l)
+      assert(m.metrics("task_ms_write_annotated") > 0L, route)
+      for (phase <- Seq("write_annotated", "write_violations", "write_rollups"))
+        assert(m.metrics.get(s"task_ms_$phase") == Option(taskMs.get(phase)).map(_.longValue),
+          s"$route $phase: manifest ${m.metrics.get(s"task_ms_$phase")} vs listener ${taskMs.get(phase)}")
     }
-    spark.sparkContext.addSparkListener(l)
-    val m =
-      try {
-        val run = new ValidationJob(spark, newLog(), ImageConstraints.v1, commitBatch = 2).run(inputFor, Seq(0, 1, 2, 3))
-        assert(org.apache.spark.sql.GraftFunctions.drainSharedListeners(spark.sparkContext))
-        run
-      } finally spark.sparkContext.removeSparkListener(l)
-    assert(m.metrics("task_ms_write_annotated") > 0L)
-    for (phase <- Seq("write_annotated", "write_violations", "write_rollups"))
-      assert(m.metrics.get(s"task_ms_$phase") == Option(taskMs.get(phase)).map(_.longValue),
-        s"$phase: manifest ${m.metrics.get(s"task_ms_$phase")} vs listener ${taskMs.get(phase)}")
   }
 }

@@ -11,6 +11,8 @@ import graft.streaming.StreamingValidation
 
 class StreamingSpec extends SparkSpec {
 
+  private val v1Gate = new ValidationEngine(ImageConstraints.v1)
+
   test("foreachBatch gate: streaming output == batch engine output") {
     val src = Files.createTempDirectory("graft_stream_src").toString
     val out = Files.createTempDirectory("graft_stream_out").toString
@@ -53,7 +55,7 @@ class StreamingSpec extends SparkSpec {
     val imgs = SyntheticImages.images(spark, 800, 2).toDF()
     imgs.write.mode("overwrite").parquet(src)
 
-    val q = StreamingValidation.startSnapshotted(spark, src, imgs.schema, ImageConstraints.v1, log, ckpt)
+    val q = StreamingValidation.startSnapshotted(spark, src, imgs.schema, v1Gate, log, ckpt)
     q.awaitTermination()
 
     val head = log.head.get
@@ -65,7 +67,7 @@ class StreamingSpec extends SparkSpec {
 
     // restart on the same checkpoint: no new micro-batch, no new commits
     val seqBefore = head.sequence
-    val q2 = StreamingValidation.startSnapshotted(spark, src, imgs.schema, ImageConstraints.v1, log, ckpt)
+    val q2 = StreamingValidation.startSnapshotted(spark, src, imgs.schema, v1Gate, log, ckpt)
     q2.awaitTermination()
     assert(log.head.get.sequence == seqBefore)
   }
@@ -76,7 +78,7 @@ class StreamingSpec extends SparkSpec {
     val imgs = SyntheticImages.images(spark, 400, 2).toDF()
 
     // batch 0 commits cleanly
-    assert(StreamingValidation.processAndCommit(log, ImageConstraints.v1, imgs, 0L).isDefined)
+    assert(StreamingValidation.processAndCommit(log, v1Gate, imgs, 0L).isDefined)
     val head0 = log.head.get
     val validBefore = log.readTable(spark, head0, "valid").count()
 
@@ -87,15 +89,15 @@ class StreamingSpec extends SparkSpec {
       "caption",
       when(col("w") % 97 === 0, raise_error(lit("simulated mid-batch crash"))).otherwise(col("caption"))
     )
-    intercept[Exception](StreamingValidation.processAndCommit(log, ImageConstraints.v1, poisoned, 1L))
+    intercept[Exception](StreamingValidation.processAndCommit(log, v1Gate, poisoned, 1L))
     assert(log.head.get.snapshotId == head0.snapshotId, "crash must not advance HEAD")
     assert(log.readTable(spark, log.head.get, "valid").count() == validBefore)
 
     // retry of batch 1 (foreachBatch re-delivery) succeeds and commits once
-    assert(StreamingValidation.processAndCommit(log, ImageConstraints.v1, imgs, 1L).isDefined)
+    assert(StreamingValidation.processAndCommit(log, v1Gate, imgs, 1L).isDefined)
     val afterRetry = log.head.get
     // a SECOND replay of batch 1 is a no-op: exactly-once visibility
-    assert(StreamingValidation.processAndCommit(log, ImageConstraints.v1, imgs, 1L).isEmpty)
+    assert(StreamingValidation.processAndCommit(log, v1Gate, imgs, 1L).isEmpty)
     assert(log.head.get.snapshotId == afterRetry.snapshotId)
     assert(log.readTable(spark, log.head.get, "valid").count() == 2 * validBefore)
   }
@@ -112,26 +114,26 @@ class StreamingSpec extends SparkSpec {
     val id1 = StreamingValidation.checkpointIdentity(spark, ckptDir)
     assert(StreamingValidation.checkpointIdentity(spark, ckptDir) == id1) // stable
 
-    assert(StreamingValidation.processAndCommit(log, ImageConstraints.v1, imgs, 0L, id1).isDefined)
-    assert(StreamingValidation.processAndCommit(log, ImageConstraints.v1, imgs, 0L, id1).isEmpty) // replay skipped
+    assert(StreamingValidation.processAndCommit(log, v1Gate, imgs, 0L, id1).isDefined)
+    assert(StreamingValidation.processAndCommit(log, v1Gate, imgs, 0L, id1).isEmpty) // replay skipped
 
     // recreate the checkpoint dir: new identity, so batch 0 commits again
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckptDir))
     val id2 = StreamingValidation.checkpointIdentity(spark, ckptDir)
     assert(id2 != id1)
-    assert(StreamingValidation.processAndCommit(log, ImageConstraints.v1, imgs, 0L, id2).isDefined)
+    assert(StreamingValidation.processAndCommit(log, v1Gate, imgs, 0L, id2).isDefined)
 
     // batch ids are compared as Long — no 2^31 truncation aliasing
     val bigId = (1L << 33) + 5L
-    assert(StreamingValidation.processAndCommit(log, ImageConstraints.v1, imgs, bigId, id2).isDefined)
-    assert(StreamingValidation.processAndCommit(log, ImageConstraints.v1, imgs, bigId, id2).isEmpty)
+    assert(StreamingValidation.processAndCommit(log, v1Gate, imgs, bigId, id2).isDefined)
+    assert(StreamingValidation.processAndCommit(log, v1Gate, imgs, bigId, id2).isEmpty)
     assert(log.committedStreamBatches(log.head.get, id2) == Set(0L, bigId))
   }
 
   test("multi-stream streaming gate: heterogeneous micro-batches, per-stream atomic fan-out") {
     import spark.implicits._
     import graft.constraint._
-    import graft.engine.ConstraintRegistry
+    import graft.engine.{ConstraintRegistry, EngineOptions}
     val src = Files.createTempDirectory("graft_ms_src").toString
     val ckpt = Files.createTempDirectory("graft_ms_ckpt").toString
     val log = new graft.table.SnapshotLog(
@@ -146,7 +148,8 @@ class StreamingSpec extends SparkSpec {
       .toDF("id", "text", "stream")
     rows.write.mode("overwrite").parquet(src)
 
-    val q = StreamingValidation.startMultiStream(spark, src, rows.schema, reg, log, ckpt, idField = "id")
+    val gate = new ValidationEngine(reg, EngineOptions(idField = "id"), Some("stream"), Nil)
+    val q = StreamingValidation.startSnapshotted(spark, src, rows.schema, gate, log, ckpt)
     q.awaitTermination()
 
     val head = log.head.get
@@ -163,7 +166,7 @@ class StreamingSpec extends SparkSpec {
 
     // restart on same checkpoint: no duplicate commits
     val seqBefore = head.sequence
-    val q2 = StreamingValidation.startMultiStream(spark, src, rows.schema, reg, log, ckpt, idField = "id")
+    val q2 = StreamingValidation.startSnapshotted(spark, src, rows.schema, gate, log, ckpt)
     q2.awaitTermination()
     assert(log.head.get.sequence == seqBefore)
   }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.constraint.{ConstraintSet, MinLength, NonNull}
-import graft.engine.{ConstraintRegistry, ImageConstraints}
+import graft.engine.{ConstraintRegistry, EngineOptions, ImageConstraints, ValidationEngine}
 import graft.gen.SyntheticImages
 
 /** The commit batch's input relation: one scan for file-backed partitions,
@@ -90,7 +90,10 @@ class BatchInputSpec extends SparkSpec {
     }
     def run(inputFor: Int => DataFrame): (Manifest, SnapshotLog) = {
       val log = newLog()
-      (new MultiStreamValidationJob(spark, log, registry, idField = "doc_id").run(inputFor, 0 until 3), log)
+      val engine = new ValidationEngine(registry, EngineOptions(idField = "doc_id"), Some("stream"), Nil)
+      val job = new ValidationJob(spark, log, engine, "explicit", profileColumns = true, suppressViolations = None,
+        commitBatch = 8, violationsSchema = Some(ValidationJob.violationsSchemaV1))
+      (job.run(inputFor, 0 until 3), log)
     }
     val (a, logA) = run(p => spark.read.parquet(docDirs(p)))
     val (b, logB) = run(p => spark.read.parquet(docDirs(p)).where(lit(true)))
