@@ -98,9 +98,11 @@ object Dedup extends Logging {
     * unreachable from executors on a real cluster): `spark.graft.spill.dir`
     * if set, else `<spark.sql.warehouse.dir>/graft-spill` — both resolved
     * through the Hadoop filesystem of the path, so any shared FS works.
-    * Cleanup is left to Hadoop `deleteOnExit`, which acts only when the
-    * FileSystem closes at JVM exit: every call leaves one directory behind
-    * for at least the life of the JVM.
+    * Cleanup is left to Hadoop `deleteOnExit` on the session's (cached)
+    * filesystem, which deletes the directory when that filesystem closes at
+    * JVM exit: every call keeps one directory for the life of the JVM. The
+    * path is registered after the write, because `deleteOnExit` ignores a
+    * path that does not exist yet.
     */
   private def materializeSigs(df: DataFrame, tag: String): DataFrame = {
     val spark = df.sparkSession
@@ -108,9 +110,8 @@ object Dedup extends Logging {
       .getOrElse(spark.conf.get("spark.sql.warehouse.dir") + "/graft-spill")
     val path = new org.apache.hadoop.fs.Path(
       root, s"lsh-$tag-${java.util.UUID.randomUUID()}")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.deleteOnExit(path)
-    df.write.mode("overwrite").parquet(path.toString)
+    df.write.options(graft.table.LocalFs.options(spark)).mode("overwrite").parquet(path.toString)
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration).deleteOnExit(path)
     spark.read.parquet(path.toString)
   }
 

@@ -202,11 +202,11 @@ object Similarity {
       val seq = log.head.map(_.sequence + 1).getOrElse(1L)
       val nonce = java.util.UUID.randomUUID().toString.take(8)
       val aPath = log.dataDir(f"$tag%s-$seq%08d-$nonce%s-assignments", "ivf_assignments")
-      index.assigned.write.mode("overwrite").parquet(aPath)
+      index.assigned.write.options(graft.table.LocalFs.options(spark)).mode("overwrite").parquet(aPath)
       val cDf = index.centroids.toSeq.map { case (b, c) => (b, c.toSeq) }
         .toDF("bucket", "centroid")
       val cPath = log.dataDir(f"$tag%s-$seq%08d-$nonce%s-centroids", "ivf_centroids")
-      cDf.coalesce(1).write.mode("overwrite").parquet(cPath)
+      cDf.coalesce(1).write.options(graft.table.LocalFs.options(spark)).mode("overwrite").parquet(cPath)
       log.commit(graft.table.Manifest(
         snapshotId = "", sequence = 0L, parentId = log.head.map(_.snapshotId),
         constraintVersion = s"ivf/${index.centroids.length}", partitionSpec = tag,

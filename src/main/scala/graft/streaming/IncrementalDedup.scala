@@ -5,7 +5,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.ops.Dedup
-import graft.table.{Manifest, SnapshotLog}
+import graft.table.{LocalFs, Manifest, SnapshotLog}
 
 /** Incremental corpus dedup riding the snapshot log — the composed
   * production loop: documents arrive as commits to a [[SnapshotLog]]
@@ -120,7 +120,7 @@ final class IncrementalDedup(
     // attempt leaves an uncommitted, invisible orphan dir.
     val nonce = java.util.UUID.randomUUID().toString.take(8)
     val dir = sigLog.dataDir(f"dedupkeys-rebuild-${head.sequence + 1}%08d-$nonce%s", KeysTable)
-    keys.write.mode("overwrite").parquet(dir)
+    keys.write.options(LocalFs.options(spark)).mode("overwrite").parquet(dir)
     sigLog.commit(Manifest(
       snapshotId = "", sequence = 0L, parentId = Some(head.snapshotId),
       constraintVersion = head.constraintVersion, partitionSpec = "keys-rebuild",
@@ -203,13 +203,13 @@ final class IncrementalDedup(
             .getOrElse(sliceSigs)
           if (!newSigs.isEmpty) {
             val dir = sigLog.dataDir(f"dedupsigs-$from%08d-$to%08d", SigTable)
-            newSigs.write.mode("overwrite").parquet(dir)
+            newSigs.write.options(LocalFs.options(spark)).mode("overwrite").parquet(dir)
             // Keys twin of the same rows, SAME commit: a chain where some
             // sig commit lacks its keys entry would disable the stored-keys
             // probe path forever (keysComplete).
             val keysDir = sigLog.dataDir(f"dedupkeys-$from%08d-$to%08d", KeysTable)
             val newKeys = Dedup.explodedBandKeys(newSigs)
-            newKeys.write.mode("overwrite").parquet(keysDir)
+            newKeys.write.options(LocalFs.options(spark)).mode("overwrite").parquet(keysDir)
             if (!head.exists(m => sigLog.tablePaths(m, SigTable).contains(dir)))
               sigLog.commit(Manifest(
                 snapshotId = "", sequence = 0L, // assigned by commit

@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.table.SnapshotLog
+import graft.table.{LocalFs, SnapshotLog}
 
 /** Durable incremental consumer over a [[SnapshotLog]] table — the
   * downstream half of `readTableChanges`: a training-data pipeline that
@@ -38,7 +38,8 @@ final class SnapshotFollower(
     conf: org.apache.hadoop.conf.Configuration
 ) {
 
-  private def fs = new Path(cursorDir).getFileSystem(conf)
+  private lazy val fsConf = LocalFs.conf(conf) // fork-free cursor writes on `file:` dirs
+  private def fs = new Path(cursorDir).getFileSystem(fsConf)
   private def cursorPath = new Path(cursorDir, s"cursor-$table.txt")
   private def cursorTmp = new Path(cursorDir, s".cursor-$table.tmp")
 

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 
 import graft.ops.Dedup
-import graft.table.{Manifest, SnapshotLog}
+import graft.table.{LocalFs, Manifest, SnapshotLog}
 
 /** foreachBatch near-dup GATE — [[StreamingValidation.processAndCommit]]'s
   * dedup sibling: each micro-batch of documents is paired against the
@@ -53,7 +53,7 @@ object StreamingDedup {
     val spark = batch.sparkSession
     val dir = sigLog.dataDir(s"stream-dedup-$checkpointId-$batchId", SigTable)
     Dedup.minhashSignatures(batch, idCol, textCol, shingleK, numHashes, numBands)
-      .write.mode("overwrite").parquet(dir) // deterministic tag: replay overwrites itself
+      .write.options(LocalFs.options(spark)).mode("overwrite").parquet(dir) // deterministic tag: replay overwrites itself
     val batchSigs = spark.read.parquet(dir)
     val corpusSigs = head
       .filter(m => sigLog.tablePaths(m, SigTable).nonEmpty)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.StructType
 
 import graft.constraint.ConstraintSet
 import graft.engine.{EngineOptions, ValidationEngine}
-import graft.table.{Manifest, SnapshotLog, ValidationJob}
+import graft.table.{LocalFs, Manifest, SnapshotLog, ValidationJob}
 
 /** Streaming face of the gate. The reference is an unbounded intake loop in
   * which each HTTP batch is processed independently
@@ -29,12 +29,13 @@ object StreamingValidation {
       checkpointDir: String
   ): StreamingQuery = {
     val stream = spark.readStream.schema(schema).parquet(sourceDir)
+    val fsOpts = LocalFs.options(spark)
     stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val res = new ValidationEngine(cs, EngineOptions(snapshotId = s"batch-$batchId")).process(batch)
-        res.valid.write.mode("append").parquet(s"$outDir/valid")
-        res.violations.write.mode("append").parquet(s"$outDir/violations")
-        res.rollups.write.mode("append").parquet(s"$outDir/rollups")
+        res.valid.write.options(fsOpts).mode("append").parquet(s"$outDir/valid")
+        res.violations.write.options(fsOpts).mode("append").parquet(s"$outDir/violations")
+        res.rollups.write.options(fsOpts).mode("append").parquet(s"$outDir/rollups")
         ()
       }
       .option("checkpointLocation", checkpointDir)
@@ -91,7 +92,7 @@ object StreamingValidation {
     */
   def checkpointIdentity(spark: SparkSession, checkpointDir: String): String = {
     val p = new org.apache.hadoop.fs.Path(checkpointDir, "graft-identity")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = p.getFileSystem(LocalFs.conf(spark.sparkContext.hadoopConfiguration))
     if (fs.exists(p)) {
       val in = fs.open(p)
       try scala.io.Source.fromInputStream(in).mkString.trim

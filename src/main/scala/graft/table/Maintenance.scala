@@ -1,6 +1,6 @@
 package graft.table
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
@@ -54,6 +54,22 @@ object Maintenance {
     */
   private val routeDirs: Seq[(String, String)] = Seq("statusd" -> "status", "streamd" -> "stream")
 
+  /** Data files under `root`, recursively. Names starting with `_` or `.`
+    * (commit markers, checksums) are not data: counting a `_SUCCESS` marker
+    * would halve a one-file root's mean file size. Listed with `listStatus`:
+    * `listFiles` copies each status's permission, which Hadoop's local
+    * filesystem reads by starting an `ls` process per file.
+    */
+  private def dataFiles(log: SnapshotLog, root: String): Seq[FileStatus] = {
+    val fs = log.fs
+    def walk(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq.flatMap { st =>
+      if (st.isDirectory) walk(st.getPath)
+      else if (st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith(".")) Nil
+      else Seq(st)
+    }
+    walk(new Path(root))
+  }
+
   /** Rewrite `table` (as of HEAD) into size-targeted files under one root
     * and commit the replacement. Clustering: route columns first (so each
     * statusd/streamd directory's rows land in few files), then
@@ -103,10 +119,9 @@ object Maintenance {
     val allPaths = log.tablePaths(head, table)
     require(allPaths.nonEmpty, s"compact: table $table has no data in ${head.snapshotId}")
 
-    val fs = log.fs
     val sized = allPaths.map { p =>
-      val s = fs.getContentSummary(new Path(p))
-      (p, s.getFileCount, s.getLength)
+      val files = dataFiles(log, p)
+      (p, files.size.toLong, files.map(_.getLen).sum)
     }
     val filesBefore = sized.map(_._2).sum
     val threshold = rewriteThresholdBytes.getOrElse(Long.MaxValue)
@@ -161,7 +176,7 @@ object Maintenance {
     val routed = routes.foldLeft(shaped) { case (d, (dir, src)) => d.withColumn(dir, col(src)) }
 
     val newRoot = log.dataDir(f"compact-${head.sequence + 1}%08d", table)
-    val writer = routed.write.mode("overwrite")
+    val writer = routed.write.options(LocalFs.options(spark)).mode("overwrite")
     (if (routes.nonEmpty) writer.partitionBy(routes.map(_._1): _*) else writer).parquet(newRoot)
 
     // `valid` is a subtree view of `annotated`; swap both under one commit.
@@ -193,8 +208,7 @@ object Maintenance {
         tableSchemas = tables.keys.map(_ -> df.schema.json).toMap
       )
     )
-    val filesAfter =
-      fs.getContentSummary(new Path(newRoot)).getFileCount + keep.map(_._2).sum
+    val filesAfter = dataFiles(log, newRoot).size + keep.map(_._2).sum
     CompactionStats(committed, filesBefore, filesAfter, bytesBefore)
   }
 

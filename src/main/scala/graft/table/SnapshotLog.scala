@@ -80,11 +80,17 @@ final case class Manifest(
   * `<root>/snapshots/`, committed by write-to-temp + atomic rename (atomic
   * on HDFS and on local fs). HEAD = highest committed sequence — derived by
   * listing, so there is no second pointer file to keep consistent.
+  *
+  * On a `file:` root the log opens its filesystem from one copy of `conf`
+  * with [[LocalFs]]'s keys: manifest commits, checkpoints and the rename
+  * check set file modes with a syscall instead of a forked `chmod`, `.crc`
+  * checksums are still written, and `conf` itself is left as it was.
   */
 final class SnapshotLog(val root: String, conf: Configuration) extends Serializable {
 
   @transient private lazy val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
-  private[table] def fs: FileSystem = new Path(root).getFileSystem(conf)
+  @transient private lazy val fsConf = LocalFs.conf(conf)
+  private[table] def fs: FileSystem = new Path(root).getFileSystem(fsConf)
   private[table] def snapDir = new Path(root, "snapshots")
 
   // No '=' in layout segments: key=value-shaped directory names engage

@@ -59,6 +59,11 @@ import graft.sketch.Sketches
   * The input is never scanned a second time: at 10^12 rows this is the
   * difference between one and three full passes.
   *
+  * The three writes go through [[LocalFs]]: on a `file:` table each data
+  * file, its `.crc` and each new directory get their mode from a syscall,
+  * not a forked `chmod` (one per file and directory without libhadoop),
+  * and no `_SUCCESS` marker is written — the manifest is the commit point.
+  *
   * Violation re-ingest: the reference maps failures to error EVENTS and
   * pushes them back through the same gate, validating them against the
   * error schema (/root/reference/lib/eventgate.js:243-270,
@@ -148,6 +153,7 @@ final class ValidationJob(
     val vioPath = log.dataDir(tag, "violations")
     val rollPath = log.dataDir(tag, "rollups")
 
+    val fsOpts = LocalFs.options(spark)
     val listener = new PhaseListener
     spark.sparkContext.addSparkListener(listener)
     try {
@@ -194,7 +200,8 @@ final class ValidationJob(
       phase("write_annotated") {
         val observed = annFrame.observe(statsObs, statExprs.head, statExprs.tail: _*).withColumn("statusd", col("status"))
         streamCol.fold(observed)(s => observed.withColumn("streamd", col(s)))
-          .write.mode("overwrite").partitionBy("statusd" +: streamCol.map(_ => "streamd").toSeq: _*).parquet(annotatedPath)
+          .write.options(fsOpts).mode("overwrite")
+          .partitionBy("statusd" +: streamCol.map(_ => "streamd").toSeq: _*).parquet(annotatedPath)
       }
       val stats = statsObs.get
       def cnt(k: String): Long = stats(k).asInstanceOf[Long]
@@ -234,7 +241,7 @@ final class ValidationJob(
             .select(kept.columns.toIndexedSeq.map(c => if (c == "status") col("violation_status").as("status") else col(c)): _*)
       }
       phase("write_violations") {
-        gated.write.mode("overwrite").parquet(vioPath)
+        gated.write.options(fsOpts).mode("overwrite").parquet(vioPath)
       }
       val rejected: Long =
         if (violationsSchema.isEmpty) 0L
@@ -255,7 +262,7 @@ final class ValidationJob(
           ValidationEngine.rollupRows(ann, snapshotId, streamCol)
       }
       phase("write_rollups") {
-        rollups.coalesce(1).write.mode("overwrite").parquet(rollPath)
+        rollups.coalesce(1).write.options(fsOpts).mode("overwrite").parquet(rollPath)
       }
 
       val prevSketches = parent.map(_.sketches).getOrElse(Map.empty)

@@ -148,6 +148,81 @@ class LshBucketSpec extends SparkSpec {
     }
   }
 
+  /** Observed `lsh_dropped_rows` of the named cap after an action on `df`. */
+  private def drops(df: DataFrame, name: String): Long = {
+    val m = df.queryExecution.observedMetrics(name)
+    if (m.isNullAt(0)) 0L else m.getLong(0)
+  }
+
+  test("cross-side and span caps: observed drops equal a plain-Scala sum of over-cap bucket sizes") {
+    val words = Vector("amber", "birch", "cedar", "dune", "elm", "fern", "gale", "heath", "ivy", "juniper", "kelp", "larch")
+    def text() = Seq.fill(10 + rnd.nextInt(10))(words(rnd.nextInt(words.length))).mkString(" ")
+    val corpus0 = (0L until 150L).map(i => (Option(i), Option(text())))
+    val corpus = (corpus0 ++ (0L until 40L).map(i => (Option(500L + i), Option("one hot corpus caption"))) :+
+      ((Option.empty[Long], Option("one hot corpus caption")))).toDF("doc_id", "text").repartition(3)
+    val incoming = (corpus0.take(30).map { case (i, t) => (i.map(_ + 1000L), t.map(_ + " oak")) } ++
+      (0L until 25L).map(i => (Option(2000L + i), Option("one hot corpus caption"))) ++
+      (0L until 30L).map(i => (Option(3000L + i), Option(text())))).toDF("doc_id", "text").repartition(2)
+    def bandKeys(df: DataFrame) = Dedup.minhashSignatures(df, "doc_id", "text", 5, 32, 16).select("bands").collect()
+      .toSeq.flatMap(r => if (r.isNullAt(0)) Nil else r.getSeq[Long](0).zipWithIndex.map { case (k, b) => Seq[Any](b, k) })
+    for (cap <- Seq(20, 30, 45)) {
+      val pairs = Dedup.minhashPairsAgainst(corpus, incoming, "doc_id", "text", numHashes = 32, numBands = 16,
+        threshold = 0.5, maxBucket = cap, materializeIncoming = cap != 30)
+      assert(pairs.collect().nonEmpty)
+      assert(drops(pairs, "lsh_buckets") == localDrops(bandKeys(corpus), cap), s"minhash corpus cap=$cap")
+      assert(drops(pairs, "lsh_buckets_incoming") == localDrops(bandKeys(incoming), cap), s"minhash incoming cap=$cap")
+    }
+
+    val dim = 16
+    def vec() = Seq.fill(dim)(rnd.nextFloat() - 0.5f)
+    val ecorpus = ((0L until 150L).map(i => (Option(i), Option(vec()))) ++
+      (0L until 35L).map(i => (Option(500L + i), Option(Seq.fill(dim)(0.25f)))) :+
+      ((Option(900L), Option.empty[Seq[Float]]))).toDF("vec_id", "embedding").repartition(3)
+    val eincoming = ((0L until 20L).map(i => (Option(2000L + i), Option(Seq.fill(dim)(0.25f)))) ++
+      (0L until 60L).map(i => (Option(3000L + i), Option(vec())))).toDF("vec_id", "embedding").repartition(2)
+    def buckets(df: DataFrame) = Dedup.embeddingSignatures(df, "vec_id", "embedding", dim, 4).select("bucket").collect()
+      .toSeq.map(r => Seq[Any](if (r.isNullAt(0)) null else r.get(0)))
+    for (cap <- Seq(8, 19, 36)) {
+      val pairs = Dedup.embeddingPairsAgainst(ecorpus, eincoming, "vec_id", "embedding", dim, threshold = 0.9,
+        nbits = 4, maxBucket = cap)
+      pairs.collect()
+      assert(drops(pairs, "lsh_buckets") == localDrops(buckets(ecorpus), cap), s"embedding corpus cap=$cap")
+      assert(drops(pairs, "lsh_buckets_incoming") == localDrops(buckets(eincoming), cap), s"embedding incoming cap=$cap")
+    }
+
+    val boiler = "all rights reserved by the owners of this fine image collection"
+    val sdocs = ((0L until 60L).map(i => (Option(i), Option(s"${text()} $boiler ${text()}"))) ++
+      (0L until 40L).map(i => (Option(100L + i), Option(text())))).toDF("doc_id", "text").repartition(3)
+    val spanRows = sdocs.select(col("doc_id"),
+      explode(graft.ops.TextOps.wordNgrams(col("text"), 4)).as("span"))
+      .collect().toSeq.map(r => Seq[Any](r.getString(1)))
+    for (cap <- Seq(10, 59, 61); hashed <- Seq(true, false)) {
+      val pairs = Dedup.substringSpanPairs(sdocs, "doc_id", "text", k = 4, maxBucket = cap, hashedCarrier = hashed)
+      pairs.collect()
+      assert(drops(pairs, "span_buckets") == localDrops(spanRows, cap), s"span cap=$cap hashed=$hashed")
+    }
+  }
+
+  test("minhashPairsAgainst registers each spill directory for deletion at JVM exit") {
+    val spill = java.nio.file.Files.createTempDirectory("graft_spill_exit")
+    val key = "spark.graft.spill.dir"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, spill.toString)
+    val fs = new org.apache.hadoop.fs.Path(spill.toString).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val docs = (0L until 60L).map(i => (i, s"caption number ${i % 20} of the spill corpus")).toDF("doc_id", "text")
+      Dedup.minhashPairsAgainst(docs, docs.limit(10), "doc_id", "text").count()
+      val dirs = spill.toFile.list().toSeq.sorted
+      assert(dirs.size == 2 && dirs.forall(_.startsWith("lsh-minhash-")), s"spill directories: $dirs")
+      dirs.foreach { d =>
+        assert(fs.cancelDeleteOnExit(new org.apache.hadoop.fs.Path(spill.toString, d)), s"$d is not deleted at exit")
+      }
+    } finally {
+      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      fs.delete(new org.apache.hadoop.fs.Path(spill.toString), true)
+    }
+  }
+
   test("self-pair kernels leave no cache entry and no spill directory behind") {
     def cached = org.apache.spark.sql.GraftTestAccess.cachedEntries(spark)
     val spill = java.nio.file.Files.createTempDirectory("graft_spill_hygiene")

@@ -162,6 +162,24 @@ class MaintenanceSpec extends SparkSpec {
     assert(log.head.get.sequence == c2.manifest.sequence, "no-op must not commit")
   }
 
+  test("selective compact sizes roots by data files only: a one-file root with a _SUCCESS marker is kept") {
+    import graft.table.Manifest
+    val log = newLog()
+    val root = log.dataDir("marked", "events")
+    // a plain session write: one data file plus the committer's _SUCCESS marker
+    spark.range(20000).selectExpr("id", "sha2(cast(id as string), 256) as payload").coalesce(1).write.parquet(root)
+    val files = new java.io.File(root).list().toSeq
+    assert(files.contains("_SUCCESS") && files.count(_.endsWith(".parquet")) == 1, s"$files")
+    val size = new java.io.File(root).listFiles().filter(_.getName.endsWith(".parquet")).head.length()
+    val m = log.commit(Manifest("", 0L, None, "v1", "spec", Seq(0), complete = true,
+      tables = Map("events" -> Seq(root)), metrics = Map.empty, sketches = Map.empty, createdAtMs = 1L))
+    // threshold < file size < 2 x threshold: the marker must not halve the mean
+    val c = Maintenance.compact(spark, log, "events", rewriteThresholdBytes = Some(size * 3 / 4))
+    assert(c.filesBefore == 1 && c.filesAfter == 1 && c.bytesRewritten == 0L, s"$c")
+    assert(log.head.get.sequence == m.sequence, "a kept root must not be rewritten")
+    assert(log.tablePaths(log.head.get, "events") == Seq(root))
+  }
+
   test("compact re-derives dual (statusd, streamd) routing for multi-stream tables") {
     import org.apache.spark.sql.functions._
     import graft.constraint.{ConstraintSet, DefaultFill, MaxLength, MinLength, NonNull}
