@@ -468,13 +468,6 @@ object Dedup extends Logging {
   def phashPairs(df: DataFrame, idCol: String, phashCol: String, maxHamming: Int = 3, maxBucket: Int = DefaultMaxBucket): DataFrame =
     signaturePairs(df.select(col(idCol).as("id"), col(phashCol).as("sig")), maxHamming, maxBucket)
 
-  /** N-gram Jaccard similarity of all candidate pairs from a band-key join
-    * at a LOW threshold — the exhaustive verify path used when the caller
-    * wants raw similarity scores rather than a cutoff.
-    */
-  def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String, shingleK: Int = 3, minJaccard: Double = 0.2): DataFrame =
-    minhashPairs(df, idCol, textCol, shingleK, numHashes = 32, numBands = 16, threshold = minJaccard)
-
   /** Connected components over a near-dup pair list — the step that turns
     * verified pairs into deletable duplicate GROUPS (keep one canonical id
     * per component). Iterative min-label propagation: label(v) starts as v,

@@ -197,15 +197,6 @@ object TextOps {
       array_min(transform(shinglesCol, s => xxhash64(lit(j), s)))
     }: _*)
 
-  /** LSH band keys from a minhash signature: numBands hashes, each over
-    * rowsPerBand consecutive signature lanes. Two texts sharing ANY band key
-    * are near-dup candidates (standard banding estimate).
-    */
-  def minhashBands(sig: Column, numBands: Int, rowsPerBand: Int): Column =
-    array((0 until numBands).map { b =>
-      xxhash64(lit(b), concat_ws(",", slice(sig, b * rowsPerBand + 1, rowsPerBand)))
-    }: _*)
-
   /** 64-bit SimHash over whitespace tokens (bit-vote across xxhash64 token
     * hashes). UDF by design: 64 per-bit counters don't map to Columns sanely.
     */

@@ -3,27 +3,26 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 
 import graft.ops.Dedup
-import graft.table.{LocalFs, Manifest, SnapshotLog}
+import graft.table.{Manifest, SnapshotLog}
 
 /** foreachBatch near-dup GATE — [[StreamingValidation.processAndCommit]]'s
-  * dedup sibling: each micro-batch of documents is paired against the
-  * stored corpus signature table, the verified cross-batch pairs are
-  * handed to the caller, and the batch's signatures are appended under ONE
-  * snapshot commit whose `streamBatches` ledger entry makes replay
-  * idempotent — a restarted stream re-delivering a committed micro-batch
-  * skips it entirely (exactly-once signature storage), keyed on (durable
-  * checkpoint identity, Long batch id) exactly like the validation gate.
+  * dedup sibling and the Structured Streaming face of the
+  * [[SignatureStore]]: each micro-batch of documents goes through the
+  * store's per-batch routine (pairs against the stored corpus signatures
+  * handed to the caller, the batch's new signatures and band keys appended
+  * under ONE snapshot commit), and that commit's `streamBatches` ledger
+  * entry makes replay idempotent — a restarted stream re-delivering a
+  * committed micro-batch skips it entirely, keyed on (durable checkpoint
+  * identity, Long batch id) exactly like the validation gate. A doc
+  * re-sent under a NEW batch id is paired as usual but stored once.
   *
-  * The pull-based [[IncrementalDedup]] covers the snapshot-log-to-
-  * snapshot-log topology; this gate covers the Structured Streaming
-  * topology (`writeStream.foreachBatch`), sharing the same per-batch cost
-  * shape: shingle the BATCH + one join against stored signatures, with
-  * the signature-table scan bloom-pruned by the small batch side (see
-  * [[IncrementalDedup]]'s scaladoc for the 10^12-row store argument).
+  * The probe pushes the batch's band keys onto the stored keys scan, which
+  * raises `spark.sql.parquet.pushdown.inFilterThreshold` on the batch's
+  * session when the key set is wider (see
+  * [[Dedup.minhashPairsAgainstSignatures]]). Inside `foreachBatch` that is
+  * the stream's own session, not the one that started the query.
   */
 object StreamingDedup {
-
-  val SigTable = "dedup_sigs"
 
   /** Returns the committed manifest, or None when the batch was empty or
     * already committed (replay). `onPairs` runs BEFORE the commit, so a
@@ -46,37 +45,10 @@ object StreamingDedup {
       threshold: Double = 0.7,
       maxBucket: Int = Dedup.DefaultMaxBucket
   )(onPairs: DataFrame => Unit): Option[Manifest] = {
-    val head = sigLog.head
-    if (head.exists(m => sigLog.committedStreamBatches(m, checkpointId).contains(batchId))) return None
+    if (sigLog.head.exists(m => sigLog.committedStreamBatches(m, checkpointId).contains(batchId))) return None
     if (batch.isEmpty) return None
-
-    val spark = batch.sparkSession
-    val dir = sigLog.dataDir(s"stream-dedup-$checkpointId-$batchId", SigTable)
-    Dedup.minhashSignatures(batch, idCol, textCol, shingleK, numHashes, numBands)
-      .write.options(LocalFs.options(spark)).mode("overwrite").parquet(dir) // deterministic tag: replay overwrites itself
-    val batchSigs = spark.read.parquet(dir)
-    val corpusSigs = head
-      .filter(m => sigLog.tablePaths(m, SigTable).nonEmpty)
-      .map(m => sigLog.readTable(spark, m, SigTable)
-        // exclude the batch's own ids: a crash-replayed batch whose commit
-        // raced ahead of the checkpoint re-delivers exactly its original
-        // pairs instead of leaking intra-batch relations
-        .join(batchSigs.select("id"), Seq("id"), "left_anti"))
-      .getOrElse(batchSigs.limit(0))
-    onPairs(Dedup.minhashPairsAgainstSignatures(corpusSigs, batchSigs, threshold, maxBucket))
-    Some(sigLog.commit(Manifest(
-      snapshotId = "", sequence = 0L, // assigned by commit
-      parentId = head.map(_.snapshotId),
-      constraintVersion = head.map(_.constraintVersion).getOrElse("dedup-sigs/1"),
-      partitionSpec = head.map(_.partitionSpec).getOrElse("stream"),
-      partitionsDelta = Seq.empty,
-      complete = false,
-      tables = Map(SigTable -> Seq(dir)),
-      metrics = head.map(_.metrics).getOrElse(Map.empty),
-      sketches = head.map(_.sketches).getOrElse(Map.empty),
-      createdAtMs = System.currentTimeMillis(),
-      streamBatches = Map(checkpointId -> Seq(batchId)),
-      tableSchemas = Map(SigTable -> batchSigs.schema.json)
-    )))
+    SignatureStore.probeAndCommit(sigLog, batch, idCol, textCol, shingleK, numHashes, numBands,
+      threshold, maxBucket, SignatureStore.DefaultPruneBandKeysLimit,
+      s"stream-dedup-$checkpointId-$batchId", Map(checkpointId -> Seq(batchId)))(onPairs)
   }
 }

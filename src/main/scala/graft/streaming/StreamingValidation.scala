@@ -2,46 +2,24 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.constraint.ConstraintSet
-import graft.engine.{EngineOptions, ValidationEngine}
+import graft.engine.ValidationEngine
 import graft.table.{LocalFs, Manifest, SnapshotLog, ValidationJob}
 
-/** Streaming face of the gate. The reference is an unbounded intake loop in
-  * which each HTTP batch is processed independently
-  * (/root/reference/routes/events.js:43-145, no cross-batch state) — the
-  * exact shape of Structured Streaming `foreachBatch`: every micro-batch
-  * goes through the same validate→triage→produce gate and its outputs are
-  * appended under a per-batch snapshot id. Checkpointing gives the restart
-  * semantics the reference gets from Kafka delivery confirmation.
+/** Streaming face of the validation gate. The reference is an unbounded
+  * intake loop in which each HTTP batch is processed independently
+  * (eventgate's `routes/events.js`, no cross-batch state) — the exact shape
+  * of Structured Streaming `foreachBatch`. Every micro-batch goes through
+  * the batch job's own per-batch routine ([[ValidationJob]]`.commit`) and
+  * lands under ONE snapshot commit whose `streamBatches` ledger entry makes
+  * replay idempotent: [[startSnapshotted]] runs a file stream through
+  * [[processAndCommit]], which a caller's own `foreachBatch` may call
+  * directly. Checkpointing gives the restart semantics the reference gets
+  * from Kafka delivery confirmation.
   */
 object StreamingValidation {
-
-  /** Validate a file stream; write valid/violations/rollups per micro-batch. */
-  def start(
-      spark: SparkSession,
-      sourceDir: String,
-      schema: StructType,
-      cs: ConstraintSet,
-      outDir: String,
-      checkpointDir: String
-  ): StreamingQuery = {
-    val stream = spark.readStream.schema(schema).parquet(sourceDir)
-    val fsOpts = LocalFs.options(spark)
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val res = new ValidationEngine(cs, EngineOptions(snapshotId = s"batch-$batchId")).process(batch)
-        res.valid.write.options(fsOpts).mode("append").parquet(s"$outDir/valid")
-        res.violations.write.options(fsOpts).mode("append").parquet(s"$outDir/violations")
-        res.rollups.write.options(fsOpts).mode("append").parquet(s"$outDir/rollups")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
 
   /** Snapshot-committed micro-batch gate: all outputs of a batch become
     * visible atomically through ONE SnapshotLog manifest — a crash

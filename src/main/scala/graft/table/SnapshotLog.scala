@@ -540,16 +540,6 @@ final class SnapshotLog(val root: String, conf: Configuration) extends Serializa
     }
   }
 
-  /** Like [[readTable]], but an empty path list yields an empty frame with
-    * `schemaFrom`'s table schema instead of throwing — for tables that are
-    * legitimately absent from a chain (e.g. `valid` when every row failed).
-    */
-  def readTableOrEmpty(spark: SparkSession, m: Manifest, table: String, schemaFrom: String): DataFrame = {
-    val paths = tablePaths(m, table)
-    if (paths.nonEmpty) readPaths(spark, paths, tableSchema(m, table))
-    else readTable(spark, m, schemaFrom).limit(0)
-  }
-
   /** Partition-pruned read: commits whose delta doesn't intersect `wanted`
     * contribute NO paths — SURVEY §4's "pruning is explicit file-list
     * construction, not a post-scan filter". The residual in-commit filter

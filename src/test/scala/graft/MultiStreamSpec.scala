@@ -148,7 +148,7 @@ class MultiStreamSpec extends SparkSpec {
     assert(log.committedPartitions(m) == Set(0, 1, 2))
 
     // valid output is routed per stream (the per-topic produce, atomically)
-    val valid = log.readTableOrEmpty(spark, m, "valid", schemaFrom = "annotated")
+    val valid = log.readTableLenient(spark, m, "valid")
     val streams = valid.select("stream").distinct().collect().map(_.getString(0)).toSet
     assert(streams == Set("strict", "lax"), s"got $streams") // only streams with passing rows
     // the physical layout routes per (status, stream) directory
@@ -353,7 +353,7 @@ class MultiStreamSpec extends SparkSpec {
       .withColumn("stream", lit("strict"))
     val m = job(log).run(_ => allBad, Seq(0))
     assert(m.metrics("n_success") == 0 && m.metrics("n_invalid") > 0)
-    val valid = log.readTableOrEmpty(spark, m, "valid", schemaFrom = "annotated")
+    val valid = log.readTableLenient(spark, m, "valid")
     assert(valid.isEmpty && valid.columns.contains("stream")) // empty, schema intact
   }
 

@@ -15,36 +15,39 @@ class StreamingSpec extends SparkSpec {
 
   test("foreachBatch gate: streaming output == batch engine output") {
     val src = Files.createTempDirectory("graft_stream_src").toString
-    val out = Files.createTempDirectory("graft_stream_out").toString
     val ckpt = Files.createTempDirectory("graft_stream_ckpt").toString
+    val log = new graft.table.SnapshotLog(
+      Files.createTempDirectory("graft_stream_log").toString, spark.sparkContext.hadoopConfiguration)
     val imgs = SyntheticImages.images(spark, 1500, 3).toDF()
     imgs.write.mode("overwrite").parquet(src)
 
-    val q = StreamingValidation.start(spark, src, imgs.schema, ImageConstraints.v1, out, ckpt)
+    val q = StreamingValidation.startSnapshotted(spark, src, imgs.schema, v1Gate, log, ckpt)
     q.awaitTermination()
 
-    val streamValid = spark.read.parquet(s"$out/valid")
+    val head = log.head.get
+    val streamValid = log.readTable(spark, head, "valid")
     val batchValid = new ValidationEngine(ImageConstraints.v1, EngineOptions()).process(spark.read.parquet(src)).valid
     assert(streamValid.count() == batchValid.count())
     val a = streamValid.select("image_id").collect().map(_.toString).sorted
     val b = batchValid.select("image_id").collect().map(_.toString).sorted
     assert(a.sameElements(b))
-    assert(spark.read.parquet(s"$out/rollups").agg(sum("n_invalid")).collect()(0).getLong(0) > 0)
+    assert(log.readTable(spark, head, "rollups").agg(sum("n_invalid")).collect()(0).getLong(0) > 0)
   }
 
   test("restart with same checkpoint does not duplicate output") {
     val src = Files.createTempDirectory("graft_stream_src2").toString
-    val out = Files.createTempDirectory("graft_stream_out2").toString
     val ckpt = Files.createTempDirectory("graft_stream_ckpt2").toString
+    val log = new graft.table.SnapshotLog(
+      Files.createTempDirectory("graft_stream_log2").toString, spark.sparkContext.hadoopConfiguration)
     val imgs = SyntheticImages.images(spark, 500, 2).toDF()
     imgs.write.mode("overwrite").parquet(src)
-    val q1 = StreamingValidation.start(spark, src, imgs.schema, ImageConstraints.v1, out, ckpt)
+    val q1 = StreamingValidation.startSnapshotted(spark, src, imgs.schema, v1Gate, log, ckpt)
     q1.awaitTermination()
-    val n1 = spark.read.parquet(s"$out/valid").count()
+    val n1 = log.readTable(spark, log.head.get, "valid").count()
     // restart: no new files → no new micro-batch → no duplicates
-    val q2 = StreamingValidation.start(spark, src, imgs.schema, ImageConstraints.v1, out, ckpt)
+    val q2 = StreamingValidation.startSnapshotted(spark, src, imgs.schema, v1Gate, log, ckpt)
     q2.awaitTermination()
-    assert(spark.read.parquet(s"$out/valid").count() == n1)
+    assert(log.readTable(spark, log.head.get, "valid").count() == n1)
   }
 
   test("snapshot-committed stream: batch outputs visible only through one atomic manifest") {
@@ -173,7 +176,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming dedup gate: cross-batch pairs, exactly-once signatures on replay, ledger survives checkpoint") {
     import spark.implicits._
-    import graft.streaming.StreamingDedup
+    import graft.streaming.{SignatureStore, StreamingDedup}
     import graft.table.SnapshotLog
     val sigLog = new SnapshotLog(
       Files.createTempDirectory("graft_sdedup").toString, spark.sparkContext.hadoopConfiguration)
@@ -194,12 +197,46 @@ class StreamingSpec extends SparkSpec {
     assert(pairs == Vector(Set.empty, Set((2L, 100L))), pairs.toString)
     // replay of a committed micro-batch: no pairs re-delivered, no commit
     assert(run(b2, 1L).isEmpty && pairs.length == 2)
-    assert(sigLog.readTable(spark, sigLog.head.get, StreamingDedup.SigTable).count() == 10)
+    assert(sigLog.readTable(spark, sigLog.head.get, SignatureStore.SigTable).count() == 10)
     // the ledger rides a checkpoint squash, same as the validation gate
     sigLog.checkpoint(sigLog.head.get)
     assert(run(b1, 0L).isEmpty)
     assert(run(b2.filter(col("doc_id") === 200L), 2L).isDefined) // fresh batch still commits
-    assert(sigLog.readTable(spark, sigLog.head.get, StreamingDedup.SigTable).count() == 11)
+    assert(sigLog.readTable(spark, sigLog.head.get, SignatureStore.SigTable).count() == 10) // doc 200 stored once
+  }
+
+  test("streaming dedup gate: a doc re-sent under a new batch id is stored once; each commit carries its keys twin") {
+    import spark.implicits._
+    import graft.streaming.StreamingDedup
+    import graft.table.SnapshotLog
+    val sigLog = new SnapshotLog(
+      Files.createTempDirectory("graft_sdedup_resend").toString, spark.sparkContext.hadoopConfiguration)
+    def doc(i: Long) = {
+      val rnd = new scala.util.Random(i * 2654435761L)
+      (i, (0 until 40).map(_ => f"w${rnd.nextInt(5000)}%04d").mkString(" "))
+    }
+    var pairs = Vector.empty[Set[(Long, Long)]]
+    def run(df: org.apache.spark.sql.DataFrame, id: Long) =
+      StreamingDedup.processAndCommit(sigLog, df, id)(p =>
+        pairs :+= p.select("corpus_id", "incoming_id").as[(Long, Long)].collect().toSet)
+    // the store's on-disk format: dedup_sigs plus its dedup_keys twin, numBands (16) rows per doc
+    def delta(m: graft.table.Manifest, table: String) =
+      spark.read.parquet(m.tables.getOrElse(table, Nil): _*)
+
+    val h0 = run((0L until 8L).map(doc).toDF("doc_id", "text"), 0L).get
+    assert(h0.tables.keySet == Set("dedup_sigs", "dedup_keys"), h0.tables.keySet.toString)
+    assert(delta(h0, "dedup_keys").count() == 8 * 16)
+    assert(h0.metrics.get("dedup_keys_incomplete").contains(0L))
+    // doc 3 again (a re-send under a new batch id) plus one new doc
+    val h1 = run(Seq(doc(3L), doc(100L)).toDF("doc_id", "text"), 1L).get
+    assert(delta(h1, "dedup_sigs").select("id").as[Long].collect().toSeq == Seq(100L))
+    assert(delta(h1, "dedup_keys").count() == 16)
+    assert(h1.metrics.get("dedup_keys_incomplete").contains(0L))
+    val stored = sigLog.readTable(spark, h1, "dedup_sigs")
+    assert(stored.count() == 9 && stored.select("id").distinct().count() == 9)
+    assert(sigLog.readTable(spark, h1, "dedup_keys").count() == 9 * 16)
+    // the batch's own ids are out of the corpus side: the re-sent doc does not pair with itself
+    assert(pairs == Vector(Set.empty, Set.empty), pairs.toString)
   }
 
   test("watermarked windowed counts over an event stream") {
