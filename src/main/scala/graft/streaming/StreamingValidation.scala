@@ -58,9 +58,11 @@ object StreamingValidation {
     val job = new ValidationJob(batch.sparkSession, log, engine, partitionSpec = "stream-batch",
       profileColumns = false, suppressViolations = None, commitBatch = 1,
       violationsSchema = Some(ValidationJob.violationsSchemaV1))
-    Some(job.commit(head, batch, s"stream-$checkpointId-$batchId", s"batch-$batchId",
-      partitions = None, complete = false, // a stream is never complete
-      streamBatches = Map(checkpointId -> Seq(batchId))))
+    Some(ValidationJob.Phases.around(batch.sparkSession) { phases =>
+      job.commit(head, batch, s"stream-$checkpointId-$batchId", s"batch-$batchId",
+        partitions = None, complete = false, // a stream is never complete
+        streamBatches = Map(checkpointId -> Seq(batchId)), phases = phases)
+    })
   }
 
   /** Durable identity of a streaming checkpoint INSTANCE: a UUID minted on

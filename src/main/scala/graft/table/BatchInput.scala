@@ -37,11 +37,21 @@ object BatchInput {
 
   private val PidSchema = StructType(Seq(StructField("_pid", IntegerType, nullable = false)))
 
+  /** Threads that resolve one batch's inputs at most. Resolving an input is
+    * bound by latency (a listing, a one-task schema inference job and the
+    * driver work between them), not by driver CPU, so this is not tied to
+    * the core count; Spark's own parallel path globbing uses 40.
+    */
+  private val MaxInputThreads = 16
+
   /** Each batch partition's input, tagged with `_pid`, as one frame.
-    * `inputFor` is called once per partition, in batch order.
+    * `inputFor` is called once per partition, concurrently within a batch,
+    * with the caller's context ([[Overlap.all]]): a batch of file-backed
+    * partitions waits about as long as one schema inference, not as long as
+    * all of them in turn. The frames are used in batch order.
     */
   def of(spark: SparkSession, batch: Seq[Int], inputFor: Int => DataFrame): DataFrame = {
-    val inputs = batch.map(p => p -> inputFor(p))
+    val inputs = batch.zip(Overlap.all(spark, "graft-inputs", MaxInputThreads)(batch.map(p => () => inputFor(p))))
     singleScan(spark, inputs).getOrElse(
       inputs.map { case (p, df) => df.withColumn("_pid", lit(p)) }.reduce(_.unionByName(_)))
   }

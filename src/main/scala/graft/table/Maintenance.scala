@@ -168,8 +168,12 @@ object Maintenance {
     // one giant file per value at scale. Ties split evenly instead; the
     // primary keys still dominate the ranges, so per-file min/max bands on
     // the real columns stay narrow (the tiebreaker is not in the sort).
+    // One output file needs no ranges at all: the scan's partitions are
+    // coalesced into one task and sorted there, with no shuffle.
     val shaped =
-      if (clusterCols.nonEmpty)
+      if (nFiles == 1 && clusterCols.nonEmpty) df.coalesce(1).sortWithinPartitions(clusterCols: _*)
+      else if (nFiles == 1) df.coalesce(1)
+      else if (clusterCols.nonEmpty)
         df.repartitionByRange(nFiles, (clusterCols :+ org.apache.spark.sql.functions.rand(head.sequence)): _*)
           .sortWithinPartitions(clusterCols: _*)
       else df.repartition(nFiles)

@@ -41,7 +41,9 @@ final case class Manifest(
     complete: Boolean,
     /** logical table -> data paths ADDED by this commit (delta). */
     tables: Map[String, Seq[String]],
-    /** cumulative counters (status counts, duration totals) — fixed key set. */
+    /** cumulative counters (status counts, duration totals) — fixed key set.
+      * Per-phase wall times may overlap (a validation commit writes its
+      * observed rollups while it writes its violations). */
     metrics: Map[String, Long],
     /** cumulative merged column-stat sketches: name -> base64(bytes). */
     sketches: Map[String, String],

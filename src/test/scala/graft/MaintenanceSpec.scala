@@ -1,8 +1,13 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.spark.sql.{DataFrame, Row}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, GraftFunctions, Row}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.engine.{ImageConstraints, ValidationEngine}
 import graft.gen.SyntheticImages
@@ -61,6 +66,46 @@ class MaintenanceSpec extends SparkSpec {
     assert(sortedRows(log.readTable(spark, head, "valid")) == beforeValid)
     // time travel across the rewrite: the pre-compaction manifest still reads
     assert(sortedRows(log.readTableAsOf(spark, m.sequence, "annotated")) == beforeAnn)
+  }
+
+  /** The executed plan of every write `body` runs. */
+  private def writePlans(body: => Unit): Seq[String] = {
+    val plans = new ConcurrentLinkedQueue[String]()
+    val l = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.treeString)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      body
+      assert(GraftFunctions.drainSharedListeners(spark.sparkContext))
+    } finally spark.listenerManager.unregister(l)
+    plans.asScala.toSeq.filter(_.contains("InsertIntoHadoopFsRelationCommand"))
+  }
+
+  test("compact to one file sorts in one task without a shuffle; more files still range-partition") {
+    val log = newLog()
+    val m = new ValidationJob(spark, log, ImageConstraints.v1, commitBatch = 1).run(inputFor, Seq(0, 1, 2, 3))
+    val before = sortedRows(log.readTable(spark, m, "annotated"))
+    val one = writePlans(Maintenance.compact(spark, log, "annotated"))
+    assert(one.size == 1 && !one.head.contains("Exchange") && one.head.contains("Sort"), one)
+    val head = log.head.get
+    assert(sortedRows(log.readTable(spark, head, "annotated")) == before)
+    val root = new java.io.File(log.tablePaths(head, "annotated").head)
+    val routeDirs = root.listFiles().filter(_.isDirectory)
+    assert(routeDirs.nonEmpty)
+    for (dir <- routeDirs) {
+      val files = dir.listFiles().filter(_.getName.endsWith(".parquet"))
+      assert(files.length == 1, s"${dir.getName}: ${files.length} files")
+      val ids = spark.read.parquet(files.head.getPath).select("partition_id").collect().map(_.getInt(0)).toSeq
+      assert(ids == ids.sorted, s"${dir.getName}: partition_id not sorted")
+    }
+
+    val small = newLog()
+    new ValidationJob(spark, small, ImageConstraints.v1, commitBatch = 1).run(inputFor, Seq(0, 1, 2, 3))
+    val many = writePlans(Maintenance.compact(spark, small, "annotated", targetFileBytes = 64L * 1024))
+    assert(many.size == 1 && many.head.contains("rangepartitioning"), many)
   }
 
   test("compact: partition-pruned reads stay correct through the rewrite") {

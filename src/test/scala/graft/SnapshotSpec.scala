@@ -141,8 +141,9 @@ class SnapshotSpec extends SparkSpec {
 
   test("killed job resumes from the last checkpointed partition set") {
     val log = newLog()
-    var calls = Vector.empty[Int]
-    def countingInput(p: Int): DataFrame = { calls :+= p; inputFor(p) }
+    // a batch resolves its partitions' inputs concurrently
+    val calls = scala.collection.mutable.ArrayBuffer.empty[Int]
+    def countingInput(p: Int): DataFrame = { calls.synchronized(calls += p); inputFor(p) }
     def failingInput(p: Int): DataFrame = {
       if (p == 2) throw new RuntimeException("simulated kill")
       countingInput(p)
@@ -152,9 +153,9 @@ class SnapshotSpec extends SparkSpec {
     assert(log.committedPartitions(log.head.get) == Set(0, 1))
 
     // resume: only 2 and 3 are reprocessed (batched this time — one commit)
-    calls = Vector.empty
+    calls.synchronized(calls.clear())
     val m = new ValidationJob(spark, log, ImageConstraints.v1, commitBatch = 2).run(countingInput, Seq(0, 1, 2, 3))
-    assert(calls == Vector(2, 3), s"reprocessed $calls")
+    assert(calls.synchronized(calls.toVector.sorted) == Vector(2, 3), s"reprocessed $calls")
     assert(m.complete)
     assert(log.committedPartitions(m) == Set(0, 1, 2, 3))
 
@@ -216,12 +217,34 @@ class SnapshotSpec extends SparkSpec {
   test("per-phase duration metrics are committed atomically with the manifest") {
     val log = newLog()
     val m = new ValidationJob(spark, log, ImageConstraints.v1, commitBatch = 4).run(inputFor, Seq(0, 1, 2, 3))
-    for (phase <- Seq("write_annotated", "write_violations", "write_rollups"))
+    for (phase <- Seq("inputs", "write_annotated", "write_violations", "write_rollups"))
       assert(m.metrics.getOrElse(s"wall_ms_$phase", -1L) >= 0L, s"missing wall_ms_$phase in ${m.metrics.keys}")
+    assert(m.metrics.getOrElse("task_ms_inputs", -1L) >= 0L, s"missing task_ms_inputs in ${m.metrics.keys}")
     assert(m.metrics("wall_ms_write_annotated") > 0L)
     assert(m.metrics("wall_ms_write_violations") > 0L)
     // executor task time captured via SparkListener for at least the big phases
     assert(m.metrics.keys.exists(_.startsWith("task_ms_")), s"no task_ms_* in ${m.metrics.keys}")
+    // a micro-batch arrives resolved: no inputs phase
+    val mb = graft.streaming.StreamingValidation
+      .processAndCommit(newLog(), new graft.engine.ValidationEngine(ImageConstraints.v1), inputFor(0), 0L).get
+    assert(mb.metrics.contains("wall_ms_write_annotated"))
+    assert(!mb.metrics.contains("wall_ms_inputs") && !mb.metrics.contains("task_ms_inputs"), mb.metrics.keys)
+  }
+
+  test("a run leaves the caller's job group and job tags in place") {
+    val sc = spark.sparkContext
+    sc.setJobGroup("caller", "the caller's own group", interruptOnCancel = true)
+    sc.addJobTag("caller-tag")
+    try {
+      new ValidationJob(spark, newLog(), ImageConstraints.v1, commitBatch = 2).run(inputFor, Seq(0, 1, 2))
+      assert(sc.getLocalProperty("spark.jobGroup.id") == "caller")
+      assert(sc.getLocalProperty("spark.job.description") == "the caller's own group")
+      assert(sc.getLocalProperty("spark.job.interruptOnCancel") == "true")
+      assert(sc.getJobTags() == Set("caller-tag"))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeJobTag("caller-tag")
+    }
   }
 
   test("manifest-level partition pruning: non-matching commits contribute no scan legs") {
@@ -259,10 +282,10 @@ class SnapshotSpec extends SparkSpec {
     assert(cp.parentId.contains(m.snapshotId)) // lineage preserved
 
     // resume on the checkpointed log: only the new partition runs
-    var calls = Vector.empty[Int]
+    val calls = scala.collection.mutable.ArrayBuffer.empty[Int]
     val m2 = new ValidationJob(spark, log, ImageConstraints.v1)
-      .run(p => { calls :+= p; inputFor(p) }, Seq(0, 1, 2, 3))
-    assert(calls == Vector(3))
+      .run(p => { calls.synchronized(calls += p); inputFor(p) }, Seq(0, 1, 2, 3))
+    assert(calls.synchronized(calls.toVector.sorted) == Vector(3))
     assert(log.chain(m2).size == 2) // new delta + the checkpoint
     assert(log.committedPartitions(m2) == Set(0, 1, 2, 3))
   }

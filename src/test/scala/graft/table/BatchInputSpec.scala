@@ -1,8 +1,12 @@
 package graft.table
 
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{DataFrame, Row}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -154,5 +158,87 @@ class BatchInputSpec extends SparkSpec {
     val tagged = BatchInput.of(spark, 0 until 2, p => spark.read.parquet(pidDirs(p)))
     assert(unions(tagged) == 1, plan(tagged))
     assert(sorted(tagged) == Seq("[r0,0]", "[r1,1]"))
+  }
+
+  /** Live threads of the input pool. */
+  private def inputThreads(): Seq[String] =
+    Thread.getAllStackTraces.keySet.asScala.toSeq.filter(_.isAlive).map(_.getName).filter(_.startsWith("graft-inputs-"))
+
+  /** An `inputFor` whose calls all arrive before any may return: it counts a
+    * shared latch down, waits up to 2 s for the rest, and records whether
+    * they came and on which thread.
+    */
+  private final class Rendezvous(n: Int) {
+    private val latch = new CountDownLatch(n)
+    val arrived = new ConcurrentLinkedQueue[Boolean]()
+    val threads = new ConcurrentLinkedQueue[String]()
+    def meet(): Unit = {
+      threads.add(Thread.currentThread.getName)
+      latch.countDown()
+      arrived.add(latch.await(2, TimeUnit.SECONDS))
+    }
+  }
+
+  test("a batch resolves its partitions' inputs concurrently, on pool threads that end with the call") {
+    val r = new Rendezvous(P)
+    val tagged = BatchInput.of(spark, 0 until P, p => { r.meet(); fileBacked(p) })
+    assert(r.arrived.asScala.toSeq == Seq.fill(P)(true), "calls did not overlap")
+    assert(r.threads.asScala.forall(_.startsWith("graft-inputs-")), r.threads)
+    assert(inputThreads().isEmpty, inputThreads())
+    // results stay in batch order: still one scan, every partition under its own id
+    assert(scans(tagged) == 1 && unions(tagged) == 0, plan(tagged))
+    assert(tagged.groupBy("_pid").count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap ==
+      (0 until P).map(_ -> RowsPerPart).toMap)
+  }
+
+  test("each input call sees the caller's session, job group and job tags") {
+    val sc = spark.sparkContext
+    val caller = spark.newSession()
+    val previous = SparkSession.getActiveSession
+    val seen = new ConcurrentLinkedQueue[(SparkSession, String, Set[String], String)]()
+    SparkSession.setActiveSession(caller)
+    sc.setJobGroup("caller-group", "caller", interruptOnCancel = false)
+    sc.addJobTag("caller-tag")
+    try {
+      BatchInput.of(caller, 0 until P, p => {
+        seen.add((SparkSession.active, sc.getLocalProperty("spark.jobGroup.id"), sc.getJobTags(),
+          Thread.currentThread.getName))
+        caller.range(p, p + 1).toDF()
+      })
+    } finally {
+      sc.clearJobGroup()
+      sc.removeJobTag("caller-tag")
+      previous.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+    }
+    assert(seen.size == P)
+    for ((session, group, tags, thread) <- seen.asScala) {
+      assert(session eq caller)
+      assert(group == "caller-group")
+      assert(tags.contains("caller-tag"), tags)
+      assert(thread.startsWith("graft-inputs-"), thread)
+    }
+  }
+
+  test("a failing input call surfaces its own exception after every other call has ended") {
+    val r = new Rendezvous(P)
+    val running = new AtomicInteger(0)
+    val finished = new AtomicInteger(0)
+    val e = intercept[IllegalStateException] {
+      BatchInput.of(spark, 0 until P, p => {
+        running.incrementAndGet()
+        try {
+          r.meet()
+          if (p == 1) throw new IllegalStateException(s"no input for partition $p")
+          Thread.sleep(200)
+          finished.incrementAndGet()
+          fileBacked(p)
+        } finally running.decrementAndGet()
+      })
+    }
+    assert(e.getMessage == "no input for partition 1")
+    assert(running.get == 0 && finished.get == P - 1)
+    assert(r.arrived.asScala.toSeq == Seq.fill(P)(true), "calls did not overlap")
+    assert(r.threads.asScala.forall(_.startsWith("graft-inputs-")), r.threads)
+    assert(inputThreads().isEmpty, inputThreads())
   }
 }
