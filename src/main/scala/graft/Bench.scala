@@ -190,7 +190,7 @@ object Bench {
       }
     // Opt-in 100×-pair-mass LSH stress (SPARK_GRAFT_LSH100=1): the banded
     // dedup family over a 100× documents scale-up, reporting each query's
-    // observed `lsh_dropped_rows` (the capBuckets safety valve) — proves the
+    // observed `lsh_dropped_rows` (the LSH bucket cap's drops) — proves the
     // caps and full-entropy band keys hold two orders past the base scale,
     // with drop counts measured rather than asserted. Single-shot timings:
     // these are minutes-long stress runs, not gate readings.
@@ -210,7 +210,7 @@ object Bench {
         val lastObservedIncoming = new java.util.concurrent.atomic.AtomicLong(-1L)
         val listener = new org.apache.spark.sql.util.QueryExecutionListener {
           override def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit = {
-            // span_buckets is q58's capBuckets valve — same drop semantics
+            // span_buckets is q58's bucket cap — same drop semantics
             qe.observedMetrics.get("lsh_buckets").orElse(qe.observedMetrics.get("span_buckets")).foreach { r =>
               lastObserved.set(if (r.isNullAt(0)) 0L else r.getLong(0))
             }

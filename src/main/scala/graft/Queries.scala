@@ -1064,7 +1064,7 @@ object Queries {
   }
 
   /** Incremental TEXT near-dup: suffix-edited copies of 15 docs arrive
-    * against the sampled corpus; cross-side band-join only. Oracle:
+    * against the sampled corpus; cross-side band buckets only. Oracle:
     * exhaustive cross 5-gram Jaccard (planted pairs sit at j ≈ 0.97 where
     * 16-band/4-row recall is deterministic; corpus docs that exactly
     * duplicate a copied doc surface in both engines identically).
@@ -1074,10 +1074,7 @@ object Queries {
     val incoming = t(s, dir, "documents").filter(col("doc_id") < 15)
       .select((col("doc_id") + 4000000).as("doc_id"), concat(col("text"), lit(" zq")).as("text"))
     Dedup
-      .minhashPairsAgainst(corpus, incoming, "doc_id", "text", shingleK = 5, numHashes = 64, numBands = 16, threshold = 0.8,
-        // 15-doc arriving batch: a parquet round trip costs more than
-        // re-shingling it at its second reference
-        materializeIncoming = false)
+      .minhashPairsAgainst(corpus, incoming, "doc_id", "text", shingleK = 5, numHashes = 64, numBands = 16, threshold = 0.8)
       .select(col("corpus_id"), col("incoming_id"), round(col("jaccard"), 3).as("jaccard_3dp"))
       .orderBy("corpus_id", "incoming_id")
   }

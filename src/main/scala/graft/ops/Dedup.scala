@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.internal.Logging
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -28,68 +28,71 @@ object Dedup extends Logging {
     */
   val DefaultMaxBucket = 500
 
-  /** Keep only rows in buckets of size ≤ maxBucket — the cap of the
-    * cross-side kernels (`*PairsAgainst*`, each side capped on its own) and
-    * of [[substringSpanPairs]]. A Window count over the bucket key: it
-    * shuffles and sorts EVERY row of a bucket, hot ones included, before
-    * dropping it. Self-pair kernels use [[bucketPairs]] instead, whose
-    * partial aggregate ships at most maxBucket members per bucket per map
-    * task. Rows dropped are observable as `lsh_dropped_rows` via
-    * Dataset.observe (no extra job; surfaces through QueryExecutionListener
-    * at cluster scale).
+  /** The one LSH bucket cap: one row per bucket key with `_b` =
+    * `struct(n, members)`, the [[graft.functions.BucketMembersAgg]] of
+    * `struct(memberCols)` — a map task ships at most maxBucket members per
+    * bucket, and a hot bucket over the cap costs one count record per map
+    * task. The drops are observed (name `obsName`; operators that cap two
+    * sides in one plan pass distinct names) as `lsh_dropped_rows` = Σ n
+    * over buckets with n > maxBucket; null bucket keys are counted there
+    * but never pair. Keeps the buckets with a non-null key and at least
+    * `minMembers` members (a bucket over the cap has none).
     */
-  private def capBuckets(keys: DataFrame, bucketCols: Seq[String], maxBucket: Int, obsName: String = "lsh_buckets"): DataFrame = {
-    val w = Window.partitionBy(bucketCols.map(col): _*)
+  private def cappedBuckets(keys: DataFrame, bucketCols: Seq[String], memberCols: Seq[String], maxBucket: Int,
+      obsName: String, minMembers: Int): DataFrame = {
+    val b = col("_b")
     keys
-      .withColumn("_bn", count(lit(1)).over(w))
-      // obsName must be unique per query — operators that cap two sides in
-      // one plan (embeddingPairsAgainst) pass distinct names
-      .observe(obsName, sum(when(col("_bn") > maxBucket, 1L).otherwise(0L)).as("lsh_dropped_rows"))
-      .filter(col("_bn") <= maxBucket)
-      .drop("_bn")
+      .groupBy(bucketCols.map(col): _*)
+      .agg(graft.functions.BucketMembersAgg.members(struct(memberCols.map(col): _*), maxBucket).as("_b"))
+      .observe(obsName, sum(when(b.getField("n") > maxBucket, b.getField("n")).otherwise(0L)).as("lsh_dropped_rows"))
+      .filter(bucketCols.map(col(_).isNotNull).reduce(_ && _) && size(b.getField("members")) >= minMembers)
   }
 
   /** Every unordered member pair of every LSH bucket of size ≤ maxBucket,
     * in one aggregate and no self-join — the candidate step of the
     * self-pair kernels ([[signaturePairs]], [[minhashPairs]], the
-    * embedding kernels).
+    * embedding kernels, [[substringSpanPairs]]).
     *
-    * Steps: `groupBy(bucket).agg(bucket_members)`
-    * ([[graft.functions.BucketMembersAgg]]: a map task ships at most
-    * maxBucket members per bucket, and a hot bucket over the cap costs one
-    * count record per map task); the drops are observed (name
-    * `lsh_buckets`) as `lsh_dropped_rows` = Σ n over buckets with
-    * n > maxBucket (the same figure [[capBuckets]] reports); null bucket
-    * keys are counted there but never pair; each kept bucket emits its
-    * pairs with `posexplode` plus `slice` (member i with every later
-    * member).
+    * Steps: [[cappedBuckets]], then each kept bucket emits its pairs with
+    * `posexplode` plus `slice` (member i with every later member).
     *
     * `memberCols.head` is the member id. Pairs with a null or equal id are
     * dropped and each pair is oriented so `a.id < b.id`. Returns struct
     * columns `a` and `b` of `memberCols`; a pair sharing several buckets
     * comes back once per bucket, so callers run `distinct`.
     */
-  private def bucketPairs(keys: DataFrame, bucketCols: Seq[String], memberCols: Seq[String], maxBucket: Int): DataFrame = {
-    val b = col("_b")
+  private def bucketPairs(keys: DataFrame, bucketCols: Seq[String], memberCols: Seq[String], maxBucket: Int,
+      obsName: String = "lsh_buckets"): DataFrame = {
     val m = col("_m")
     val (ida, idb) = (col("a").getField(memberCols.head), col("b").getField(memberCols.head))
-    keys
-      .groupBy(bucketCols.map(col): _*)
-      .agg(graft.functions.BucketMembersAgg.members(struct(memberCols.map(col): _*), maxBucket).as("_b"))
-      .observe("lsh_buckets", sum(when(b.getField("n") > maxBucket, b.getField("n")).otherwise(0L)).as("lsh_dropped_rows"))
-      .filter(bucketCols.map(col(_).isNotNull).reduce(_ && _) && size(b.getField("members")) >= 2)
-      .select(b.getField("members").as("_m"))
+    cappedBuckets(keys, bucketCols, memberCols, maxBucket, obsName, minMembers = 2)
+      .select(col("_b").getField("members").as("_m"))
       .select(m, posexplode(m).as(Seq("_i", "a")))
       .select(col("a"), explode(slice(m, col("_i") + 2, size(m) - col("_i") - 1)).as("b"))
       .filter(ida.isNotNull && idb.isNotNull && ida =!= idb)
       .select(when(ida < idb, col("a")).otherwise(col("b")).as("a"), when(ida < idb, col("b")).otherwise(col("a")).as("b"))
   }
 
+  /** Every corpus × incoming member pair of every bucket kept on both
+    * sides — the candidate step of the cross-side kernels. Each side comes
+    * capped on its own by [[cappedBuckets]] (drops observed as
+    * `lsh_buckets` and `lsh_buckets_incoming`); the two per-bucket rows
+    * meet in a join on the bucket key (both aggregates are already
+    * hash-partitioned on it), and each joined row emits its members' cross
+    * product. Returns struct columns `c` (corpus) and `i` (incoming) of the
+    * member columns, once per shared bucket.
+    */
+  private def crossBucketPairs(corpusBuckets: DataFrame, incomingBuckets: DataFrame, bucketCols: Seq[String]): DataFrame = {
+    def members(side: DataFrame, as: String) = side.select(bucketCols.map(col) :+ col("_b").getField("members").as(as): _*)
+    members(corpusBuckets, "_c").join(members(incomingBuckets, "_i"), bucketCols)
+      .select(explode(col("_c")).as("c"), col("_i"))
+      .select(col("c"), explode(col("_i")).as("i"))
+  }
+
   /** Materialize an LSH signature table to storage and read it back — the
-    * cluster-scale "write the signature table once" shape, used by the
-    * cross-side text kernel ([[minhashPairsAgainst]]) and each round of
-    * [[adaptiveBuckets]]. The write both (a) truncates lineage so the
-    * analyzer/codegen never re-process the upstream expression tree at
+    * cluster-scale "write the signature table once" shape, used by each
+    * round of [[adaptiveBuckets]]. The write both (a) truncates lineage so
+    * the analyzer/codegen never re-process the upstream expression tree at
     * each downstream reference and (b) survives executor loss, unlike
     * localCheckpoint's executor-pinned blocks (round-1 advisory). Each call
     * costs a parquet write, a read-back and a schema-inference job.
@@ -174,18 +177,12 @@ object Dedup extends Logging {
 
   /** INCREMENTAL text near-dup: pairs (corpus_id, incoming_id, jaccard)
     * where an arriving document near-duplicates an already-ingested corpus
-    * document — [[embeddingPairsAgainst]]'s text twin. Cross-side band-key
-    * join only (no corpus self-join); minhash band keys are stateless
-    * (xxhash64-seeded lanes), so the corpus (id, shingles, bands) table —
-    * exactly what [[materializeSigs]] writes — can be stored once and
-    * reused verbatim for every future batch. Both sides capped with
-    * separately observable drops.
-    */
-  /** @param materializeIncoming write the incoming side's signature frame
-    *   to storage like the corpus side's (the default — an incoming batch
-    *   can be arbitrarily large and is referenced twice downstream). Pass
-    *   false for BOUNDED small batches: re-shingling a few rows twice is
-    *   cheaper than a parquet write+read round trip per call.
+    * document — [[embeddingPairsAgainst]]'s text twin. Each side is capped
+    * per band bucket and the kept buckets meet in one join on the bucket
+    * key (no corpus self-join), with separately observable drops. Minhash
+    * band keys are stateless (xxhash64-seeded lanes), so the corpus
+    * [[minhashSignatures]] table can be stored once and fed to
+    * [[minhashPairsAgainstSignatures]] for every future batch.
     */
   def minhashPairsAgainst(
       corpus: DataFrame,
@@ -196,15 +193,12 @@ object Dedup extends Logging {
       numHashes: Int = 64,
       numBands: Int = 16,
       threshold: Double = 0.7,
-      maxBucket: Int = DefaultMaxBucket,
-      materializeIncoming: Boolean = true
-  ): DataFrame = {
-    val incomingSigs0 = minhashSignatures(incoming, idCol, textCol, shingleK, numHashes, numBands)
+      maxBucket: Int = DefaultMaxBucket
+  ): DataFrame =
     minhashPairsAgainstSignatures(
-      materializeSigs(minhashSignatures(corpus, idCol, textCol, shingleK, numHashes, numBands), "minhash-corpus"),
-      if (materializeIncoming) materializeSigs(incomingSigs0, "minhash-incoming") else incomingSigs0,
+      minhashSignatures(corpus, idCol, textCol, shingleK, numHashes, numBands),
+      minhashSignatures(incoming, idCol, textCol, shingleK, numHashes, numBands),
       threshold, maxBucket)
-  }
 
   /** The (id, sh, bands) signature frame of [[minhashPairsAgainst]] — pure
     * deterministic Columns, no fitted state: WRITE this once for the
@@ -255,9 +249,9 @@ object Dedup extends Logging {
       corpusKeys: Option[DataFrame] = None,
       pruneBandKeysLimit: Int = 0
   ): DataFrame = {
-    val incomingKeys = capBuckets(
-      explodedBandKeys(incomingSigs),
-      Seq("band_idx", "band_key"), maxBucket, "lsh_buckets_incoming")
+    val bucketCols = Seq("band_idx", "band_key")
+    val incomingBuckets = cappedBuckets(explodedBandKeys(incomingSigs), bucketCols, Seq("id"), maxBucket,
+      "lsh_buckets_incoming", minMembers = 1)
     val corpusKeyRows = corpusKeys.getOrElse(explodedBandKeys(corpusSigs))
     // Whole buckets are kept or dropped by the prune (it filters on the
     // bucket key itself), so the downstream cap sees identical bucket
@@ -265,7 +259,9 @@ object Dedup extends Logging {
     val corpusPruned =
       if (pruneBandKeysLimit <= 0) corpusKeyRows
       else {
-        val ks = incomingKeys.select("band_key").distinct()
+        // one row per kept (band_idx, band_key); a band_key may recur
+        // across band indexes, hence the distinct
+        val ks = incomingBuckets.select("band_key").distinct()
           .limit(pruneBandKeysLimit + 1).collect().map(_.getLong(0))
         if (ks.length > pruneBandKeysLimit) corpusKeyRows
         else {
@@ -298,13 +294,9 @@ object Dedup extends Logging {
           corpusKeyRows.filter(col("band_key").isin(ks.toSeq: _*))
         }
       }
-    val cand = capBuckets(corpusPruned, Seq("band_idx", "band_key"), maxBucket, "lsh_buckets")
-      .select(col("id").as("corpus_id"), col("band_idx"), col("band_key"))
-      .join(
-        incomingKeys
-          .select(col("id").as("incoming_id"), col("band_idx"), col("band_key")),
-        Seq("band_idx", "band_key"))
-      .select("corpus_id", "incoming_id")
+    val corpusBuckets = cappedBuckets(corpusPruned, bucketCols, Seq("id"), maxBucket, "lsh_buckets", minMembers = 1)
+    val cand = crossBucketPairs(corpusBuckets, incomingBuckets, bucketCols)
+      .select(col("c.id").as("corpus_id"), col("i.id").as("incoming_id"))
       .distinct()
     cand
       .join(corpusSigs.select(col("id").as("corpus_id"), col("sh").as("sh_c")), Seq("corpus_id"))
@@ -323,12 +315,13 @@ object Dedup extends Logging {
     * paragraph inside otherwise different text.
     *
     * Scale shape: each document explodes to its DISTINCT k-word spans
-    * ([[TextOps.wordNgramsOf]] — words materialized once per row) and the
-    * exploded frame self-joins on the span key. With `hashedCarrier` the
-    * join key is xxhash64(span) — an 8-byte shuffle key instead of
-    * ~50-word strings (pair set hash-collision-exact at 2^-64); the span
-    * STRING rides only the a-side as payload for the sample. Ubiquitous
-    * spans (boilerplate present in more docs than `maxBucket`) would pair
+    * ([[TextOps.wordNgramsOf]] — words materialized once per row), and
+    * the documents sharing a span key pair inside its bucket
+    * ([[bucketPairs]], no self-join). With `hashedCarrier` the bucket key
+    * is xxhash64(span) — an 8-byte grouping key instead of ~50-word
+    * strings (pair set hash-collision-exact at 2^-64); the span STRING
+    * rides in the members as payload for the sample. Ubiquitous spans
+    * (boilerplate present in more docs than `maxBucket`) would pair
     * quadratically; whole buckets over the cap are dropped with an
     * observable metric (`span_buckets` observation) — the capped-bucket
     * discipline of [[minhashPairs]] applied to exact spans. Downstream:
@@ -351,15 +344,11 @@ object Dedup extends Logging {
       .select(col(idCol).as("id"), TextOps.lowerWords(col(textCol)).as("_w"))
       .select(col("id"), explode(TextOps.wordNgramsOf(col("_w"), k)).as("span"))
     val keyed = spans.withColumn("g", if (hashedCarrier) xxhash64(col("span")) else col("span"))
-    // One capped frame self-joined (the observe node is the SAME subtree on
-    // both sides, so the metric name stays unique in the plan).
-    val capped = capBuckets(keyed, Seq("g"), maxBucket, "span_buckets")
-    capped.select(col("g"), col("id").as("id_a"), col("span"))
-      .join(capped.select(col("g"), col("id").as("id_b")), Seq("g"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b")
-      // per-doc spans are distinct, so join rows per pair = shared spans
-      .agg(count(lit(1)).as("n_shared_spans"), min("span").as("sample_span"))
+    bucketPairs(keyed, Seq("g"), Seq("id", "span"), maxBucket, "span_buckets")
+      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      // per-doc spans are distinct, so pairs per doc pair = shared spans;
+      // `a` is the lower id's member, whose span is the sample
+      .agg(count(lit(1)).as("n_shared_spans"), min(col("a.span")).as("sample_span"))
   }
 
   /** Span REMOVAL — the second half of Lee et al. 2022's exact-substring
@@ -644,13 +633,11 @@ object Dedup extends Logging {
       threshold: Double = 0.95,
       maxBucket: Int = DefaultMaxBucket
   ): DataFrame = {
-    def side(s: DataFrame, name: String, obsName: String) = capBuckets(
-      s.select(col("id").as(s"${name}_id"), col("v").as(s"_v_$name"), col("bucket")),
-      Seq("bucket"), maxBucket, obsName)
-    side(corpusSigs, "corpus", "lsh_buckets")
-      .join(side(incomingSigs, "incoming", "lsh_buckets_incoming"), Seq("bucket"))
-      .select(col("corpus_id"), col("incoming_id"),
-        Similarity.cosine(col("_v_corpus"), col("_v_incoming")).as("cosine"))
+    def side(s: DataFrame, obsName: String) =
+      cappedBuckets(s, Seq("bucket"), Seq("id", "v"), maxBucket, obsName, minMembers = 1)
+    crossBucketPairs(side(corpusSigs, "lsh_buckets"), side(incomingSigs, "lsh_buckets_incoming"), Seq("bucket"))
+      .select(col("c.id").as("corpus_id"), col("i.id").as("incoming_id"),
+        Similarity.cosine(col("c.v"), col("i.v")).as("cosine"))
       .filter(col("cosine") >= threshold)
   }
 
@@ -719,7 +706,7 @@ object Dedup extends Logging {
     * Termination: cells a round cannot split (zero sampled seeds — retried
     * next round under a fresh salt — or >maxBucket EXACT duplicates of one
     * vector, which no geometric quantizer can separate) flow out after
-    * maxRounds and hit the observable `capBuckets` valve downstream, same
+    * maxRounds and hit the observable bucket cap downstream, same
     * as under the previous k-means fit (identical vectors share a centroid
     * there too).
     *
@@ -768,21 +755,18 @@ object Dedup extends Logging {
       else {
         doneParts += current.join(broadcast(over), Seq("bucket"), "left_anti")
         val todo = current.join(broadcast(over), Seq("bucket"), "left_semi")
-        // Cap the per-cell sample BEFORE aggregating: a collect_list-then-
+        // Cap the per-cell sample INSIDE the aggregate: a collect_list-then-
         // slice would gather ALL sampled seeds of a mega-cell into one
         // aggregation buffer (~n/coarseSeeds/targetClusterSize dim-d
-        // structs — gigabytes at n=10^9) before truncating. The rank
-        // filter reuses the same hash partitioning as the groupBy, keeps
-        // the smallest-hk seeds (identical to slice(sort_array) output),
-        // and bounds the buffer at O(maxSeedsPerCell·dim).
+        // structs — gigabytes at n=10^9) before truncating. The bounded
+        // top-k keeps the smallest-(hk, sv) seeds sorted ascending (the
+        // slice(sort_array) output), O(maxSeedsPerCell·dim) per map task.
         val cellSeeds = todo
           .select(col("bucket"), xxhash64(col("id"), lit(round.toLong)).as("hk"), col("v").as("sv"))
           .filter(pmod(col("hk"), t) === 0)
-          .withColumn("_rn", row_number().over(
-            org.apache.spark.sql.expressions.Window.partitionBy(col("bucket")).orderBy(col("hk"))))
-          .filter(col("_rn") <= maxSeedsPerCell)
           .groupBy("bucket")
-          .agg(sort_array(collect_list(struct(col("hk"), col("sv")))).as("_seeds"))
+          .agg(graft.functions.BoundedTopKAgg.topK(struct(col("hk"), col("sv")), maxSeedsPerCell, Seq(true, true))
+            .as("_seeds"))
         // Early rounds have FEW oversized cells, each potentially huge
         // (round 2: ≤ coarseSeeds cells of up to n/coarseSeeds rows); a
         // shuffle join on `bucket` would hash a whole mega-cell onto one

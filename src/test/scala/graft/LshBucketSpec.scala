@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.BucketMembersAgg
 import graft.ops.Dedup
 
-/** The bucket-aggregate LSH kernels against the Window-cap plus self-join
+/** The bucket-aggregate LSH kernels against the Window-cap plus join
   * reference ([[DedupReference]]): same pairs, same observed drops, and
   * drops equal to a plain-Scala sum of over-cap bucket sizes.
   */
@@ -18,12 +18,20 @@ class LshBucketSpec extends SparkSpec {
 
   import spark.implicits._
 
-  /** Rows and the observed `lsh_dropped_rows` of one action. */
-  private def run(df: DataFrame): (Seq[String], Long) = {
-    val rows = df.collect().map(_.toString).toSeq.sorted
-    val m = df.queryExecution.observedMetrics("lsh_buckets")
-    (rows, if (m.isNullAt(0)) 0L else m.getLong(0))
+  /** Observed `lsh_dropped_rows` of the named cap after an action on `df`. */
+  private def drops(df: DataFrame, name: String): Long = {
+    val m = df.queryExecution.observedMetrics(name)
+    if (m.isNullAt(0)) 0L else m.getLong(0)
   }
+
+  /** Sorted rows and the named caps' observed drops of one action. */
+  private def runCaps(df: DataFrame, names: String*): (Seq[String], Seq[Long]) = {
+    val rows = df.collect().map(_.toString).toSeq.sorted
+    (rows, names.map(drops(df, _)))
+  }
+
+  /** Rows and the observed `lsh_buckets` drops of one action. */
+  private def run(df: DataFrame): (Seq[String], Seq[Long]) = runCaps(df, "lsh_buckets")
 
   /** Σ sizes of the buckets over the cap, counted in plain Scala; a null key
     * component counts like any key (it never pairs, but it is dropped).
@@ -31,11 +39,15 @@ class LshBucketSpec extends SparkSpec {
   private def localDrops(bucketKeys: Seq[Seq[Any]], cap: Int): Long =
     bucketKeys.groupBy(identity).values.map(_.size.toLong).filter(_ > cap).sum
 
-  private def assertSame(name: String, got: (Seq[String], Long), want: (Seq[String], Long), drops: Long): Unit = {
+  private def assertSameCaps(name: String, got: (Seq[String], Seq[Long]), want: (Seq[String], Seq[Long]),
+      sums: Seq[Long]): Unit = {
     assert(got._1 == want._1, s"$name pairs differ:\n${got._1.diff(want._1).take(10)}\nvs\n${want._1.diff(got._1).take(10)}")
     assert(got._2 == want._2, s"$name: observed drops ${got._2}, reference ${want._2}")
-    assert(got._2 == drops, s"$name: observed drops ${got._2}, plain-Scala sum $drops")
+    assert(got._2 == sums, s"$name: observed drops ${got._2}, plain-Scala sums $sums")
   }
+
+  private def assertSame(name: String, got: (Seq[String], Seq[Long]), want: (Seq[String], Seq[Long]), drops: Long): Unit =
+    assertSameCaps(name, got, want, Seq(drops))
 
   private val rnd = new scala.util.Random(29)
 
@@ -148,12 +160,6 @@ class LshBucketSpec extends SparkSpec {
     }
   }
 
-  /** Observed `lsh_dropped_rows` of the named cap after an action on `df`. */
-  private def drops(df: DataFrame, name: String): Long = {
-    val m = df.queryExecution.observedMetrics(name)
-    if (m.isNullAt(0)) 0L else m.getLong(0)
-  }
-
   test("cross-side and span caps: observed drops equal a plain-Scala sum of over-cap bucket sizes") {
     val words = Vector("amber", "birch", "cedar", "dune", "elm", "fern", "gale", "heath", "ivy", "juniper", "kelp", "larch")
     def text() = Seq.fill(10 + rnd.nextInt(10))(words(rnd.nextInt(words.length))).mkString(" ")
@@ -165,13 +171,28 @@ class LshBucketSpec extends SparkSpec {
       (0L until 30L).map(i => (Option(3000L + i), Option(text())))).toDF("doc_id", "text").repartition(2)
     def bandKeys(df: DataFrame) = Dedup.minhashSignatures(df, "doc_id", "text", 5, 32, 16).select("bands").collect()
       .toSeq.flatMap(r => if (r.isNullAt(0)) Nil else r.getSeq[Long](0).zipWithIndex.map { case (k, b) => Seq[Any](b, k) })
-    for (cap <- Seq(20, 30, 45)) {
-      val pairs = Dedup.minhashPairsAgainst(corpus, incoming, "doc_id", "text", numHashes = 32, numBands = 16,
-        threshold = 0.5, maxBucket = cap, materializeIncoming = cap != 30)
-      assert(pairs.collect().nonEmpty)
-      assert(drops(pairs, "lsh_buckets") == localDrops(bandKeys(corpus), cap), s"minhash corpus cap=$cap")
-      assert(drops(pairs, "lsh_buckets_incoming") == localDrops(bandKeys(incoming), cap), s"minhash incoming cap=$cap")
-    }
+    val lsh = Seq("lsh_buckets", "lsh_buckets_incoming")
+    val (csigs, isigs) = (Dedup.minhashSignatures(corpus, "doc_id", "text", 5, 32, 16),
+      Dedup.minhashSignatures(incoming, "doc_id", "text", 5, 32, 16))
+    val thresholdKey = "spark.sql.parquet.pushdown.inFilterThreshold"
+    val prevThreshold = spark.conf.getOption(thresholdKey)
+    try for (cap <- Seq(20, 30, 45)) {
+      val got = runCaps(Dedup.minhashPairsAgainst(corpus, incoming, "doc_id", "text", numHashes = 32, numBands = 16,
+        threshold = 0.5, maxBucket = cap), lsh: _*)
+      assert(got._1.nonEmpty)
+      assertSameCaps(s"minhash cap=$cap", got,
+        runCaps(DedupReference.minhashPairsAgainst(corpus, incoming, "doc_id", "text", numHashes = 32, numBands = 16,
+          threshold = 0.5, maxBucket = cap), lsh: _*),
+        Seq(localDrops(bandKeys(corpus), cap), localDrops(bandKeys(incoming), cap)))
+      // pruned probe: the corpus cap sees only the buckets the batch's band
+      // keys select, so its drops are checked against the reference alone
+      val pruned = runCaps(Dedup.minhashPairsAgainstSignatures(csigs, isigs, 0.5, cap,
+        Some(Dedup.explodedBandKeys(csigs)), pruneBandKeysLimit = 100000), lsh: _*)
+      val prunedRef = runCaps(DedupReference.minhashPairsAgainstSignatures(csigs, isigs, 0.5, cap,
+        Some(Dedup.explodedBandKeys(csigs)), pruneBandKeysLimit = 100000), lsh: _*)
+      assertSameCaps(s"pruned minhash cap=$cap", pruned, prunedRef, prunedRef._2)
+      assert(pruned._1 == got._1 && pruned._2(1) == got._2(1), s"pruned and unpruned probes differ at cap=$cap")
+    } finally prevThreshold.fold(spark.conf.unset(thresholdKey))(spark.conf.set(thresholdKey, _))
 
     val dim = 16
     def vec() = Seq.fill(dim)(rnd.nextFloat() - 0.5f)
@@ -183,11 +204,12 @@ class LshBucketSpec extends SparkSpec {
     def buckets(df: DataFrame) = Dedup.embeddingSignatures(df, "vec_id", "embedding", dim, 4).select("bucket").collect()
       .toSeq.map(r => Seq[Any](if (r.isNullAt(0)) null else r.get(0)))
     for (cap <- Seq(8, 19, 36)) {
-      val pairs = Dedup.embeddingPairsAgainst(ecorpus, eincoming, "vec_id", "embedding", dim, threshold = 0.9,
-        nbits = 4, maxBucket = cap)
-      pairs.collect()
-      assert(drops(pairs, "lsh_buckets") == localDrops(buckets(ecorpus), cap), s"embedding corpus cap=$cap")
-      assert(drops(pairs, "lsh_buckets_incoming") == localDrops(buckets(eincoming), cap), s"embedding incoming cap=$cap")
+      assertSameCaps(s"embedding cap=$cap",
+        runCaps(Dedup.embeddingPairsAgainst(ecorpus, eincoming, "vec_id", "embedding", dim, threshold = 0.9,
+          nbits = 4, maxBucket = cap), lsh: _*),
+        runCaps(DedupReference.embeddingPairsAgainst(ecorpus, eincoming, "vec_id", "embedding", dim, threshold = 0.9,
+          nbits = 4, maxBucket = cap), lsh: _*),
+        Seq(localDrops(buckets(ecorpus), cap), localDrops(buckets(eincoming), cap)))
     }
 
     val boiler = "all rights reserved by the owners of this fine image collection"
@@ -197,23 +219,29 @@ class LshBucketSpec extends SparkSpec {
       explode(graft.ops.TextOps.wordNgrams(col("text"), 4)).as("span"))
       .collect().toSeq.map(r => Seq[Any](r.getString(1)))
     for (cap <- Seq(10, 59, 61); hashed <- Seq(true, false)) {
-      val pairs = Dedup.substringSpanPairs(sdocs, "doc_id", "text", k = 4, maxBucket = cap, hashedCarrier = hashed)
-      pairs.collect()
-      assert(drops(pairs, "span_buckets") == localDrops(spanRows, cap), s"span cap=$cap hashed=$hashed")
+      val got = runCaps(Dedup.substringSpanPairs(sdocs, "doc_id", "text", k = 4, maxBucket = cap, hashedCarrier = hashed),
+        "span_buckets")
+      assert(got._1.nonEmpty)
+      assertSameCaps(s"span cap=$cap hashed=$hashed", got,
+        runCaps(DedupReference.substringSpanPairs(sdocs, "doc_id", "text", k = 4, maxBucket = cap, hashedCarrier = hashed),
+          "span_buckets"),
+        Seq(localDrops(spanRows, cap)))
     }
   }
 
-  test("minhashPairsAgainst registers each spill directory for deletion at JVM exit") {
+  test("semanticPairs registers each spill directory for deletion at JVM exit") {
     val spill = java.nio.file.Files.createTempDirectory("graft_spill_exit")
     val key = "spark.graft.spill.dir"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, spill.toString)
     val fs = new org.apache.hadoop.fs.Path(spill.toString).getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {
-      val docs = (0L until 60L).map(i => (i, s"caption number ${i % 20} of the spill corpus")).toDF("doc_id", "text")
-      Dedup.minhashPairsAgainst(docs, docs.limit(10), "doc_id", "text").count()
+      // two coarse cells of ~100 rows over maxBucket = 40: round 1 and a
+      // re-split round each spill once
+      val embs = (0L until 200L).map(i => (i, Seq.fill(8)(rnd.nextFloat() - 0.5f))).toDF("vec_id", "embedding")
+      Dedup.semanticPairs(embs, "vec_id", "embedding", targetClusterSize = 16, maxBucket = 40, coarseSeeds = 2).count()
       val dirs = spill.toFile.list().toSeq.sorted
-      assert(dirs.size == 2 && dirs.forall(_.startsWith("lsh-minhash-")), s"spill directories: $dirs")
+      assert(dirs.size >= 2 && dirs.forall(_.startsWith("lsh-semdedup-")), s"spill directories: $dirs")
       dirs.foreach { d =>
         assert(fs.cancelDeleteOnExit(new org.apache.hadoop.fs.Path(spill.toString, d)), s"$d is not deleted at exit")
       }
@@ -223,7 +251,7 @@ class LshBucketSpec extends SparkSpec {
     }
   }
 
-  test("self-pair kernels leave no cache entry and no spill directory behind") {
+  test("LSH kernels leave no cache entry and no spill directory behind") {
     def cached = org.apache.spark.sql.GraftTestAccess.cachedEntries(spark)
     val spill = java.nio.file.Files.createTempDirectory("graft_spill_hygiene")
     val key = "spark.graft.spill.dir"
@@ -237,6 +265,9 @@ class LshBucketSpec extends SparkSpec {
       Dedup.minhashPairs(docs, "doc_id", "text").count()
       val embs = (0L until 100L).map(i => (i, Seq.fill(8)((i % 7).toFloat + 0.5f))).toDF("vec_id", "embedding")
       Dedup.embeddingPairs(embs, "vec_id", "embedding", dim = 8).count()
+      Dedup.minhashPairsAgainst(docs, docs.limit(10), "doc_id", "text").count()
+      Dedup.embeddingPairsAgainst(embs, embs.limit(10), "vec_id", "embedding", dim = 8).count()
+      Dedup.substringSpanPairs(docs, "doc_id", "text", k = 3).count()
       assert(cached == before, s"cache entries $cached, before $before")
       val left = spill.toFile.list().toSeq
       assert(left.isEmpty, s"spill directories left behind: $left")

@@ -421,7 +421,7 @@ class OpsSpec extends SparkSpec {
     val bucketed = Dedup.adaptiveBuckets(mono, targetClusterSize = 128, maxBucket = 500, coarseSeeds = 8).cache()
     assert(bucketed.count() == 600)
     // identical vectors always co-assign, so the cell can never split — it
-    // must come back intact (downstream capBuckets drops it OBSERVABLY)
+    // must come back intact (the downstream bucket cap drops it OBSERVABLY)
     assert(bucketed.select("bucket").distinct().count() == 1)
   }
 

@@ -350,6 +350,27 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("cross-side and span LSH kernels: bucket_members aggregates, no Window, no signature spill") {
+    val spill = java.nio.file.Files.createTempDirectory("graft_plan_spill")
+    // q51's pruned probe raises the In-pushdown threshold on the session
+    val keys = Seq("spark.graft.spill.dir", "spark.sql.parquet.pushdown.inFilterThreshold")
+    val prev = keys.map(spark.conf.getOption)
+    spark.conf.set(keys.head, spill.toString)
+    try {
+      for ((name, q) <- Seq[(String, (org.apache.spark.sql.SparkSession, String) => DataFrame)](
+          "q44" -> Queries.q44IncrementalNearDup, "q45" -> Queries.q45IncrementalTextDedup,
+          "q51" -> Queries.q51PrunedIncrementalDedup, "q58" -> Queries.q58SubstringSpanDedup)) {
+        val df = q(spark, sfDir)
+        df.collect()
+        val p = plan(df)
+        assert(p.contains("bucket_members"), s"$name plans no bucket_members aggregate:\n${p.take(3000)}")
+        assert(!p.contains("Window"), s"$name plans a Window:\n${p.take(3000)}")
+      }
+      val left = spill.toFile.list().toSeq
+      assert(left.isEmpty, s"signature spill directories written: $left")
+    } finally keys.zip(prev).foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   test("a batch of 8 file-backed partitions plans ONE file scan and no Union") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft_batchplan").toString
