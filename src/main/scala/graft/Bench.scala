@@ -226,8 +226,8 @@ object Bench {
         // q37: the adaptive quantizer's rounds at 100× embeddings (round-5
         // stress task). The asof family: ONE shuffle+sort of 100× events —
         // no lsh metric, so don't poll the listener for them; q50/q56 route
-        // the SAME 100× events through the chunked hot-key carry (persistHot
-        // evidence). q58: span self-join over 100× resampled documents;
+        // the SAME 100× events through the chunked hot-key carry (cached
+        // hot frame). q58: span self-join over 100× resampled documents;
         // q60: span REMOVAL over the same corpus (every span ~100×
         // duplicated — the worst case for keeper election; uncapped by
         // design, so no bucket metric to poll).

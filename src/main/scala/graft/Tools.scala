@@ -14,6 +14,10 @@ import org.apache.spark.sql.{GraftFunctions, SparkSession}
   *    wall/task/shuffle metrics, so the expensive stage — not just the
   *    expensive query — is identifiable without the UI. Each query runs
   *    `repeat` times (default 2, min printed); no names = all queries.
+  *    Each run also prints its whole-stage codegen compiles and janino ms
+  *    (deltas of Spark's `CodegenMetrics` compilation-time histogram,
+  *    which counts driver and local executors alike): the count is exact,
+  *    the ms are count × the histogram's sampled mean, an estimate.
   *  - `plans <tag> [outDir] [query ...]` — writes `explain("formatted")` of
   *    each query to `<outDir>/<query>_<tag>.txt` (default outDir
   *    `plans/r07` under the working directory), so plan-shape claims
@@ -89,12 +93,14 @@ object Tools {
     })
 
     selected(names).foreach { case (name, fn) =>
-      def once(printStages: Boolean): Double = {
+      def once(printStages: Boolean): (Double, Long, Double) = {
         stageStats.clear()
         spark.sparkContext.setJobDescription(s"noop: $name")
+        val (c0, _) = codegen()
         val t0 = System.nanoTime()
         fn(spark, dir).write.format("noop").mode("overwrite").save()
         val dt = (System.nanoTime() - t0) / 1e9
+        val (c1, mean) = codegen()
         spark.sparkContext.setJobDescription(null)
         if (printStages) {
           GraftFunctions.drainSharedListeners(spark.sparkContext) // listener bus is async
@@ -107,12 +113,21 @@ object Tools {
                 f"shufR=${sr / 1024}%8d KB shufW=${sw / 1024}%8d KB input=${in / 1024}%8d KB  $n%s")
             }
         }
-        dt
+        (dt, c1 - c0, (c1 - c0) * mean)
       }
-      val times = (1 to repeat).map(i => once(printStages = i == repeat))
-      println(f"[stages] $name%-32s min=${times.min}%7.3f s  runs=${times.map(t => f"$t%.3f").mkString(",")}")
+      val runs = (1 to repeat).map(i => once(printStages = i == repeat))
+      val times = runs.map(_._1)
+      println(f"[stages] $name%-32s min=${times.min}%7.3f s  runs=${times.map(t => f"$t%.3f").mkString(",")}" +
+        s"  compiles=${runs.map(_._2).mkString(",")}" +
+        s"  janino_ms~${runs.map(r => f"${r._3}%.0f").mkString(",")} (sampled)")
     }
     spark.stop()
+  }
+
+  /** (compiles so far in this JVM, sampled mean janino ms per compile). */
+  private def codegen(): (Long, Double) = {
+    val h = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    (h.getCount, h.getSnapshot.getMean)
   }
 
   private def plans(args: List[String]): Unit = {

@@ -10,16 +10,17 @@ import graft.sketch.Sketches
   * buckets").
   *
   * Mechanics: heavy-hitter keys are detected with a frequent-items sketch
-  * (one narrow pass, no shuffle), then the join is split:
+  * (one narrow pass, no shuffle), then both sides get a salt and ONE join
+  * runs on (key, salt):
   *
-  *   cold keys → plain equi-join (Catalyst picks broadcast or sort-merge);
-  *   hot keys  → left side gets a deterministic salt in [0, saltFactor),
-  *               right side is replicated once per salt value, and the join
-  *               runs on (key, salt) — so one hot key fans out over
-  *               saltFactor reducers instead of melting one.
+  *   cold keys → salt 0 on both sides, so they join as on the key alone;
+  *   hot keys  → left rows get a deterministic salt in [0, saltFactor),
+  *               right rows are replicated once per salt value — so one
+  *               hot key fans out over saltFactor reducers instead of
+  *               melting one.
   *
-  * The union of both plans is result-identical to the plain join (property
-  * tested) — salting only changes the partitioning.
+  * The result is identical to the plain join (property tested) — salting
+  * only changes the partitioning — and each input is scanned once.
   *
   * AQE's skew-join handles sort-merge skew adaptively; this explicit path
   * exists because (a) the north_rule demands it, (b) AQE only splits
@@ -58,12 +59,9 @@ object SkewJoin {
     require(Seq("inner", "left", "left_outer").contains(joinType), s"unsupported joinType $joinType")
     if (hotKeys.isEmpty) return left.join(right, Seq(key), joinType)
 
-    val hot: Column = col(key).isNotNull && col(key).isin(hotKeys: _*)
-    val leftCold = left.filter(col(key).isNull || !col(key).isin(hotKeys: _*))
-    val leftHot = left.filter(hot)
-    val rightCold = right.filter(col(key).isNull || !col(key).isin(hotKeys: _*))
-    val rightHot = right.filter(hot)
-
+    // A null key is never hot (isin yields null, so `when` falls through
+    // to salt 0) and never matches, as in the plain join.
+    val hot: Column = col(key).isin(hotKeys: _*)
     // Deterministic, uniformly-spread salt: hash of the key plus
     // monotonically_increasing_id (partition id in the high bits + row
     // counter — cheap, narrow, no rand()). Hashing only these keeps wide
@@ -73,14 +71,10 @@ object SkewJoin {
     // one input partition still spread across all saltFactor reducers.
     val saltExpr =
       pmod(xxhash64(col(key), monotonically_increasing_id()), lit(saltFactor)).cast("int")
-    val lh = leftHot.withColumn("_salt", saltExpr)
-    val rh = rightHot
-      .withColumn("_salt", explode(sequence(lit(0), lit(saltFactor - 1))))
-      .withColumn("_salt", col("_salt").cast("int"))
-
-    val coldJoined = leftCold.join(rightCold, Seq(key), joinType)
-    val hotJoined = lh.join(rh, Seq(key, "_salt"), joinType).drop("_salt")
-    coldJoined.unionByName(hotJoined)
+    val l = left.withColumn("_salt", when(hot, saltExpr).otherwise(0))
+    val r = right.withColumn("_salt",
+      explode(when(hot, sequence(lit(0), lit(saltFactor - 1))).otherwise(array(lit(0)))))
+    l.join(r, Seq(key, "_salt"), joinType).drop("_salt")
   }
 
   /** Convenience: detect hot keys then salt-join. */

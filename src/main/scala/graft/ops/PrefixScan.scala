@@ -52,7 +52,7 @@ object PrefixScan {
     * offsets. The cache entry is NOT explicitly unpersisted (the result
     * is lazy; the final pass must see the same rows the eager passes
     * saw) — it lives until the session drops it, the same internal-
-    * persist policy as `AsofJoin.persistHot`; long-lived sessions running
+    * persist policy as `AsofJoin`'s hot-key frame; long-lived sessions running
     * many scans should `clearCache()` between them (the Bench stress loop
     * does). Callers composing many scans over one frame can persist it
     * themselves and pass `persistInput = false`.

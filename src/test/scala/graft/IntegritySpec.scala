@@ -82,9 +82,13 @@ class IntegritySpec extends SparkSpec {
     val left = full.select("phash", "w")
     val right = full.select(col("phash"), col("fmt").as("fmt_r")).distinct()
     val j = SkewJoin.saltedJoin(left, right, "phash", "inner", saltFactor = 4, hotKeys = SyntheticImages.hotPhashes.toSeq)
-    val scanLines = j.queryExecution.executedPlan.toString
-      .linesIterator.filter(_.contains("ReadSchema")).mkString("\n")
+    val p = j.queryExecution.executedPlan.toString
+    val scanLines = p.linesIterator.filter(_.contains("ReadSchema")).mkString("\n")
     assert(scanLines.nonEmpty && !scanLines.contains("bytes"), s"bytes not pruned:\n$scanLines")
+    // one join on (key, salt): each input is scanned once
+    val joins = "(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|BroadcastNestedLoopJoin|CartesianProduct)".r
+    assert(joins.findAllIn(p).length == 1, s"expected one join operator:\n$p")
+    assert(p.linesIterator.count(_.contains("FileScan")) == 2, s"expected one scan per input:\n$p")
   }
 
   test("salted join with auto-detection matches plain join on skewed data") {

@@ -580,11 +580,11 @@ class OpsSpec extends SparkSpec {
 
     for (tol <- Seq(None, Some(5L), Some(0L)); fwd <- Seq(false, true)) {
       val join = if (fwd) AsofJoin.forward _ else AsofJoin.backward _
-      val got = join(L, R, Seq("k"), "t", "rt", tol.map(lit(_)), false, 0.05, 32, true)
+      val got = join(L, R, Seq("k"), "t", "rt", tol.map(lit(_)), false, 0.05, 32)
         .select("id", "p").as[(Long, Option[Long])].collect().toMap
       assert(got == reference(tol, fwd), s"asof mismatch at tolerance $tol forward=$fwd")
       // the chunked hot path must agree with the same reference
-      val gotSplit = join(L, R, Seq("k"), "t", "rt", tol.map(lit(_)), true, 0.01, 4, true)
+      val gotSplit = join(L, R, Seq("k"), "t", "rt", tol.map(lit(_)), true, 0.01, 4)
         .select("id", "p").as[(Long, Option[Long])].collect().toMap
       assert(gotSplit == reference(tol, fwd), s"asof chunked mismatch at tolerance $tol forward=$fwd")
     }
@@ -707,9 +707,9 @@ class OpsSpec extends SparkSpec {
     val R = rightRows.toDF("k", "rt", "p")
     for (fwd <- Seq(false, true); tol <- Seq(None, Some(25L))) {
       val join = if (fwd) AsofJoin.forward _ else AsofJoin.backward _
-      val plain = join(L, R, Seq("k"), "t", "rt", tol.map(lit(_)), false, 0.05, 32, true)
+      val plain = join(L, R, Seq("k"), "t", "rt", tol.map(lit(_)), false, 0.05, 32)
         .select("id", "p").as[(Long, Option[Long])].collect().toMap
-      val split = join(L, R, Seq("k"), "t", "rt", tol.map(lit(_)), true, 0.5, 8, true)
+      val split = join(L, R, Seq("k"), "t", "rt", tol.map(lit(_)), true, 0.5, 8)
       val got = split.select("id", "p").as[(Long, Option[Long])].collect().toMap
       assert(got == plain, s"splitHotKeys diverged (forward=$fwd tol=$tol)")
       if (!fwd && tol.isEmpty) {
@@ -724,11 +724,13 @@ class OpsSpec extends SparkSpec {
     // payloads (the chunked path's inner bounds-join would drop it)
     val nullL = ((0 until 200).map(i => (i.toLong, Option.empty[String], 5L)) :+
       ((999L, Option("hot"), 5L))).toDF("id", "k", "t")
-    val gotNullKeys = AsofJoin.backward(nullL, R, Seq("k"), "t", "rt",
-        None, splitHotKeys = true, hotKeyShare = 0.05, hotKeyChunks = 4)
-      .select("id", "p").as[(Long, Option[Long])].collect().toMap
-    assert(gotNullKeys.size == 201, s"null-key left rows dropped: ${gotNullKeys.size}")
-    assert((0 until 200).forall(i => gotNullKeys(i.toLong).isEmpty), "null key must never match")
+    for ((dir, join) <- Seq("backward" -> AsofJoin.backward _, "forward" -> AsofJoin.forward _,
+        "nearest" -> AsofJoin.nearest _)) {
+      val gotNullKeys = join(nullL, R, Seq("k"), "t", "rt", None, true, 0.05, 4)
+        .select("id", "p").as[(Long, Option[Long])].collect().toMap
+      assert(gotNullKeys.size == 201, s"$dir: null-key left rows dropped: ${gotNullKeys.size}")
+      assert((0 until 200).forall(i => gotNullKeys(i.toLong).isEmpty), s"$dir: null key must never match")
+    }
   }
 
   test("json intake: malformed rows surface as corrupt with raw payload, parsed rows extract fields") {

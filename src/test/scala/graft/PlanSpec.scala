@@ -185,16 +185,31 @@ class PlanSpec extends SparkSpec {
   }
 
   test("skew-safe asof: hot keys carry through a (keys, chunk)-partitioned window, boundary patch broadcast") {
-    val joined = Queries.q50AsofSkewSafe(spark, sfDir)
+    for (joined <- Seq(Queries.q50AsofSkewSafe(spark, sfDir), Queries.q56AsofNearestSkew(spark, sfDir))) {
+      joined.collect()
+      val p = plan(joined).split("== Initial Plan ==")(0)
+      assert(p.contains("_chunk"), s"chunked hot path missing from the plan:\n${p.take(1500)}")
+      assert(!p.contains("CartesianProduct") && !p.contains("NestedLoopJoin"),
+        s"chunked asof must not plan a quadratic join:\n${p.take(1500)}")
+      assert(p.contains("BroadcastHashJoin"), s"bounds/carry joins should broadcast:\n${p.take(1500)}")
+      // hot-key windows are partitioned by (user_id, _chunk) — the whole point
+      assert(p.linesIterator.exists(l => l.contains("Window") || l.contains("RunningWindowFunction")),
+        "carry window missing")
+    }
+  }
+
+  test("nearest asof (q52): both carries in ONE Window operator, no physical join") {
+    val joined = Queries.q52AsofNearest(spark, sfDir)
     joined.collect()
     val p = plan(joined).split("== Initial Plan ==")(0)
-    assert(p.contains("_chunk"), s"chunked hot path missing from the plan:\n${p.take(1500)}")
-    assert(!p.contains("CartesianProduct") && !p.contains("NestedLoopJoin"),
-      s"chunked asof must not plan a quadratic join:\n${p.take(1500)}")
-    assert(p.contains("BroadcastHashJoin"), s"bounds/carry joins should broadcast:\n${p.take(1500)}")
-    // hot-key windows are partitioned by (user_id, _chunk) — the whole point
-    assert(p.linesIterator.exists(l => l.contains("Window") || l.contains("RunningWindowFunction")),
-      "carry window missing")
+    assert(!p.contains("CartesianProduct") && !p.contains("SortMergeJoin") && !p.contains("NestedLoopJoin") &&
+      !p.contains("BroadcastHashJoin") && !p.contains("ShuffledHashJoin"),
+      s"nearest asof must not plan a physical join:\n${p.take(1500)}")
+    assert("Exchange hashpartitioning".r.findAllIn(p).length <= 2, s"extra shuffles:\n${p.take(2000)}")
+    val windows = p.linesIterator.filter(_.trim.stripPrefix("+- ").startsWith("Window [")).toSeq
+    assert(windows.size == 1, s"expected one Window operator, got ${windows.size}:\n${p.take(2000)}")
+    assert(windows.head.contains("_mb") && windows.head.contains("_mf"),
+      s"the Window operator must carry both directions:\n${windows.head}")
   }
 
   test("deterministic sampling is one codegen'd scan + filter: no shuffle, no UDF") {
