@@ -376,10 +376,10 @@ object Bench {
         val dedup = new graft.streaming.IncrementalDedup(docLog, sigLog,
           "documents", "doc_id", "text", s"$root/cursor", conf)
         dedup.step(s)(_ => ())
-        dedup.compactSignatures(s, targetFileBytes = 512 * 1024)
+        graft.streaming.SignatureStore.compact(s, sigLog, targetFileBytes = 512 * 1024)
         val head = sigLog.head.get
-        val sigs = sigLog.readTable(s, head, dedup.SigTable)
-        val keysTbl = sigLog.readTable(s, head, dedup.KeysTable)
+        val sigs = sigLog.readTable(s, head, graft.streaming.SignatureStore.SigTable)
+        val keysTbl = sigLog.readTable(s, head, graft.streaming.SignatureStore.KeysTable)
         val batch = docs.orderBy("doc_id").limit(4)
           .select((col("doc_id") + 1000000000L).as("doc_id"),
             concat(col("text"), lit(" qz")).as("text"))

@@ -17,14 +17,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * the operator — the same shape already replaced for minhash
   * (MinHashBandKeys) and RP signatures (RpSignatureExpr).
   *
-  * Bit-parity with the Column form it replaces (`Similarity.cosineColumns`,
-  * property-tested for same-typed arrays — the only shape the engine
-  * produces): float inputs multiply IN FLOAT then widen into a double
-  * left-fold in ascending index order — exactly `zip_with`'s elementwise
-  * product feeding `aggregate`'s fold; `0.0` when both norms' product is
-  * zero; null when lengths differ or any element is null (zip_with pads/
-  * propagates null through the fold). Mixed float/double inputs square
-  * each side in its own representation and cross-multiply in double.
+  * Bit-parity with the Column form it replaces (the test sources'
+  * `SimilarityReference.cosineColumns`, property-tested for same-typed
+  * arrays — the only shape the engine produces): float inputs multiply IN
+  * FLOAT then widen into a double left-fold in ascending index order —
+  * exactly `zip_with`'s elementwise product feeding `aggregate`'s fold;
+  * `0.0` when both norms' product is zero; null when lengths differ or any
+  * element is null (zip_with pads/propagates null through the fold).
+  * Mixed float/double inputs square each side in its own representation
+  * and cross-multiply in double.
   */
 final case class CosineSimExpr(left: Expression, right: Expression) extends BinaryExpression {
 

@@ -12,10 +12,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
   * Bit j = sign of the dot product with hyperplane j, whose components are
   * ±1 derived from xxhash64(j, dim_index) parity — deterministic, no rand(),
   * no fitted state. Bit-parity with the Column form it replaces
-  * (`aggregate(zip_with(vec, dims, ...))` per bit, [[graft.ops.Similarity
-  * .rpSignatureColumns]]): lane hash = XXH64.hashInt(d, XXH64.hashInt(j, 42))
-  * exactly as `xxhash64(lit(j), d)` evaluates, accumulation in ascending-d
-  * double adds exactly as `aggregate`'s left fold.
+  * (`aggregate(zip_with(vec, dims, ...))` per bit, the test sources'
+  * `SimilarityReference.rpSignatureColumns`): lane hash =
+  * XXH64.hashInt(d, XXH64.hashInt(j, 42)) exactly as `xxhash64(lit(j), d)`
+  * evaluates, accumulation in ascending-d double adds exactly as
+  * `aggregate`'s left fold.
   *
   * Why an expression: the Column form builds nbits interpreted
   * aggregate-over-zip_with lambdas PER ROW — the same shape measured 2×

@@ -43,7 +43,7 @@ object PrefixScan {
     * ordered by `orderCols` (each `(name, ascending)`).
     *
     * The input is persisted (MEMORY_AND_DISK) for the duration of the
-    * build by default: the scan needs three eager passes (count, boundary
+    * build: the scan needs three eager passes (count, boundary
     * sample, bucket totals) plus the caller's final pass, and for an
     * input that is itself a corpus-wide aggregation (vocabCoverage,
     * tokenBudgetKeep) re-deriving it 4× is the dominant cost. It also
@@ -55,7 +55,7 @@ object PrefixScan {
     * persist policy as `AsofJoin`'s hot-key frame; long-lived sessions running
     * many scans should `clearCache()` between them (the Bench stress loop
     * does). Callers composing many scans over one frame can persist it
-    * themselves and pass `persistInput = false`.
+    * themselves: an input that is already persisted gets no second entry.
     */
   def runningTotal(
       df: DataFrame,
@@ -63,8 +63,7 @@ object PrefixScan {
       valueCol: String,
       resultCol: String = "running",
       buckets: Int = 64,
-      sampleSize: Int = 1 << 16,
-      persistInput: Boolean = true
+      sampleSize: Int = 1 << 16
   ): DataFrame = {
     require(orderCols.nonEmpty, "orderCols must be non-empty")
     require(buckets >= 1, s"buckets must be >= 1: $buckets")
@@ -76,8 +75,7 @@ object PrefixScan {
     // Skip the persist when the caller already persisted `df` (storageLevel
     // != NONE): re-persisting the same plan is at best a no-op and at worst
     // a second cache entry held for the session (round-6 advisory).
-    val ownPersist = persistInput &&
-      df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    val ownPersist = df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     val in =
       if (ownPersist) df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else df
@@ -150,15 +148,13 @@ object PrefixScan {
       orderCols: Seq[(String, Boolean)],
       valueCol: String,
       resultCol: String = "running",
-      buckets: Int = 64,
-      persistInput: Boolean = true
+      buckets: Int = 64
   ): DataFrame = {
     require(groupCols.nonEmpty, "groupCols must be non-empty")
     val globalOrder = groupCols.map(_ -> true) ++ orderCols
     // runningTotal first: its persist + count materialize the cache the
     // group-totals agg below then reuses (CacheManager matches by plan).
-    val g = runningTotal(df, globalOrder, valueCol, resultCol, buckets,
-      persistInput = persistInput)
+    val g = runningTotal(df, globalOrder, valueCol, resultCol, buckets)
     // U+0001 separator: a plain space (or none) would let multi-column
     // group tuples collide when a value itself contains the separator;
     // group values must not contain U+0001 (and must be non-null -- the

@@ -123,13 +123,13 @@ object Sampling {
     * domain — the [[mixtureSqrtRates]] contract); pass `prefilter =
     * false` to keep the original single-pass plan (required when the
     * stratum column is not a string).
-    */
-  /** @param persistInput the prefiltered path makes three passes over `df0`
-    *   (stratum counts, the survivors window, the deficit check) plus the
-    *   caller's final action — persist it for the build (MEMORY_AND_DISK,
-    *   skipped when the caller already persisted it), mirroring
-    *   [[PrefixScan.runningTotal]]'s policy (round-6 verdict task). The
-    *   cache is left to session lifecycle for the same lazy-result reason.
+    *
+    * The prefiltered path makes three passes over `df0` (stratum counts,
+    * the survivors window, the deficit check) plus the caller's final
+    * action, so it persists `df0` for the build (MEMORY_AND_DISK, skipped
+    * when the caller already persisted it), mirroring
+    * [[PrefixScan.runningTotal]]'s policy. The cache is left to session
+    * lifecycle for the same lazy-result reason.
     */
   def sampleKPerStratum(
       df0: DataFrame,
@@ -137,8 +137,7 @@ object Sampling {
       stratumCol: String,
       k: Int,
       salt: String = "",
-      prefilter: Boolean = true,
-      persistInput: Boolean = true
+      prefilter: Boolean = true
   ): DataFrame = {
     require(k > 0, s"k must be positive: $k")
     require(!df0.columns.contains("_sample_rank"),
@@ -155,7 +154,7 @@ object Sampling {
       s"prefilter needs a string stratum column (got ${df0.schema(stratumCol).dataType}); " +
         "pass prefilter = false")
     val df =
-      if (persistInput && df0.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+      if (df0.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
         df0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else df0
 

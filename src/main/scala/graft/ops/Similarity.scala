@@ -18,22 +18,10 @@ import org.apache.spark.sql.functions._
   *  - [[rpSignature]]: random-hyperplane LSH bit signature (pure Columns,
   *    deterministic hyperplanes from xxhash64) for bucketed ANN / near-dup.
   *
-  * All dot products are `zip_with`+`aggregate` Column expressions (codegen).
+  * Cosine and signature dot products are codegen'd expressions
+  * ([[graft.functions.CosineSimExpr]], [[graft.functions.RpSignatureExpr]]).
   */
 object Similarity {
-
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-
-  def l2norm(a: Column): Column = sqrt(dot(a, a))
-
-  /** Pure-Column cosine — kept as the differential reference for
-    * [[graft.functions.CosineSimExpr]]'s bit-parity property test.
-    */
-  def cosineColumns(a: Column, b: Column): Column = {
-    val d = l2norm(a) * l2norm(b)
-    when(d === 0, lit(0.0)).otherwise(dot(a, b) / d)
-  }
 
   /** Cosine similarity — one codegen'd expression (the interpreted
     * aggregate-over-zip_with form dominates candidate-pair verification;
@@ -49,25 +37,6 @@ object Similarity {
     */
   def rpSignature(vec: Column, dim: Int, nbits: Int): Column =
     graft.functions.RpSignatureExpr(vec, dim, nbits)
-
-  /** The original `functions._` composition of [[rpSignature]] — nbits
-    * interpreted aggregate-over-zip_with lambdas per row. Kept as the
-    * differential oracle for the expression's bit parity (OpsSpec); not on
-    * any hot path.
-    */
-  def rpSignatureColumns(vec: Column, dim: Int, nbits: Int): Column = {
-    require(nbits <= 62, "signature must fit a long")
-    val dims = sequence(lit(0), lit(dim - 1))
-    val bits = (0 until nbits).map { j =>
-      val proj = aggregate(
-        zip_with(vec, dims, (x, d) => x * when(pmod(xxhash64(lit(j), d), lit(2)) === 0, lit(1.0)).otherwise(lit(-1.0))),
-        lit(0.0),
-        (acc, v) => acc + v
-      )
-      when(proj >= 0, lit(1L << j)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
 
   /** Exact cosine top-k per query. `queries(queryIdCol, vecCol)` is
     * broadcast; ties broken by data id for determinism.

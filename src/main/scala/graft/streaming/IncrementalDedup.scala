@@ -5,7 +5,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.ops.Dedup
-import graft.table.{Maintenance, Manifest, SnapshotLog}
+import graft.table.SnapshotLog
 
 /** Incremental corpus dedup riding the snapshot log — the composed
   * production loop: documents arrive as commits to a [[SnapshotLog]]
@@ -51,27 +51,12 @@ final class IncrementalDedup(
     numHashes: Int = 64,
     numBands: Int = 16,
     threshold: Double = 0.7,
-    maxBucket: Int = Dedup.DefaultMaxBucket,
-    /** scan-prune cap: collect ≤ this many distinct incoming band keys and
-      * push them as a filter on the stored corpus keys scan (0 disables);
-      * the session's inFilterThreshold is raised to cover them. */
-    pruneBandKeysLimit: Int = SignatureStore.DefaultPruneBandKeysLimit
+    maxBucket: Int = Dedup.DefaultMaxBucket
 ) {
   require(docLog.root != sigLog.root,
     "sigLog must be a separate snapshot log: committing into the followed log would re-consume own commits forever")
 
-  val SigTable = SignatureStore.SigTable
-  val KeysTable = SignatureStore.KeysTable
   private val follower = new SnapshotFollower(docLog, docTable, cursorDir, conf)
-
-  /** [[SignatureStore.rebuildKeys]] on this consumer's store. */
-  def rebuildKeys(spark: SparkSession): Manifest = SignatureStore.rebuildKeys(spark, sigLog)
-
-  /** [[SignatureStore.compact]] on this consumer's store. */
-  def compactSignatures(
-      spark: SparkSession,
-      targetFileBytes: Long = 128L * 1024 * 1024
-  ): Seq[Maintenance.CompactionStats] = SignatureStore.compact(spark, sigLog, targetFileBytes)
 
   /** Consume up to `maxCommits` newly committed document commits; returns
     * the sequence distance advanced (0 = caught up, callback not run).
@@ -79,7 +64,7 @@ final class IncrementalDedup(
   def step(spark: SparkSession, maxCommits: Int = Int.MaxValue)(onPairs: DataFrame => Unit): Long =
     follower.poll(spark, maxCommits) { (delta, from, to) =>
       SignatureStore.probeAndCommit(sigLog, delta, idCol, textCol, shingleK, numHashes, numBands,
-        threshold, maxBucket, pruneBandKeysLimit, f"dedup-$from%08d-$to%08d")(onPairs)
+        threshold, maxBucket, f"dedup-$from%08d-$to%08d")(onPairs)
       ()
     }
 }

@@ -15,12 +15,14 @@ import graft.table.{LocalFs, Maintenance, Manifest, SnapshotLog}
   * The store is a snapshot log of its own holding two tables, written in
   * the SAME commit: [[SigTable]] (id, sh, bands — [[Dedup.minhashSignatures]])
   * and its row-wise twin [[KeysTable]] (id, band_idx, band_key —
-  * [[Dedup.explodedBandKeys]]).
+  * [[Dedup.explodedBandKeys]]). [[compact]], `Maintenance.rollbackTo` and
+  * `SnapshotLog.checkpoint` keep the two together, so the keys table
+  * always covers the whole store.
   *
   * Per-batch cost at 10^12 stored rows: sign the BATCH + one band-key join
   * against the store — the corpus is never re-shingled, and its scan is
   * pruned rather than paid in full. The batch's distinct band keys are
-  * pushed as an `isin` filter on the stored keys scan (`pruneBandKeysLimit`,
+  * pushed as an `isin` filter on the stored keys scan (`PruneBandKeysLimit`,
   * which raises the session's `spark.sql.parquet.pushdown.inFilterThreshold`
   * to cover them — see [[Dedup.minhashPairsAgainstSignatures]]), and
   * [[compact]] range-clusters the keys table by band_key so parquet min/max
@@ -41,24 +43,9 @@ object SignatureStore {
     */
   val KeysTable = "dedup_keys"
 
-  /** Default cap on the batch's distinct band keys pushed onto the stored
-    * keys scan (0 disables the prune). */
-  private[streaming] val DefaultPruneBandKeysLimit = 16384
-
-  private val IncompleteKey = "dedup_keys_incomplete"
-
-  /** Stored keys are usable only when they cover the WHOLE store: a chain
-    * written by a sig-only writer has sig commits without key entries —
-    * probing an incomplete keys table would silently lose candidate pairs.
-    * Coverage is a CARRIED metric rather than a chain walk (checkpoints
-    * squash the per-commit evidence): the first keyed commit landing on a
-    * chain that already holds un-keyed sig data stamps
-    * `dedup_keys_incomplete=1`, every later commit/compact/checkpoint
-    * carries it, and [[rebuildKeys]] clears it by regenerating full
-    * coverage. Assumes a consistent writer version (an OLD writer appending
-    * sig-only commits to a NEW chain is out of scope).
-    */
-  private def keysComplete(m: Manifest): Boolean = m.metrics.getOrElse(IncompleteKey, 0L) == 0L
+  /** Cap on the batch's distinct band keys pushed onto the stored keys
+    * scan; a batch with more keys probes the unpruned scan. */
+  private val PruneBandKeysLimit = 16384
 
   /** One batch of documents through the store. Signs the batch once
     * (persisted for the call, unpersisted on the way out), pairs it against
@@ -90,7 +77,6 @@ object SignatureStore {
       numBands: Int,
       threshold: Double,
       maxBucket: Int,
-      pruneBandKeysLimit: Int,
       tag: String,
       streamBatches: Map[String, Seq[Long]] = Map.empty
   )(onPairs: DataFrame => Unit): Option[Manifest] = {
@@ -109,11 +95,9 @@ object SignatureStore {
       def notIn(df: DataFrame, ids: DataFrame) = df.join(ids.select("id"), Seq("id"), "left_anti")
       val storeSigs = stored(SigTable)
       val corpusSigs = storeSigs.map(notIn(_, sigs)).getOrElse(sigs.limit(0)) // first batch: no corpus
-      // stored keys serve the probe only when they cover the whole store;
-      // else the probe re-explodes `bands` from the sig table
-      val corpusKeys = stored(KeysTable).filter(_ => head.forall(keysComplete)).map(notIn(_, sigs))
+      val corpusKeys = stored(KeysTable).map(notIn(_, sigs))
       onPairs(Dedup.minhashPairsAgainstSignatures(
-        corpusSigs, sigs, threshold, maxBucket, corpusKeys, pruneBandKeysLimit))
+        corpusSigs, sigs, threshold, maxBucket, corpusKeys, PruneBandKeysLimit))
 
       val newSigs = storeSigs.map(notIn(sigs, _)).getOrElse(sigs)
       val delta =
@@ -125,11 +109,6 @@ object SignatureStore {
         df.write.options(LocalFs.options(spark)).mode("overwrite").parquet(dir)
         table -> Seq(dir)
       }
-      // a keyed commit onto sig data with no keys table stamps the coverage
-      // poison; it stays until rebuildKeys
-      val legacyGap = head.exists(m =>
-        sigLog.tablePaths(m, SigTable).nonEmpty && sigLog.tablePaths(m, KeysTable).isEmpty)
-      val poison = if (legacyGap || !head.forall(keysComplete)) 1L else 0L
       Some(sigLog.commit(Manifest(
         snapshotId = "", sequence = 0L, // assigned by commit
         parentId = head.map(_.snapshotId),
@@ -138,40 +117,12 @@ object SignatureStore {
         partitionsDelta = Seq.empty,
         complete = false,
         tables = dirs,
-        metrics = head.map(_.metrics).getOrElse(Map.empty[String, Long]) + (IncompleteKey -> poison),
+        metrics = head.map(_.metrics).getOrElse(Map.empty[String, Long]),
         sketches = head.map(_.sketches).getOrElse(Map.empty),
         createdAtMs = System.currentTimeMillis(),
         streamBatches = streamBatches,
         tableSchemas = delta.map { case (table, df) => table -> df.schema.json })))
     } finally sigs.unpersist()
-  }
-
-  /** Regenerate the keys table from the FULL stored signature table (one
-    * scan + write, atomic replace) — the upgrade path for sig-only chains
-    * and the repair path should coverage ever be poisoned. Idempotent.
-    */
-  def rebuildKeys(spark: SparkSession, sigLog: SnapshotLog): Manifest = {
-    val head = sigLog.head.getOrElse(
-      throw new IllegalStateException("rebuildKeys: empty signature log"))
-    require(sigLog.tablePaths(head, SigTable).nonEmpty, "rebuildKeys: no stored signatures")
-    val keys = Dedup.explodedBandKeys(sigLog.readTable(spark, head, SigTable))
-    // UUID component: two concurrent rebuildKeys (or a rebuild racing a
-    // batch commit) can read the same head and would otherwise share the
-    // seq-stamped dir — the loser's committed manifest then referencing the
-    // winner's files (same round-5 advisory as IvfIndex.save). A crashed
-    // attempt leaves an uncommitted, invisible orphan dir.
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val dir = sigLog.dataDir(f"dedupkeys-rebuild-${head.sequence + 1}%08d-$nonce%s", KeysTable)
-    keys.write.options(LocalFs.options(spark)).mode("overwrite").parquet(dir)
-    sigLog.commit(Manifest(
-      snapshotId = "", sequence = 0L, parentId = Some(head.snapshotId),
-      constraintVersion = head.constraintVersion, partitionSpec = "keys-rebuild",
-      partitionsDelta = Seq.empty, complete = head.complete,
-      tables = Map(KeysTable -> Seq(dir)),
-      metrics = head.metrics + (IncompleteKey -> 0L),
-      sketches = head.sketches, createdAtMs = System.currentTimeMillis(),
-      tablesReplaced = Seq(KeysTable),
-      tableSchemas = Map(KeysTable -> keys.schema.json)))
   }
 
   /** Maintenance for the store: compact the keys table RANGE-CLUSTERED by
@@ -189,7 +140,7 @@ object SignatureStore {
       targetFileBytes: Long = 128L * 1024 * 1024
   ): Seq[Maintenance.CompactionStats] = {
     val head = sigLog.head.getOrElse(
-      throw new IllegalStateException("compactSignatures: empty signature log"))
+      throw new IllegalStateException("SignatureStore.compact: empty signature log"))
     val stats = Seq.newBuilder[Maintenance.CompactionStats]
     if (sigLog.tablePaths(head, KeysTable).nonEmpty)
       stats += Maintenance.compact(spark, sigLog, KeysTable, targetFileBytes, clusterBy = Seq("band_key"))

@@ -48,7 +48,6 @@ object StreamingDedup {
     if (sigLog.head.exists(m => sigLog.committedStreamBatches(m, checkpointId).contains(batchId))) return None
     if (batch.isEmpty) return None
     SignatureStore.probeAndCommit(sigLog, batch, idCol, textCol, shingleK, numHashes, numBands,
-      threshold, maxBucket, SignatureStore.DefaultPruneBandKeysLimit,
-      s"stream-dedup-$checkpointId-$batchId", Map(checkpointId -> Seq(batchId)))(onPairs)
+      threshold, maxBucket, s"stream-dedup-$checkpointId-$batchId", Map(checkpointId -> Seq(batchId)))(onPairs)
   }
 }

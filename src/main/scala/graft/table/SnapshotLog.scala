@@ -99,18 +99,8 @@ final class SnapshotLog(val root: String, conf: Configuration) extends Serializa
   // Spark's partition discovery, which (for multi-root reads of tables that
   // ALSO have real partition dirs below) ascends past the roots and rejects
   // differing batch tags as conflicting partition structures.
-  def dataDir(tag: String, table: String): String = {
-    // The bare `stream-<digits>` tag shape is RESERVED: it is how
-    // [[committedStreamBatches]] recognizes pre-ledger stream deltas, whose
-    // partitionsDelta ints count as committed micro-batch ids under every
-    // checkpoint identity. A batch commit reusing that shape would make a
-    // real micro-batch with a colliding id silently skipped (dropped data).
-    // New-format stream tags (`stream-<checkpointId>-<batchId>`) don't
-    // match because checkpoint ids are never empty.
-    require(!tag.matches("stream-\\d+"),
-      s"tag '$tag' matches the reserved legacy stream-delta shape stream-<digits>; pick another tag")
+  def dataDir(tag: String, table: String): String =
     new Path(root, s"data/p-$tag/$table").toString
-  }
 
   private[table] def manifestPath(seq: Long) = new Path(snapDir, f"$seq%08d.json")
 
@@ -185,8 +175,7 @@ final class SnapshotLog(val root: String, conf: Configuration) extends Serializa
         partitionsDelta = committedPartitions(m).toSeq.sorted,
         // stored newest-first so tablePaths' chain-order reverse round-trips
         tables = tableNames.map(t => t -> tablePaths(m, t).reverse).toMap,
-        streamBatches = (chain(m).flatMap(_.streamBatches.keys).toSet ++
-          (if (chain(m).exists(isLegacyStreamDelta)) Set("default") else Set.empty[String]))
+        streamBatches = chain(m).flatMap(_.streamBatches.keys).toSet
           .map((k: String) => k -> committedStreamBatches(m, k).toSeq.sorted).toMap,
         tableSchemas = tableNames.flatMap(t => tableSchemaJson(m, t).map(t -> _)).toMap,
         checkpoint = true,
@@ -201,44 +190,11 @@ final class SnapshotLog(val root: String, conf: Configuration) extends Serializa
   def committedPartitions(m: Manifest): Set[Int] =
     chain(m).flatMap(_.partitionsDelta).toSet
 
-  /** A stream-batch delta commit written by the PRE-ledger format (before
-    * the `streamBatches` manifest field): it recorded the micro-batch id in
-    * `partitionsDelta` with data dirs tagged `p-stream-<batchId>` and no
-    * checkpoint identity. Recognized by that tag shape (new-format stream
-    * tags are `p-stream-<checkpointId>-<batchId>`; batch jobs use other
-    * tags) so resuming a pre-change stream log keeps its exactly-once-
-    * visible guarantee instead of re-committing its history as duplicates
-    * (round-3 advisory). Restricted to non-checkpoint manifests — a
-    * checkpoint squash mixes true source partitions into `partitionsDelta`,
-    * and [[checkpoint]] carries legacy ids forward under the "default"
-    * identity key explicitly.
-    *
-    * Tag-collision guard (round-5 advisory): beyond [[dataDir]] reserving
-    * the bare `stream-<digits>` tag, recognition requires the FULL legacy
-    * shape — no `streamBatches` ledger (the pre-ledger writer predates the
-    * field) and EVERY data path of the commit under a `p-stream-<digits>`
-    * dir (the legacy writer tagged its whole delta that way). A modern
-    * batch commit that somehow carries one colliding hand-built path among
-    * its tables is NOT classified legacy, so a real micro-batch with the
-    * colliding id is never silently skipped (dropped data).
-    */
-  private def isLegacyStreamDelta(c: Manifest): Boolean = {
-    val paths = c.tables.values.flatten
-    !c.checkpoint && c.streamBatches.isEmpty && c.partitionsDelta.nonEmpty &&
-      paths.nonEmpty && paths.forall(_.split('/').exists(_.matches("p-stream-\\d+")))
-  }
-
   /** Micro-batch ids already committed under a streaming checkpoint
-    * identity (union of deltas up the chain). Legacy pre-ledger stream
-    * commits had a single implicit identity and their gate keyed on batch
-    * id alone — their ids count as committed under EVERY identity, matching
-    * the guarantee they were written under.
+    * identity: the union of the `streamBatches` ledger entries up the chain.
     */
   def committedStreamBatches(m: Manifest, checkpointId: String): Set[Long] =
-    chain(m).flatMap { c =>
-      c.streamBatches.getOrElse(checkpointId, Seq.empty) ++
-        (if (isLegacyStreamDelta(c)) c.partitionsDelta.map(_.toLong) else Seq.empty)
-    }.toSet
+    chain(m).flatMap(_.streamBatches.getOrElse(checkpointId, Seq.empty)).toSet
 
   /** Chain prefix relevant to `table`: newest-first, ending at (and
     * including) the first manifest that replaces the table (compaction) —

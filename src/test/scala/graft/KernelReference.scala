@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
 
 import graft.sketch.{ColumnProfiler, Sketches}
 
-/** Differential references for `TopK`, `MinHashUtil` and `ColumnProfiler`:
-  * the kernels they replaced or spell out, checked against them by OpsSpec
-  * and SketchSpec.
+/** Differential references for `TopK`, `MinHashUtil`, `ColumnProfiler`,
+  * `CosineSimExpr` and `RpSignatureExpr`: the kernels they replaced or
+  * spell out, checked against them by OpsSpec and SketchSpec.
   */
 object TopKReference {
 
@@ -168,5 +168,39 @@ object ProfilerReference {
       freqFmt = buf.fqFmt.sk.toByteArray(new ArrayOfStringsSerDe),
       freqPhash = buf.fqPh.sk.toByteArray
     )
+  }
+}
+
+object SimilarityReference {
+
+  def dot(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
+
+  def l2norm(a: Column): Column = sqrt(dot(a, a))
+
+  /** Pure-Column cosine — the differential reference for
+    * `graft.functions.CosineSimExpr`'s bit-parity property test.
+    */
+  def cosineColumns(a: Column, b: Column): Column = {
+    val d = l2norm(a) * l2norm(b)
+    when(d === 0, lit(0.0)).otherwise(dot(a, b) / d)
+  }
+
+  /** The original `functions._` composition of `Similarity.rpSignature` —
+    * nbits interpreted aggregate-over-zip_with lambdas per row. The
+    * differential oracle for `graft.functions.RpSignatureExpr`'s bit parity.
+    */
+  def rpSignatureColumns(vec: Column, dim: Int, nbits: Int): Column = {
+    require(nbits <= 62, "signature must fit a long")
+    val dims = sequence(lit(0), lit(dim - 1))
+    val bits = (0 until nbits).map { j =>
+      val proj = aggregate(
+        zip_with(vec, dims, (x, d) => x * when(pmod(xxhash64(lit(j), d), lit(2)) === 0, lit(1.0)).otherwise(lit(-1.0))),
+        lit(0.0),
+        (acc, v) => acc + v
+      )
+      when(proj >= 0, lit(1L << j)).otherwise(lit(0L))
+    }
+    bits.reduce(_ + _)
   }
 }

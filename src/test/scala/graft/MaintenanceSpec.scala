@@ -388,37 +388,6 @@ class MaintenanceSpec extends SparkSpec {
     assert(follower.cursor == 14L)
   }
 
-  test("legacy pre-ledger stream commits (batch id in partitionsDelta) still gate replay") {
-    import graft.streaming.StreamingValidation.{checkpointIdentity, processAndCommit}
-    import graft.table.Manifest
-    val log = newLog()
-    val imgs = SyntheticImages.images(spark, 100, 1).toDF()
-    // Fabricate what the pre-ledger format wrote for micro-batch 5: the
-    // batch id in partitionsDelta, data dirs tagged p-stream-<batchId>,
-    // no streamBatches entry.
-    log.commit(Manifest(
-      snapshotId = "", sequence = 0L, parentId = None,
-      constraintVersion = "img/1.0.0", partitionSpec = "legacy",
-      partitionsDelta = Seq(5), complete = false,
-      // built by hand: dataDir now RESERVES the legacy stream-<digits> tag
-      // shape (a new commit can't produce it), but this fixture mimics a
-      // log written by the pre-ledger code itself
-      tables = Map("annotated" ->
-        Seq(new org.apache.hadoop.fs.Path(log.root, "data/p-stream-5/annotated").toString)),
-      metrics = Map.empty, sketches = Map.empty,
-      createdAtMs = System.currentTimeMillis()
-    ))
-    val id = checkpointIdentity(spark, Files.createTempDirectory("graft_legacy_ckpt").toString)
-    // replaying the legacy batch id is a no-op under ANY identity...
-    assert(processAndCommit(log, v1Gate, imgs, 5L, id).isEmpty)
-    // ...while new ids commit normally
-    assert(processAndCommit(log, v1Gate, imgs, 6L, id).isDefined)
-    // and the gate survives a checkpoint squash (carried under "default")
-    log.checkpoint(log.head.get)
-    assert(processAndCommit(log, v1Gate, imgs, 5L, id).isEmpty)
-    assert(log.committedStreamBatches(log.head.get, id).contains(5L))
-  }
-
   test("compact('valid') is rejected: valid is a derived view of annotated") {
     val log = newLog()
     new ValidationJob(spark, log, ImageConstraints.v1, commitBatch = 1).run(inputFor, Seq(0))
@@ -445,7 +414,7 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("IncrementalDedup: cross-batch pairs via stored signatures; replayed slice never double-commits") {
-    import graft.streaming.IncrementalDedup
+    import graft.streaming.{IncrementalDedup, SignatureStore}
     import graft.table.Manifest
     import spark.implicits._
     val log = newLog()
@@ -489,7 +458,7 @@ class MaintenanceSpec extends SparkSpec {
     while (dedup.step(spark, maxCommits = 1)(collectPairs) > 0) ()
     assert(seen == Vector(Set.empty, Set((3L, 103L)), Set((3L, 203L), (103L, 203L))),
       s"per-slice cross-batch pairs: $seen")
-    val sigRows = sigLog.readTable(spark, sigLog.head.get, dedup.SigTable).count()
+    val sigRows = sigLog.readTable(spark, sigLog.head.get, SignatureStore.SigTable).count()
     assert(sigRows == 13, s"signature table must hold every ingested doc once: $sigRows")
 
     // crash window: the cursor write is LOST after the last slice's
@@ -505,7 +474,7 @@ class MaintenanceSpec extends SparkSpec {
     assert(replayed == Vector(Set((3L, 203L), (103L, 203L))),
       s"replayed slice must re-derive exactly its original pairs: $replayed")
     assert(sigLog.head.get.sequence == seqBefore, "replay committed duplicate signature manifests")
-    assert(sigLog.readTable(spark, sigLog.head.get, dedup.SigTable).count() == 13,
+    assert(sigLog.readTable(spark, sigLog.head.get, SignatureStore.SigTable).count() == 13,
       "replay doubled the signature table")
 
     // a producer metadata commit (checkpoint) adds no documents: the step
@@ -517,9 +486,9 @@ class MaintenanceSpec extends SparkSpec {
     assert(dedup.step(spark)(_ => fail("caught up")) == 0L)
   }
 
-  test("IncrementalDedup keys table: clustered compaction + pruned probe parity; legacy chains poison until rebuildKeys") {
+  test("IncrementalDedup keys table: clustered compaction + pruned probe parity") {
     import graft.ops.Dedup
-    import graft.streaming.IncrementalDedup
+    import graft.streaming.{IncrementalDedup, SignatureStore}
     import graft.table.Manifest
     import spark.implicits._
     import org.apache.spark.sql.functions.col
@@ -546,17 +515,16 @@ class MaintenanceSpec extends SparkSpec {
     assert(dedup.step(spark)(_ => ()) > 0)
     // keys twin lands in the SAME commit, one row per (doc, band)
     val head1 = sigLog.head.get
-    assert(head1.tables.contains(dedup.KeysTable) && head1.tables.contains(dedup.SigTable))
-    val keyRows = sigLog.readTable(spark, head1, dedup.KeysTable)
+    assert(head1.tables.contains(SignatureStore.KeysTable) && head1.tables.contains(SignatureStore.SigTable))
+    val keyRows = sigLog.readTable(spark, head1, SignatureStore.KeysTable)
     assert(keyRows.count() == 60 * 16, "keys table must hold numBands rows per doc")
-    assert(head1.metrics.get("dedup_keys_incomplete").contains(0L))
 
     // clustered compaction: parity + band_key ranges of output files are
     // non-overlapping (band_key-PRIMARY range clustering — the pushed probe
     // filter is on band_key alone, so that is the column whose file min/max
     // must be narrow; small target forces >1 file)
-    dedup.compactSignatures(spark, targetFileBytes = 2 * 1024)
-    val keysAfter = sigLog.readTable(spark, sigLog.head.get, dedup.KeysTable)
+    SignatureStore.compact(spark, sigLog, targetFileBytes = 2 * 1024)
+    val keysAfter = sigLog.readTable(spark, sigLog.head.get, SignatureStore.KeysTable)
     assert(keysAfter.count() == 60 * 16, "compaction changed keys row count")
     val keyFiles = keysAfter.select(org.apache.spark.sql.functions.input_file_name().as("f"),
         col("band_key"))
@@ -577,49 +545,18 @@ class MaintenanceSpec extends SparkSpec {
       got = df.select("corpus_id", "incoming_id").as[(Long, Long)].collect().toSet) > 0)
     assert(got == Set((3L, 1003L)), s"pruned probe diverged: $got")
     // direct parity on the same stored frames
-    val sigs = sigLog.readTable(spark, sigLog.head.get, dedup.SigTable)
-    val keys2 = sigLog.readTable(spark, sigLog.head.get, dedup.KeysTable)
+    val sigs = sigLog.readTable(spark, sigLog.head.get, SignatureStore.SigTable)
+    val keys2 = sigLog.readTable(spark, sigLog.head.get, SignatureStore.KeysTable)
     val batchSigs = Dedup.minhashSignatures(
       Seq((9003L, doc(3L, "first")._2 + " zq")).toDF("doc_id", "text"), "doc_id", "text")
     def pairsOf(ck: Option[org.apache.spark.sql.DataFrame], limit: Int) =
       Dedup.minhashPairsAgainstSignatures(sigs, batchSigs, 0.7, Dedup.DefaultMaxBucket, ck, limit)
         .select("corpus_id", "incoming_id").as[(Long, Long)].collect().toSet
     assert(pairsOf(None, 0) == pairsOf(Some(keys2), 16384), "stored-keys pruned path diverged")
-
-    // legacy chain (sig-only commits) poisons coverage until rebuildKeys
-    val legacyLog = newLog()
-    val legacySigs = Dedup.minhashSignatures(
-      (0L until 10L).map(doc(_, "leg")).toDF("doc_id", "text"), "doc_id", "text")
-    val legacyDir = legacyLog.dataDir("legacysigs-1", "dedup_sigs")
-    legacySigs.write.parquet(legacyDir)
-    legacyLog.commit(Manifest("", 0L, None, "dedup-sigs/1", "incremental", Seq.empty,
-      complete = false, tables = Map("dedup_sigs" -> Seq(legacyDir)),
-      metrics = Map.empty, sketches = Map.empty, createdAtMs = 1L,
-      tableSchemas = Map("dedup_sigs" -> legacySigs.schema.json)))
-    val docLog2 = newLog()
-    val dedup2 = new IncrementalDedup(docLog2, legacyLog, "documents", "doc_id", "text",
-      Files.createTempDirectory("graft_legacy_cursor").toString, spark.sparkContext.hadoopConfiguration)
-    val dir2 = docLog2.dataDir("docs-l1", "documents")
-    val df2 = Seq((5000L, doc(3L, "leg")._2 + " qz")).toDF("doc_id", "text")
-    df2.write.parquet(dir2)
-    docLog2.commit(Manifest("", 0L, None, "docs/1", "batch", Seq.empty, complete = false,
-      tables = Map("documents" -> Seq(dir2)), metrics = Map.empty, sketches = Map.empty,
-      createdAtMs = 1L, tableSchemas = Map("documents" -> df2.schema.json)))
-    var legacyPairs = Set.empty[(Long, Long)]
-    assert(dedup2.step(spark)(df =>
-      legacyPairs = df.select("corpus_id", "incoming_id").as[(Long, Long)].collect().toSet) > 0)
-    assert(legacyPairs == Set((3L, 5000L)), "legacy fallback probe must still find pairs")
-    assert(legacyLog.head.get.metrics.get("dedup_keys_incomplete").contains(1L),
-      "upgrade onto un-keyed sig data must stamp the coverage poison")
-    dedup2.rebuildKeys(spark)
-    val h2 = legacyLog.head.get
-    assert(h2.metrics.get("dedup_keys_incomplete").contains(0L))
-    assert(legacyLog.readTable(spark, h2, dedup2.KeysTable).count() == 11 * 16,
-      "rebuild must cover every stored doc (10 legacy + 1 new)")
   }
 
   test("IncrementalDedup randomized interleavings ≡ slice-aware model (commits, bounded steps, cursor crashes)") {
-    import graft.streaming.IncrementalDedup
+    import graft.streaming.{IncrementalDedup, SignatureStore}
     import graft.table.Manifest
     import spark.implicits._
     for (seed <- Seq(41, 42)) {
@@ -701,7 +638,7 @@ class MaintenanceSpec extends SparkSpec {
       assert(delivered == expected,
         s"seed $seed: delivered ${delivered.toSeq.sorted} != expected ${expected.toSeq.sorted}")
       if (stored.nonEmpty)
-        assert(sigLog.readTable(spark, sigLog.head.get, dedup.SigTable).count() == nextId,
+        assert(sigLog.readTable(spark, sigLog.head.get, SignatureStore.SigTable).count() == nextId,
           s"seed $seed: signature table must hold every ingested doc exactly once")
     }
   }

@@ -446,7 +446,7 @@ class OpsSpec extends SparkSpec {
     for (nbits <- Seq(1, 12, 62)) {
       val mismatches = df.select(
         Similarity.rpSignature(col("embedding"), dim, nbits).as("fast"),
-        Similarity.rpSignatureColumns(col("embedding"), dim, nbits).as("ref")
+        SimilarityReference.rpSignatureColumns(col("embedding"), dim, nbits).as("ref")
       ).filter(col("fast") =!= col("ref")).count()
       assert(mismatches == 0, s"nbits=$nbits: $mismatches signature mismatches")
     }
@@ -466,7 +466,7 @@ class OpsSpec extends SparkSpec {
     val df = synth.toDF("i", "a", "b")
     val mismatches = df.select(
       Similarity.cosine(col("a"), col("b")).as("fast"),
-      Similarity.cosineColumns(col("a"), col("b")).as("ref")
+      SimilarityReference.cosineColumns(col("a"), col("b")).as("ref")
     ).filter(!(col("fast") <=> col("ref"))).count()
     assert(mismatches == 0, s"$mismatches cosine mismatches vs Column form")
   }

@@ -36,27 +36,10 @@ class SnapshotSpec extends SparkSpec {
   private def countMetrics(m: graft.table.Manifest): Map[String, Long] =
     m.metrics.filter { case (k, _) => k.startsWith("n_") || k == "violations_rejected" }
 
-  test("dataDir rejects the reserved legacy stream-<digits> tag shape") {
-    // `stream-42` is how committedStreamBatches recognizes PRE-ledger stream
-    // deltas; a batch commit reusing it would count its partitionsDelta ints
-    // as committed micro-batch ids under every checkpoint identity (a real
-    // micro-batch with a colliding id would then be silently skipped)
-    val log = newLog()
-    val e = intercept[IllegalArgumentException](log.dataDir("stream-42", "annotated"))
-    assert(e.getMessage.contains("reserved"))
-    // the new-format shapes stay legal
-    log.dataDir("stream-ckpt7-3", "annotated")
-    log.dataDir("stream-dedup-abc-1", "dedup_signatures")
-    log.dataDir("0_1_2", "annotated")
-  }
-
-  test("a modern batch commit with a colliding p-stream-<digits> path is NOT a legacy stream delta") {
+  test("stream-batch ids come only from the ledger, per identity") {
     import graft.table.Manifest
-    // dataDir rejects the tag, but a caller could still hand-build such a
-    // path — legacy recognition must require the FULL pre-ledger shape
-    // (EVERY path under p-stream-<digits>, no streamBatches ledger), so a
-    // modern batch commit carrying one colliding path among its tables never
-    // marks batch 42 committed (it would be silently skipped otherwise).
+    // a batch commit whose partitionsDelta and paths look like a stream
+    // batch marks nothing committed: only a streamBatches entry does
     val log = newLog()
     log.commit(Manifest(
       snapshotId = "", sequence = 0L, parentId = None,
@@ -68,9 +51,9 @@ class SnapshotSpec extends SparkSpec {
       metrics = Map.empty, sketches = Map.empty,
       createdAtMs = System.currentTimeMillis()))
     assert(log.committedStreamBatches(log.head.get, "any-checkpoint").isEmpty,
-      "mixed-path batch commit must not be classified as a legacy stream delta")
-    // a commit that DOES carry a streamBatches ledger is new-format by
-    // definition, even if all its paths collide with the legacy tag shape
+      "a batch commit's partitionsDelta must not count as stream-batch ids")
+    // a commit that carries a streamBatches ledger counts under its own
+    // identity only
     log.commit(Manifest(
       snapshotId = "", sequence = 0L, parentId = Some(log.head.get.snapshotId),
       constraintVersion = "img/1.0.0", partitionSpec = "stream",
@@ -81,7 +64,24 @@ class SnapshotSpec extends SparkSpec {
       streamBatches = Map("ckpt-a" -> Seq(7L))))
     assert(log.committedStreamBatches(log.head.get, "ckpt-a") == Set(7L))
     assert(log.committedStreamBatches(log.head.get, "other-ckpt").isEmpty,
-      "ledger ids are per-identity; partitionsDelta of a new-format commit must not leak as legacy ids")
+      "ledger ids are per-identity; partitionsDelta must not leak into another identity")
+  }
+
+  test("stream-<digits> is an ordinary tag: a commit under it adds no stream-batch ids") {
+    import graft.table.Manifest
+    val log = newLog()
+    val dir = log.dataDir("stream-42", "annotated")
+    log.commit(Manifest(
+      snapshotId = "", sequence = 0L, parentId = None,
+      constraintVersion = "img/1.0.0", partitionSpec = "batch",
+      partitionsDelta = Seq(42), complete = true,
+      tables = Map("annotated" -> Seq(dir)),
+      metrics = Map.empty, sketches = Map.empty,
+      createdAtMs = System.currentTimeMillis()))
+    val cp = log.checkpoint(log.head.get)
+    assert(cp.streamBatches.isEmpty, cp.streamBatches.toString)
+    for (m <- Seq(log.read(1L), cp); id <- Seq("default", "ckpt-a"))
+      assert(log.committedStreamBatches(m, id).isEmpty, s"$id at ${m.sequence}")
   }
 
   test("commit lost-update detection: foreign bytes at dest fail the survived-rename check") {
