@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftFunctions, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.engine.{EngineOptions, ImageConstraints, ValidationEngine}
@@ -254,11 +254,9 @@ object Bench {
           lastObserved.set(-1L)
           lastObservedIncoming.set(-1L)
           val (ok, dt) = once()
-          // the listener bus is async; wait briefly for the metric to land
-          var waited = 0
-          while (ok && !noLshMetric.contains(name) && lastObserved.get() < 0 && waited < 50) {
-            Thread.sleep(100); waited += 1
-          }
+          // QueryExecutionListener callbacks arrive on the shared listener
+          // queue; drain it so the query's metric has landed
+          GraftFunctions.drainSharedListeners(s.sparkContext)
           if (!noLshMetric.contains(name)) lshDrops(name) = lastObserved.get()
           if (lastObservedIncoming.get() >= 0) lshDropsIncoming(name) = lastObservedIncoming.get()
           // Warm twin IN-SESSION (round-5 verdict task): single-shot stress
@@ -272,13 +270,7 @@ object Bench {
             // DRAIN the warm run's async metric events before moving on:
             // an event landing after the NEXT query's reset would be
             // attributed to that query (wrong drop counts in the artifact)
-            var w2 = 0
-            while (okW && !noLshMetric.contains(name) && lastObserved.get() < 0 && w2 < 50) {
-              Thread.sleep(100); w2 += 1
-            }
-            while (okW && lshDropsIncoming.contains(name) && lastObservedIncoming.get() < 0 && w2 < 50) {
-              Thread.sleep(100); w2 += 1
-            }
+            GraftFunctions.drainSharedListeners(s.sparkContext)
           }
           // Operators persist intermediates (signature frames, asof hot
           // subsets) scoped to their own execution; dropping them between
@@ -322,7 +314,7 @@ object Bench {
           val t0 = System.nanoTime()
           val r = body
           val dt = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(2000) // listener bus is async
+          GraftFunctions.drainSharedListeners(s.sparkContext) // task ends land on the async shared queue
           s.sparkContext.removeSparkListener(probeListener)
           (r, dt, bytesRead.get())
         }

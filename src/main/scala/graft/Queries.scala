@@ -793,7 +793,7 @@ object Queries {
         .map(i => SyntheticImages.rowOf(i, drift = false, contentPool = 0))
         .toDF()
     }
-    val job = new graft.table.ValidationJob(s, log, ImageConstraints.v1, commitBatch = 1, profileColumns = false)
+    val job = new graft.table.ValidationJob(s, log, ImageConstraints.v1, commitBatch = 1)
     val m = job.run(inputFor, Seq(0, 1))
     def fingerprint(df: DataFrame): (Long, Long) = {
       // bit_xor fold: order-insensitive and overflow-free (a SUM of 64-bit

@@ -1,5 +1,7 @@
 package graft.drift
 
+import java.util.Base64
+
 import graft.sketch.ColumnProfiler.SketchProfile
 import graft.sketch.Sketches
 
@@ -7,7 +9,8 @@ import graft.sketch.Sketches
   * KS distance on t-digest CDFs for numeric columns, PSI on t-digest decile
   * bins and on categorical frequency sketches. Pure driver-side math over
   * merged sketches — no data movement, so scoring cost is independent of
-  * table size.
+  * table size. Sketches are read by their [[graft.sketch.ColumnProfiler]]
+  * names, from a profile or from a committed manifest's `sketches`.
   */
 object Drift {
 
@@ -137,38 +140,25 @@ object Drift {
       psiMax: Double = 0.1
   ): DriftReport = report(profileOf(baseline), profileOf(current), ksMax, psiMax)
 
-  private def profileOf(m: graft.table.Manifest): SketchProfile = {
-    def b64(k: String): Array[Byte] = java.util.Base64.getDecoder.decode(
-      m.sketches.getOrElse(k, throw new IllegalArgumentException(s"manifest ${m.snapshotId} has no sketch '$k'")))
-    SketchProfile(
-      nRows = m.metrics.getOrElse("n_success", 0L),
-      hllImageId = b64("hll_image_id"),
-      hllPhash = b64("hll_phash"),
-      tdW = b64("td_w"),
-      tdH = b64("td_h"),
-      tdByteSize = m.sketches.get("td_byte_size").map(java.util.Base64.getDecoder.decode),
-      freqFmt = b64("freq_fmt"),
-      freqPhash = b64("freq_phash")
-    )
-  }
+  private def profileOf(m: graft.table.Manifest): SketchProfile =
+    SketchProfile(m.metrics.getOrElse("n_success", 0L), m.sketches.map { case (k, v) => k -> Base64.getDecoder.decode(v) })
 
   /** Full drift check of a snapshot profile vs a baseline profile
-    * (north_rule `drift(w,h,bytes,fmt)`): KS + PSI on w/h (+ byte size when
-    * profiled), PSI on the fmt mix.
+    * (north_rule `drift(w,h,bytes,fmt)`): KS + PSI on `td_w`/`td_h` (+
+    * `td_byte_size` when both sides profiled it), PSI on the `freq_fmt`
+    * mix. Throws when either side lacks `td_w`, `td_h` or `freq_fmt`.
     */
   def report(baseline: SketchProfile, current: SketchProfile, ksMax: Double = 0.1, psiMax: Double = 0.1): DriftReport = {
-    val numeric = Seq(
-      ("w", baseline.tdW, current.tdW),
-      ("h", baseline.tdH, current.tdH)
-    ) ++ (for { b <- baseline.tdByteSize; c <- current.tdByteSize } yield ("byte_size", b, c)).toSeq
-    val scores = numeric.flatMap { case (col, b, c) =>
+    val byteSize = Seq("byte_size").filter(c => Seq(baseline, current).forall(_.sketches.contains(s"td_$c")))
+    val scores = (Seq("w", "h") ++ byteSize).flatMap { col =>
+      val (b, c) = (baseline.sketch(s"td_$col"), current.sketch(s"td_$col"))
       val k = ks(b, c); val p = psiNumeric(b, c)
       Seq(
         DriftScore("ks", col, k, ksMax, k <= ksMax),
         DriftScore("psi", col, p, psiMax, p <= psiMax)
       )
     } :+ {
-      val v = psiCategorical(baseline.freqFmt, current.freqFmt)
+      val v = psiCategorical(baseline.sketch("freq_fmt"), current.sketch("freq_fmt"))
       DriftScore("psi", "fmt", v, psiMax, v <= psiMax)
     }
     DriftReport(scores)

@@ -37,10 +37,8 @@ final case class ConstraintRegistry(
   val byVersion: Map[String, ConstraintSet] = sets.map(cs => cs.version -> cs).toMap
   require(byVersion.size == sets.size, "duplicate constraint-set versions in registry")
 
-  private def isRegexKey(k: String) = k.length >= 2 && k.startsWith("/") && k.endsWith("/")
-
   /** Exact-match routes (non-slash-wrapped keys). */
-  val exactRoutes: Map[String, String] = routes.filterNot { case (k, _) => isRegexKey(k) }
+  val exactRoutes: Map[String, String] = routes.filterNot { case (k, _) => ConstraintRegistry.isRegexKey(k) }
 
   /** Ordered regex routes: explicit ones first, then slash-wrapped `routes`
     * keys (sorted for determinism — Map iteration order is unspecified).
@@ -53,7 +51,7 @@ final case class ConstraintRegistry(
     * always consulted before the map-sourced keys.
     */
   val allRegexRoutes: Seq[(String, String)] =
-    regexRoutes ++ routes.collect { case (k, v) if isRegexKey(k) => (k.substring(1, k.length - 1), v) }.toSeq.sorted
+    regexRoutes ++ routes.collect { case (k, v) if ConstraintRegistry.isRegexKey(k) => (k.substring(1, k.length - 1), v) }.toSeq.sorted
 
   require(
     (exactRoutes.values ++ allRegexRoutes.map(_._2)).forall(byVersion.contains), {
@@ -71,6 +69,9 @@ final case class ConstraintRegistry(
 }
 
 object ConstraintRegistry {
+  /** A slash-wrapped route key (`/regex/`) names a regex route. */
+  private def isRegexKey(k: String) = k.length >= 2 && k.startsWith("/") && k.endsWith("/")
+
   /** Register sets routable by their own version ids (URI = `$id` case). */
   def of(sets: ConstraintSet*): ConstraintRegistry =
     ConstraintRegistry(sets, sets.map(cs => cs.version -> cs.version).toMap)
@@ -90,7 +91,6 @@ object ConstraintRegistry {
       baseUris: Seq[String] = Nil,
       uriExtension: String = ""
   ): ConstraintRegistry = {
-    def isRegexKey(k: String) = k.length >= 2 && k.startsWith("/") && k.endsWith("/")
     val (regex, exact) = routes.partition { case (k, _) => isRegexKey(k) }
     require(exact.map(_._1).distinct.size == exact.size,
       s"duplicate exact route keys: ${exact.map(_._1).diff(exact.map(_._1).distinct).distinct}")

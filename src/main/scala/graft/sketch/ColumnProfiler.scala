@@ -1,11 +1,16 @@
 package graft.sketch
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** One-pass sketch profile of an image+caption snapshot — the column
   * statistics block of the north_star: HLL++ on image_id/phash, t-digest on
-  * w/h (and optionally byte size), frequent-items on fmt and phash.
+  * w/h/byte size, frequent-items on fmt and phash.
+  *
+  * [[Profiled]] is the one list of which column gets which sketch under
+  * which manifest name. [[profile]] and the validation commit's
+  * Observation both aggregate the entries whose column the frame has, and
+  * drift reads the sketches back by those names.
   *
   * [[profile]] is one hash-free `agg` of udaf sketch aggregators — Spark
   * runs partial aggregation per partition and merges partials on the final
@@ -15,44 +20,39 @@ import org.apache.spark.sql.functions._
   */
 object ColumnProfiler {
 
-  /** Serialized, mergeable snapshot statistics (persisted in the manifest). */
-  final case class SketchProfile(
-      nRows: Long,
-      hllImageId: Array[Byte],
-      hllPhash: Array[Byte],
-      tdW: Array[Byte],
-      tdH: Array[Byte],
-      tdByteSize: Option[Array[Byte]],
-      freqFmt: Array[Byte],
-      freqPhash: Array[Byte]
-  ) {
-    def distinctImageIds: Double = Sketches.hllEstimate(hllImageId)
-    def distinctPhashes: Double = Sketches.hllEstimate(hllPhash)
+  /** Sketch `name` of `kind` over `value`, profiled when the frame has
+    * `column`. */
+  final case class Profile(name: String, column: String, value: Column, kind: Sketches.Kind[_, _]) {
+    /** The aggregate of `kind` over `keep(value)`, named `name`. */
+    def aggregate(keep: Column => Column): Column = kind.aggregate(keep(value)).as(name)
+  }
+
+  val Profiled: Seq[Profile] = Seq(
+    Profile("hll_image_id", "image_id", col("image_id"), Sketches.HllString()),
+    Profile("hll_phash", "phash", col("phash"), Sketches.HllLong()),
+    Profile("td_w", "w", col("w"), Sketches.TDigest()),
+    Profile("td_h", "h", col("h"), Sketches.TDigest()),
+    // north_star names byte-size quantiles; on the commit path bytes is
+    // already in the written row, so length() adds no scan width
+    Profile("td_byte_size", "bytes", length(col("bytes")), Sketches.TDigest()),
+    Profile("freq_fmt", "fmt", col("fmt"), Sketches.FreqString()),
+    Profile("freq_phash", "phash", col("phash"), Sketches.FreqLong())
+  )
+
+  /** The profile entries whose column `df` has. */
+  def profiledIn(df: DataFrame): Seq[Profile] = Profiled.filter(p => df.columns.contains(p.column))
+
+  /** Serialized, mergeable snapshot statistics: sketch name -> bytes. */
+  final case class SketchProfile(nRows: Long, sketches: Map[String, Array[Byte]]) {
+    def sketch(name: String): Array[Byte] =
+      sketches.getOrElse(name, throw new IllegalArgumentException(s"profile has no sketch '$name'"))
   }
 
   /** Idiomatic path: single aggregation, sketch partials merged by Spark. */
-  def profile(df: DataFrame, includeByteSize: Boolean = false): SketchProfile = {
-    val base = Seq(
-      count(lit(1)).as("n"),
-      Sketches.hllString(col("image_id")).as("hll_id"),
-      Sketches.hllLong(col("phash")).as("hll_ph"),
-      Sketches.tdigest(col("w")).as("td_w"),
-      Sketches.tdigest(col("h")).as("td_h"),
-      Sketches.freqString(col("fmt")).as("fq_fmt"),
-      Sketches.freqLong(col("phash")).as("fq_ph")
-    )
-    val aggs = if (includeByteSize) base :+ Sketches.tdigest(length(col("bytes"))).as("td_bs") else base
-    val r = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    SketchProfile(
-      nRows = r.getAs[Long]("n"),
-      hllImageId = r.getAs[Array[Byte]]("hll_id"),
-      hllPhash = r.getAs[Array[Byte]]("hll_ph"),
-      tdW = r.getAs[Array[Byte]]("td_w"),
-      tdH = r.getAs[Array[Byte]]("td_h"),
-      tdByteSize = if (includeByteSize) Some(r.getAs[Array[Byte]]("td_bs")) else None,
-      freqFmt = r.getAs[Array[Byte]]("fq_fmt"),
-      freqPhash = r.getAs[Array[Byte]]("fq_ph")
-    )
+  def profile(df: DataFrame): SketchProfile = {
+    val entries = profiledIn(df)
+    val r = df.agg(count(lit(1)), entries.map(_.aggregate(identity)): _*).collect()(0)
+    SketchProfile(r.getLong(0), entries.map(p => p.name -> r.getAs[Array[Byte]](p.name)).toMap)
   }
 
   // ------------------------------------------------------------ checks ----
@@ -64,11 +64,8 @@ object ColumnProfiler {
     * uniqueness intent, /root/reference/test/schemas/test/0.0.1:22-25).
     */
   def uniqueness(p: SketchProfile, column: String, tau: Double): UniquenessReport = {
-    val est = column match {
-      case "image_id" => p.distinctImageIds
-      case "phash"    => p.distinctPhashes
-      case other      => throw new IllegalArgumentException(s"no HLL sketch for column $other")
-    }
+    val est = Sketches.hllEstimate(
+      p.sketches.getOrElse(s"hll_$column", throw new IllegalArgumentException(s"no HLL sketch for column $column")))
     val ratio = if (p.nRows == 0) 1.0 else est / p.nRows
     UniquenessReport(column, est, p.nRows, ratio, tau, ratio >= tau)
   }

@@ -105,16 +105,7 @@ final class SnapshotFollower(
     // cursor. Metadata-cached manifest walk; every collected seq is > from,
     // so a cursor pointing into rolled-back history still reaches
     // readTableChanges' ancestry check and throws its re-bootstrap error.
-    val lineage = scala.collection.mutable.ArrayBuffer.empty[Long] // newest → oldest
-    var cur = head.sequence
-    var walking = true
-    while (walking) {
-      lineage += cur
-      log.read(cur).parentId.map(_.stripPrefix("snap-").toLong) match {
-        case Some(p) if p > from => cur = p
-        case _                   => walking = false
-      }
-    }
+    val lineage = log.lineage(head.sequence, from).map(_.sequence)
     val to = if (lineage.length <= maxCommits) head.sequence else lineage(lineage.length - maxCommits)
     val delta = log.readTableChanges(spark, from, to, table)
     f(delta, from, to)

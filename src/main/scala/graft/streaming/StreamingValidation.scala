@@ -29,13 +29,14 @@ object StreamingValidation {
     * job's own per-batch routine ([[ValidationJob]]`.commit`): the
     * annotated write routed by status (and stream, for a routed engine),
     * violations from the written failing slice through the error-schema
-    * gate, rollups aggregated over the written table, and per-phase wall
-    * and task time; the chain's sketches carry over unchanged. A routed
-    * engine makes this the closest analog of the reference service
-    * itself: an unbounded intake of heterogeneous events, each validated
-    * against its own declared constraint set and produced to its stream's
-    * destination (eventgate/lib/factories/default-eventgate.js:
-    * 132-152 routing + :242-278 per-topic produce).
+    * gate, rollups aggregated over the written table, column-stat sketches
+    * of the batch's valid rows merged into the chain's, and per-phase wall
+    * and task time. A routed engine makes this the closest analog of the
+    * reference service itself: an unbounded intake of heterogeneous
+    * events, each validated against its own declared constraint set and
+    * produced to its stream's destination
+    * (eventgate/lib/factories/default-eventgate.js: 132-152 routing +
+    * :242-278 per-topic produce).
     *
     * Idempotent on micro-batch replay: a batch id already in the chain is
     * skipped, so foreachBatch's at-least-once re-delivery after restart
@@ -56,7 +57,7 @@ object StreamingValidation {
     if (batch.isEmpty) return None // empty body -> 400 analog: nothing to produce
 
     val job = new ValidationJob(batch.sparkSession, log, engine, partitionSpec = "stream-batch",
-      profileColumns = false, suppressViolations = None, commitBatch = 1,
+      suppressViolations = None, commitBatch = 1,
       violationsSchema = Some(ValidationJob.violationsSchemaV1))
     Some(ValidationJob.Phases.around(batch.sparkSession) { phases =>
       job.commit(head, batch, s"stream-$checkpointId-$batchId", s"batch-$batchId",

@@ -73,7 +73,10 @@ final case class Manifest(
       * files yield null for columns a newer constraint version added,
       * instead of sampled-footer inference silently dropping them). */
     tableSchemas: Map[String, String] = Map.empty
-)
+) {
+  /** The parent's sequence, read from its snapshot id. */
+  def parentSeq: Option[Long] = parentId.map(_.stripPrefix("snap-").toLong)
+}
 
 /** Append-only snapshot log over any Hadoop filesystem.
   *
@@ -155,7 +158,7 @@ final class SnapshotLog(val root: String, conf: Configuration) extends Serializa
     def hasNext: Boolean = cur.isDefined
     def next(): Manifest = {
       val c = cur.get
-      cur = if (c.checkpoint) None else c.parentId.map(id => read(id.stripPrefix("snap-").toLong))
+      cur = if (c.checkpoint) None else c.parentSeq.map(read)
       c
     }
   }
@@ -439,30 +442,28 @@ final class SnapshotLog(val root: String, conf: Configuration) extends Serializa
     */
   def readTableChanges(spark: SparkSession, fromSeq: Long, toSeq: Long, table: String): DataFrame = {
     require(0 <= fromSeq && fromSeq <= toSeq, s"need 0 <= fromSeq <= toSeq, got ($fromSeq, $toSeq]")
-    // Walk reads ONLY manifests in (fromSeq, toSeq]: the parent's sequence
-    // is derived from its snapshot id, so a cursor sitting exactly at the
-    // retention floor never touches (possibly expired) manifests below it.
-    val lineage = Vector.newBuilder[Manifest]
-    var reachedFrom = fromSeq == 0
-    var curSeq = toSeq
-    var walking = toSeq > fromSeq
-    while (walking) {
-      val m = read(curSeq)
-      lineage += m
-      m.parentId.map(_.stripPrefix("snap-").toLong) match {
-        case Some(p) if p > fromSeq => curSeq = p
-        case other => reachedFrom = reachedFrom || other.contains(fromSeq); walking = false
-      }
-    }
-    if (fromSeq > 0 && toSeq > fromSeq && !reachedFrom)
+    val commits = lineage(toSeq, fromSeq)
+    if (fromSeq > 0 && commits.nonEmpty && !commits.last.parentSeq.contains(fromSeq))
       throw new IllegalStateException(
         s"snapshot $fromSeq is not an ancestor of $toSeq (rolled back?) — re-bootstrap from a full read")
-    val paths = lineage.result().reverse
+    val paths = commits.reverse
       .filterNot(m => m.checkpoint || m.tablesReplaced.contains(table))
       .flatMap(_.tables.getOrElse(table, Seq.empty))
     if (paths.nonEmpty) readPaths(spark, paths, tableSchema(read(toSeq), table))
     else readTableLenient(spark, read(toSeq), table).limit(0) // empty delta, real schema
   }
+
+  /** `toSeq` and its parent lineage down to, not including, the first
+    * ancestor at or below `floor`, newest first; empty when `toSeq <= floor`.
+    * Reads ONLY manifests above `floor` (a parent's sequence comes from its
+    * snapshot id), so a walk floored exactly at the retention floor never
+    * touches expired manifests. A `floor > 0` is an ancestor of `toSeq`
+    * iff the last manifest's `parentSeq` is `floor`.
+    */
+  private[graft] def lineage(toSeq: Long, floor: Long): Vector[Manifest] =
+    Iterator.unfold(Option(toSeq).filter(_ > floor)) { next =>
+      next.map { seq => val m = read(seq); (m, m.parentSeq.filter(_ > floor)) }
+    }.toVector
 
   /** The one-scan read shape shared by every snapshot reader. A recorded
     * `schema` skips parquet footer inference entirely (planning-time I/O

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
 import graft.constraint.{ConstraintSet, IsIn, MaxLength, MinLength, NonNull}
 import graft.engine.{EngineOptions, PixelChecks, ValidationEngine}
 import graft.model.Status
-import graft.sketch.Sketches
+import graft.sketch.ColumnProfiler
 
 /** The validate-then-produce job over a snapshotted table: ONE gate for
   * single-stream and multi-stream tables, batch runs and micro-batches.
@@ -50,7 +50,10 @@ import graft.sketch.Sketches
   *  1. ONE full pass writes the annotated frame routed by status (and by
   *     stream for a routed engine) — the valid table is its
   *     statusd=success directory — while an attached Observation collects
-  *     status counts and column-stat sketches during the same job;
+  *     status counts during the same job, and the valid rows' column-stat
+  *     sketches: every [[graft.sketch.ColumnProfiler.Profiled]] entry whose
+  *     column the annotated frame has, the same list
+  *     [[graft.sketch.ColumnProfiler.profile]] aggregates;
   *  2. violations derive from the written FAILING slice (the ~1%
   *     minority) in one scan, then pass suppression and the error-schema
   *     gate;
@@ -99,8 +102,6 @@ final class ValidationJob(
       * and its partition id column to the batch tag `_pid` in [[run]]. */
     engine: ValidationEngine,
     partitionSpec: String,
-    /** sketch the profiled image columns the annotated table carries. */
-    profileColumns: Boolean,
     /** keep-predicate over violation rows; None keeps all. */
     suppressViolations: Option[Column],
     /** partitions per Spark job + manifest commit. */
@@ -117,12 +118,11 @@ final class ValidationJob(
       cs: ConstraintSet,
       pixelChecks: Option[PixelChecks] = None,
       partitionSpec: String = "explicit",
-      profileColumns: Boolean = true,
       suppressViolations: Option[Column] = None,
       commitBatch: Int = 8,
       violationsSchema: Option[ConstraintSet] = Some(ValidationJob.violationsSchemaV1)
   ) = this(spark, log, new ValidationEngine(cs, EngineOptions(pixelChecks = pixelChecks)), partitionSpec,
-    profileColumns, suppressViolations, commitBatch, violationsSchema)
+    suppressViolations, commitBatch, violationsSchema)
 
   import ValidationJob._
 
@@ -194,9 +194,9 @@ final class ValidationJob(
         )
     }
     val annFrame = res.annotated.drop("_pid").drop("_decode")
-    val sketches = if (profileColumns) Profiled.filter(p => annFrame.columns.contains(p.column)) else Nil
+    val profiled = ColumnProfiler.profiledIn(annFrame)
     val statsObs = Observation(s"stats_$tag")
-    val statExprs = countExprs ++ sketches.map(p => p.aggregate(when(ok, p.value)).as(p.name))
+    val statExprs = countExprs ++ profiled.map(_.aggregate(when(ok, _)))
     // `statusd`/`streamd` duplicate `status`/the stream purely for
     // directory routing: the real columns stay IN the data files so
     // snapshot readers can use one multi-root recursive scan
@@ -275,9 +275,9 @@ final class ValidationJob(
       else rejectedObs.get.get("rejected").map(_.asInstanceOf[Long]).getOrElse(0L)
 
     val prevSketches = parent.map(_.sketches).getOrElse(Map.empty)
-    val mergedSketches = prevSketches ++ sketches.map { p =>
-      val b = b64(stats(p.name).asInstanceOf[Array[Byte]])
-      p.name -> prevSketches.get(p.name).fold(b)(a => b64(p.merge(unb64(a), unb64(b))))
+    val mergedSketches = prevSketches ++ profiled.map { p =>
+      val b = stats(p.name).asInstanceOf[Array[Byte]]
+      p.name -> b64(prevSketches.get(p.name).fold(b)(a => p.kind.mergeBytes(unb64(a), b)))
     }
 
     // A stalled shared queue costs the exactness of task_ms_*, never the commit.
@@ -330,28 +330,6 @@ object ValidationJob {
 
   private def b64(b: Array[Byte]): String = Base64.getEncoder.encodeToString(b)
   private def unb64(s: String): Array[Byte] = Base64.getDecoder.decode(s)
-
-  /** A column-stat sketch of the profiled image columns: aggregated over
-    * `value` of the valid rows when `column` is in the annotated schema,
-    * merged into the chain's sketch `name` on commit. */
-  private final case class Profile(
-      name: String,
-      column: String,
-      value: Column,
-      aggregate: Column => Column,
-      merge: (Array[Byte], Array[Byte]) => Array[Byte])
-
-  private val Profiled = Seq(
-    Profile("hll_image_id", "image_id", col("image_id"), Sketches.hllString(_), Sketches.hllMerge),
-    Profile("hll_phash", "phash", col("phash"), Sketches.hllLong(_), Sketches.hllMerge),
-    Profile("td_w", "w", col("w"), Sketches.tdigest(_), Sketches.tdMerge),
-    Profile("td_h", "h", col("h"), Sketches.tdigest(_), Sketches.tdMerge),
-    // north_star names byte-size quantiles; bytes is already in the
-    // written row, so length() here adds no scan width
-    Profile("td_byte_size", "bytes", length(col("bytes")), Sketches.tdigest(_), Sketches.tdMerge),
-    Profile("freq_fmt", "fmt", col("fmt"), Sketches.freqString(_), Sketches.freqStringMerge),
-    Profile("freq_phash", "phash", col("phash"), Sketches.freqLong(_), Sketches.freqLongMerge)
-  )
 
   private val RollupSchema = StructType(Seq(
     StructField("snapshot_id", StringType), StructField("partition_id", IntegerType),

@@ -105,17 +105,18 @@ object MinHashReference {
 
 object ProfilerReference {
 
-  /** Mutable per-task buffer holding all sketches; serializable via the
-    * Sketches.* wrapper buffers (compact sketch binary formats).
+  /** Mutable per-task buffer holding all sketches; serializable via
+    * `Sketches.Buf` (compact sketch binary formats). Updates and merges call
+    * DataSketches directly, independent of the kinds' own.
     */
   final class ProfileBuf(lgK: Int, tdK: Short, freqMap: Int) extends Serializable {
     var n: Long = 0L
-    val hllId = new Sketches.HllBuf(new HllSketch(lgK, TgtHllType.HLL_8))
-    val hllPh = new Sketches.HllBuf(new HllSketch(lgK, TgtHllType.HLL_8))
-    val tdW = new Sketches.TdBuf(new TDigestDouble(tdK))
-    val tdH = new Sketches.TdBuf(new TDigestDouble(tdK))
-    val fqFmt = new Sketches.FreqStringBuf(new ItemsSketch[String](freqMap))
-    val fqPh = new Sketches.FreqLongBuf(new LongsSketch(freqMap))
+    val hllId = new Sketches.Buf(Sketches.HllString(lgK), new HllSketch(lgK, TgtHllType.HLL_8))
+    val hllPh = new Sketches.Buf(Sketches.HllLong(lgK), new HllSketch(lgK, TgtHllType.HLL_8))
+    val tdW = new Sketches.Buf(Sketches.TDigest(tdK), new TDigestDouble(tdK))
+    val tdH = new Sketches.Buf(Sketches.TDigest(tdK), new TDigestDouble(tdK))
+    val fqFmt = new Sketches.Buf(Sketches.FreqString(freqMap), new ItemsSketch[String](freqMap))
+    val fqPh = new Sketches.Buf(Sketches.FreqLong(freqMap), new LongsSketch(freqMap))
 
     def add(imageId: String, phash: java.lang.Long, w: java.lang.Integer, h: java.lang.Integer, fmt: String): this.type = {
       n += 1
@@ -157,17 +158,14 @@ object ProfilerReference {
       combOp = (a: ProfileBuf, b: ProfileBuf) => a.mergeIn(b),
       depth = depth
     )
-    buf.tdW.sk.compress(); buf.tdH.sk.compress()
-    ColumnProfiler.SketchProfile(
-      nRows = buf.n,
-      hllImageId = buf.hllId.sk.toCompactByteArray,
-      hllPhash = buf.hllPh.sk.toCompactByteArray,
-      tdW = buf.tdW.sk.toByteArray,
-      tdH = buf.tdH.sk.toByteArray,
-      tdByteSize = None,
-      freqFmt = buf.fqFmt.sk.toByteArray(new ArrayOfStringsSerDe),
-      freqPhash = buf.fqPh.sk.toByteArray
-    )
+    ColumnProfiler.SketchProfile(buf.n, Map(
+      "hll_image_id" -> buf.hllId.sk.toCompactByteArray,
+      "hll_phash" -> buf.hllPh.sk.toCompactByteArray,
+      "td_w" -> buf.tdW.sk.toByteArray,
+      "td_h" -> buf.tdH.sk.toByteArray,
+      "freq_fmt" -> buf.fqFmt.sk.toByteArray(new ArrayOfStringsSerDe),
+      "freq_phash" -> buf.fqPh.sk.toByteArray
+    ))
   }
 }
 

@@ -248,7 +248,7 @@ class MaintenanceSpec extends SparkSpec {
 
     val log = newLog()
     val engine = new ValidationEngine(registry, EngineOptions(idField = "doc_id"), Some("stream"), Nil)
-    val m = new ValidationJob(spark, log, engine, "explicit", profileColumns = true, suppressViolations = None,
+    val m = new ValidationJob(spark, log, engine, "explicit", suppressViolations = None,
       commitBatch = 1, violationsSchema = Some(ValidationJob.violationsSchemaV1)).run(inputFor, Seq(0, 1, 2))
     def perStream(mf: graft.table.Manifest) =
       log.readTableLenient(spark, mf, "valid")

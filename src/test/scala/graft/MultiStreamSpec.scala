@@ -56,7 +56,7 @@ class MultiStreamSpec extends SparkSpec {
   private val engine = routed(registry, "ms")
 
   private def job(log: graft.table.SnapshotLog, commitBatch: Int = 8) =
-    new graft.table.ValidationJob(spark, log, engine, "explicit", profileColumns = true, suppressViolations = None,
+    new graft.table.ValidationJob(spark, log, engine, "explicit", suppressViolations = None,
       commitBatch = commitBatch, violationsSchema = Some(graft.table.ValidationJob.violationsSchemaV1))
 
   test("two coexisting constraint-set versions judge one mixed batch independently") {

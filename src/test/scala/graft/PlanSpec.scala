@@ -51,23 +51,22 @@ class PlanSpec extends SparkSpec {
   }
 
   test("rollups + sketch profile compute in ONE scan (no second read of the data)") {
-    // The ValidationJob stats phase: per-partition status counts AND all six
-    // sketch UDAFs in a single aggregation over the annotated frame — one
+    // The ValidationJob stats phase: per-partition status counts AND every
+    // profiled sketch in a single aggregation over the annotated frame — one
     // parquet scan, one exchange. Round 1 re-read the written valid output
     // for the profile; this asserts that second scan stays dead.
-    import graft.sketch.Sketches
+    import graft.sketch.ColumnProfiler
     val dir = java.nio.file.Files.createTempDirectory("graft_onescan").toString
     graft.gen.SyntheticImages.images(spark, 300, 2).toDF().write.mode("overwrite").parquet(dir)
     val res = new graft.engine.ValidationEngine(graft.engine.ImageConstraints.v1,
       graft.engine.EngineOptions(partitionIdCol = spark_partition_id())).process(spark.read.parquet(dir))
     val ok = col("status") === graft.model.Status.Success
+    assert(ColumnProfiler.profiledIn(res.annotated) == ColumnProfiler.Profiled)
     val stats = res.annotated.groupBy(col("partition_id")).agg(
       count(when(ok, 1)).as("n_success"),
-      count(when(col("status") === "invalid", 1)).as("n_invalid"),
-      count(when(col("status") === "error", 1)).as("n_error"),
-      Sketches.hllString(when(ok, col("image_id"))).as("hll_image_id"),
-      Sketches.tdigest(when(ok, col("w"))).as("td_w"),
-      Sketches.freqString(when(ok, col("fmt"))).as("freq_fmt")
+      count(when(col("status") === "invalid", 1)).as("n_invalid") +:
+        count(when(col("status") === "error", 1)).as("n_error") +:
+        ColumnProfiler.profiledIn(res.annotated).map(_.aggregate(when(ok, _))): _*
     )
     val p = plan(stats)
     val scans = p.linesIterator.count(l => l.contains("FileScan") || l.contains("Scan parquet"))

@@ -19,14 +19,16 @@ object SketchProps extends Properties("sketches") {
     sk.toCompactByteArray
   }
 
+  private val hllMerge = Sketches.HllLong().mergeBytes _
+
   property("hll merge is commutative") = Prop.forAll(longSets, longSets) { (a, b) =>
-    Sketches.hllEstimate(Sketches.hllMerge(hllOf(a), hllOf(b))) ==
-      Sketches.hllEstimate(Sketches.hllMerge(hllOf(b), hllOf(a)))
+    Sketches.hllEstimate(hllMerge(hllOf(a), hllOf(b))) ==
+      Sketches.hllEstimate(hllMerge(hllOf(b), hllOf(a)))
   }
 
   property("hll merge is associative") = Prop.forAll(longSets, longSets, longSets) { (a, b, c) =>
-    val l = Sketches.hllMerge(Sketches.hllMerge(hllOf(a), hllOf(b)), hllOf(c))
-    val r = Sketches.hllMerge(hllOf(a), Sketches.hllMerge(hllOf(b), hllOf(c)))
+    val l = hllMerge(hllMerge(hllOf(a), hllOf(b)), hllOf(c))
+    val r = hllMerge(hllOf(a), hllMerge(hllOf(b), hllOf(c)))
     Sketches.hllEstimate(l) == Sketches.hllEstimate(r)
   }
 
@@ -43,7 +45,7 @@ object SketchProps extends Properties("sketches") {
       val t = new org.apache.datasketches.tdigest.TDigestDouble(100.toShort)
       xs.foreach(t.update); t.compress(); t.toByteArray
     }
-    val m = Sketches.tdMerge(tdOf(a), tdOf(b))
+    val m = Sketches.TDigest().mergeBytes(tdOf(a), tdOf(b))
     val q50 = Sketches.tdQuantile(m, 0.5)
     val all = a ++ b
     q50 >= all.min - 1e-9 && q50 <= all.max + 1e-9

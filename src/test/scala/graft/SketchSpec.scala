@@ -21,10 +21,30 @@ class SketchSpec extends SparkSpec {
     val Seq(a, b) = Seq(col("phash") % 2 === 0, col("phash") % 2 =!= 0).map { p =>
       imgs.filter(p).agg(Sketches.hllString(col("image_id"))).as[Array[Byte]].collect()(0)
     }
-    val ab = Sketches.hllEstimate(Sketches.hllMerge(a, b))
-    val ba = Sketches.hllEstimate(Sketches.hllMerge(b, a))
+    val ab = Sketches.hllEstimate(Sketches.HllString().mergeBytes(a, b))
+    val ba = Sketches.hllEstimate(Sketches.HllString().mergeBytes(b, a))
     assert(ab == ba)
     assert(math.abs(ab - exact) / exact < 0.03)
+  }
+
+  test("every kind's buffer round-trips through Java serialization byte for byte") {
+    import java.io.{ByteArrayInputStream, ByteArrayOutputStream, ObjectInputStream, ObjectOutputStream}
+    def roundTrip[IN, S](kind: Sketches.Kind[IN, S], values: Seq[IN]): Unit = {
+      val buf = new Sketches.Buf(kind, kind.empty)
+      values.foreach(kind.add(buf.sk, _))
+      val before = kind.write(buf.sk)
+      val bytes = new ByteArrayOutputStream()
+      val out = new ObjectOutputStream(bytes); out.writeObject(buf); out.close()
+      val back = new ObjectInputStream(new ByteArrayInputStream(bytes.toByteArray)).readObject()
+      assert(kind.write(back.asInstanceOf[Sketches.Buf[S]].sk).sameElements(before), s"$kind changed in transit")
+    }
+    val ids = (0 until 5000).map(i => s"id-$i")
+    val longs = (0 until 5000).map(i => java.lang.Long.valueOf(i.toLong % 700))
+    roundTrip(Sketches.HllString(), ids)
+    roundTrip(Sketches.HllLong(), longs)
+    roundTrip(Sketches.TDigest(), (0 until 5000).map(i => java.lang.Double.valueOf(math.sqrt(i.toDouble))))
+    roundTrip(Sketches.FreqLong(), longs)
+    roundTrip(Sketches.FreqString(), ids.map(_.take(4)))
   }
 
   test("t-digest quantiles close to exact percentiles") {
@@ -54,9 +74,10 @@ class SketchSpec extends SparkSpec {
     val p1 = ColumnProfiler.profile(imgs)
     val p2 = ProfilerReference.profileTree(imgs, depth = 2)
     assert(p1.nRows == p2.nRows)
-    assert(math.abs(p1.distinctImageIds - p2.distinctImageIds) / p1.distinctImageIds < 0.01)
+    val Seq(id1, id2) = Seq(p1, p2).map(p => Sketches.hllEstimate(p.sketch("hll_image_id")))
+    assert(math.abs(id1 - id2) / id1 < 0.01)
     Seq(0.25, 0.5, 0.75).foreach { q =>
-      assert(math.abs(Sketches.tdQuantile(p1.tdW, q) - Sketches.tdQuantile(p2.tdW, q)) <= 8)
+      assert(math.abs(Sketches.tdQuantile(p1.sketch("td_w"), q) - Sketches.tdQuantile(p2.sketch("td_w"), q)) <= 8)
     }
   }
 

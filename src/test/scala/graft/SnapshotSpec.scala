@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.constraint.{ConstraintSet, MaxLength, NonNull}
 import graft.engine.ImageConstraints
 import graft.gen.SyntheticImages
-import graft.sketch.Sketches
+import graft.sketch.{ColumnProfiler, Sketches}
 import graft.table.{SnapshotLog, ValidationJob}
 
 class SnapshotSpec extends SparkSpec {
@@ -195,6 +195,26 @@ class SnapshotSpec extends SparkSpec {
     assert(h.parentId.isDefined)
   }
 
+  test("the commit and ColumnProfiler.profile share one profile: same names, identical hll_* and freq_* bytes") {
+    import spark.implicits._
+    // One input partition, so both paths add the valid rows in one task and
+    // in the same order: the order-dependent parts of the bytes (the HLL
+    // HIP accumulator, frequent-items purges) then match as well.
+    def onePartition(p: Int): DataFrame =
+      spark.range(0, N, 1, 1).as[Long].map(i => SyntheticImages.rowOf(i, drift = false, contentPool = 0)).toDF()
+    val log = newLog()
+    val m = new ValidationJob(spark, log, ImageConstraints.v1).run(onePartition, Seq(0))
+    val committed = m.sketches.map { case (k, v) => k -> java.util.Base64.getDecoder.decode(v) }
+    val profiled = ColumnProfiler.profile(log.readTable(spark, m, "valid"))
+    assert(profiled.nRows == m.metrics("n_success"))
+    assert(committed.keySet == profiled.sketches.keySet)
+    assert(committed.keySet == ColumnProfiler.Profiled.map(_.name).toSet)
+    for (name <- committed.keys.filter(k => k.startsWith("hll_") || k.startsWith("freq_")))
+      assert(committed(name).sameElements(profiled.sketch(name)), s"$name differs between the commit and profile")
+    for (name <- committed.keys.filter(_.startsWith("td_")); q <- Seq(0.1, 0.5, 0.9))
+      assert(Sketches.tdQuantile(committed(name), q) == Sketches.tdQuantile(profiled.sketch(name), q), s"$name q$q")
+  }
+
   test("snapshot-to-snapshot drift scored from committed manifest sketches (no data read)") {
     import spark.implicits._
     def driftedInput(p: Int): DataFrame = {
@@ -349,7 +369,7 @@ class SnapshotSpec extends SparkSpec {
     // + no scan sharing at thousands of commits). The recursive multi-path
     // read must collapse any chain into a single parquet scan.
     val log = newLog()
-    val job = new ValidationJob(spark, log, ImageConstraints.v1, commitBatch = 1, profileColumns = false)
+    val job = new ValidationJob(spark, log, ImageConstraints.v1, commitBatch = 1)
     val m = job.run(inputFor, 0 until 50)
     assert(m.sequence == 50)
 
@@ -522,7 +542,7 @@ class SnapshotSpec extends SparkSpec {
     val log = newLog()
     def sparseInput(p: Int): DataFrame =
       if (p >= 2) inputFor(p).limit(0) else inputFor(p) // partitions 2,3 empty
-    val job = new ValidationJob(spark, log, ImageConstraints.v1, commitBatch = 1, profileColumns = false)
+    val job = new ValidationJob(spark, log, ImageConstraints.v1, commitBatch = 1)
     val m = job.run(sparseInput, Seq(0, 1, 2, 3))
     assert(m.complete)
     assert(log.committedPartitions(m) == Set(0, 1, 2, 3))
@@ -531,7 +551,7 @@ class SnapshotSpec extends SparkSpec {
     assert(log.readTable(spark, m, "annotated").count() > 0)
     // resume: nothing reprocesses, including the empty partitions
     var calls = Vector.empty[Int]
-    val m2 = new ValidationJob(spark, log, ImageConstraints.v1, commitBatch = 1, profileColumns = false)
+    val m2 = new ValidationJob(spark, log, ImageConstraints.v1, commitBatch = 1)
       .run(p => { calls :+= p; sparseInput(p) }, Seq(0, 1, 2, 3))
     assert(calls.isEmpty && m2.snapshotId == m.snapshotId)
   }
@@ -551,7 +571,7 @@ class SnapshotSpec extends SparkSpec {
         (s"p${p}_c", "short", "lax"), (s"p${p}_d", "short", "nowhere")).toDF("doc_id", "text", "stream")
     val routedJob = (log: SnapshotLog) => new ValidationJob(spark, log,
       new ValidationEngine(registry, EngineOptions(idField = "doc_id"), Some("stream"), Nil), "explicit",
-      profileColumns = true, suppressViolations = None, commitBatch = 2,
+      suppressViolations = None, commitBatch = 2,
       violationsSchema = Some(ValidationJob.violationsSchemaV1)).run(docs, Seq(0, 1, 2, 3))
     val singleJob = (log: SnapshotLog) =>
       new ValidationJob(spark, log, ImageConstraints.v1, commitBatch = 2).run(inputFor, Seq(0, 1, 2, 3))

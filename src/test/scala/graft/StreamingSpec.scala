@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.OutputMode
 
 import graft.engine.{EngineOptions, ImageConstraints, ValidationEngine}
 import graft.gen.SyntheticImages
+import graft.sketch.{ColumnProfiler, Sketches}
 import graft.streaming.StreamingValidation
 
 class StreamingSpec extends SparkSpec {
@@ -103,6 +104,21 @@ class StreamingSpec extends SparkSpec {
     assert(StreamingValidation.processAndCommit(log, v1Gate, imgs, 1L).isEmpty)
     assert(log.head.get.snapshotId == afterRetry.snapshotId)
     assert(log.readTable(spark, log.head.get, "valid").count() == 2 * validBefore)
+  }
+
+  test("micro-batch commits record the profile's sketches and merge them into the chain's") {
+    val log = new graft.table.SnapshotLog(
+      Files.createTempDirectory("graft_stream_sketch").toString, spark.sparkContext.hadoopConfiguration)
+    val imgs = SyntheticImages.images(spark, 1200, 2).toDF()
+    val half = pmod(xxhash64(col("image_id")), lit(2L))
+    val Seq(a, b) = Seq(0L, 1L).map(k => imgs.filter(half === k))
+    val m1 = StreamingValidation.processAndCommit(log, v1Gate, a, 0L).get
+    assert(m1.sketches.keySet == ColumnProfiler.Profiled.map(_.name).toSet)
+    val m2 = StreamingValidation.processAndCommit(log, v1Gate, b, 1L).get
+    assert(m2.sketches.keySet == m1.sketches.keySet)
+    val est = Sketches.hllEstimate(java.util.Base64.getDecoder.decode(m2.sketches("hll_image_id")))
+    val exact = log.readTable(spark, m2, "valid").select("image_id").distinct().count()
+    assert(math.abs(est - exact) / exact < 0.05, s"est=$est exact=$exact")
   }
 
   test("recreated checkpoint gets a fresh identity: restarted batch ids do not alias old ones") {

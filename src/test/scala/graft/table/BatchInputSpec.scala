@@ -95,7 +95,7 @@ class BatchInputSpec extends SparkSpec {
     def run(inputFor: Int => DataFrame): (Manifest, SnapshotLog) = {
       val log = newLog()
       val engine = new ValidationEngine(registry, EngineOptions(idField = "doc_id"), Some("stream"), Nil)
-      val job = new ValidationJob(spark, log, engine, "explicit", profileColumns = true, suppressViolations = None,
+      val job = new ValidationJob(spark, log, engine, "explicit", suppressViolations = None,
         commitBatch = 8, violationsSchema = Some(ValidationJob.violationsSchemaV1))
       (job.run(inputFor, 0 until 3), log)
     }
